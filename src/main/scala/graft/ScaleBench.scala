@@ -373,196 +373,6 @@ object ScaleBench {
     System.out.flush()
   }
 
-  /** BFS-lean probe (r10 verdict #7): the multi-source BFS level chains
-    * (betweenness, eccentricity) leaned 2-4× under skew in 2 of 3 r10
-    * runs — but those numbers came from ONE ingest-warmup pass per side,
-    * the noisiest possible protocol on a virtualized host. This mode
-    * re-measures JUST those two level-chain builds with an INTERLEAVED
-    * min-of-3: per repetition, a FRESH `spark.newSession()` per side
-    * busts every SessionMemo/Views cache (the chains are per-(session,
-    * dir) artifacts) while keeping JVM/codegen warmth shared, the graph
-    * build itself is pre-warmed untimed in that session so only the level
-    * chains are timed, and uniform/skew alternate so host drift hits both
-    * sides equally. `ScaleBench bfslean [baseDir] [K]`. */
-  def bfsLeanMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val outU = Staging.dir(s"scale-x$k")
-    val outS = Staging.dir(s"skew-x$k")
-    build(spark, base, outU, k)
-    build(spark, base, outS, k, skewize)
-    // default: the two BFS level chains; any key list can ride the same
-    // interleaved fresh-session min-of-3 protocol (r13: used to pin the
-    // triangle/BPE skew leans before and after their fixes)
-    val keys = if (args.length > 2) args.drop(2).toSeq
-      else Seq("graph_betweenness", "graph_eccentricity")
-    // one untimed JIT pass per side
-    Seq(outU, outS).foreach { d =>
-      val s0 = spark.newSession()
-      keys.foreach(q => SparkEntry.queries(q)(s0, d).count())
-    }
-    val runs = scala.collection.mutable.Map[(String, String),
-      List[Double]]().withDefaultValue(Nil)
-    for (_ <- 1 to 3; (side, d) <- Seq("uniform" -> outU, "skew" -> outS)) {
-      val s2 = spark.newSession()
-      graft.graph.GraphFixture(s2, d).edges.count() // graph build untimed
-      for (q <- keys) {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(s2, d).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        runs((q, side)) = runs((q, side)) :+ sec
-      }
-    }
-    spark.stop()
-    def fmt(l: List[Double]) = l.map(v => f"$v%.2f").mkString("[", ",", "]")
-    val body = keys.map { q =>
-      val u = runs((q, "uniform")); val s = runs((q, "skew"))
-      s""""$q":{"uniform":${fmt(u)},"skew":${fmt(s)},""" +
-        s""""min_ratio":${f"${s.min / u.min}%.3f"}}"""
-    }.mkString(",")
-    println(s"""{"metric":"bfs_lean","k":$k,$body}""")
-    System.out.flush()
-  }
-
-  /** Betweenness frontier-densification probe (r13 verdict ask #2):
-    * `ScaleBench bcfrontier [baseDir] [K]` — measures, per BFS level of
-    * the region-root multi-source chain (the σ-array formulation keeps
-    * ONE row per frontier vertex, so the distinct-vertex frontier IS the
-    * level's row count), the frontier size |F_l| and the edge fan
-    * |F_{l-1} ⋈ und| (the rows the level's aggregation actually
-    * processes) on the uniform and skew K× builds. The r13 residual
-    * question — is betweenness_levels' ~2× skew lean a join blow-up
-    * (fixable) or genuine frontier densification (hubs put more vertices
-    * and edges in each level — irreducible for EXACT k-bounded Brandes) —
-    * is answered by whether the skew/uniform fan ratio tracks the time
-    * ratio. */
-  def bcFrontierMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val outU = Staging.dir(s"scale-x$k")
-    val outS = Staging.dir(s"skew-x$k")
-    build(spark, base, outU, k)
-    build(spark, base, outS, k, skewize)
-    def levels(dir: String): Seq[(Int, Long, Long)] = {
-      val s2 = spark.newSession()
-      val g = graft.graph.GraphFixture(s2, dir)
-      val e = g.edges.filter(col("src") =!= col("dst"))
-      val und = graft.util.cut(
-        e.select(col("src").as("a"), col("dst").as("b"))
-          .union(e.select(col("dst").as("a"), col("src").as("b")))
-          .distinct())
-      var vis = graft.util.cut(
-        g.vertices.filter(col("label") === "region").select("id"))
-      var frontier = vis
-      (1 to graft.ops.QualityOps.BcDepth).map { l =>
-        val fan = frontier.join(und.withColumnRenamed("a", "id"), "id").count()
-        val nxt = graft.util.cut(
-          frontier.join(und.withColumnRenamed("a", "id"), "id")
-            .select(col("b").as("id")).distinct()
-            .join(vis, Seq("id"), "left_anti"))
-        vis = graft.util.cut(vis.union(nxt))
-        frontier = nxt
-        (l, nxt.count(), fan)
-      }
-    }
-    def j(rows: Seq[(Int, Long, Long)]) = rows.map { case (l, f, fan) =>
-      s""""L$l":{"frontier":$f,"fan":$fan}""" }.mkString(",")
-    val u = levels(outU)
-    val s = levels(outS)
-    val fanRatio = s.map(_._3).sum.toDouble / u.map(_._3).sum
-    spark.stop()
-    println(s"""{"metric":"bc_frontier","k":$k,""" +
-      s""""uniform":{${j(u)}},"skew":{${j(s)}},""" +
-      s""""total_fan_ratio":${f"$fanRatio%.3f"}}""")
-    System.out.flush()
-  }
-
-  /** Root-batch scaling probe (r13 verdict ask #2's deployment shape):
-    * `ScaleBench bcbatch [baseDir] [K] [widths...]` — times
-    * graph_betweenness on the uniform AND skew K× builds at each
-    * rootBatchBits width (default 60,25,13 → 1/2/4 batches over the K×
-    * fixture's 5K region roots at K=10), fresh session per measurement
-    * (the σ-array chains are per-(session, dir) artifacts), min-of-2.
-    * The claim under test: ⌈R/width⌉ independent batches cost ≈ linearly
-    * in batch count (each batch pays a full level-chain of graph joins;
-    * the σ-array width is what amortizes roots) — the model a 100 TB
-    * deployment with hundreds of sampled roots plans capacity with. */
-  def bcBatchMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val widths = if (args.length > 2) args.drop(2).map(_.toInt).toSeq
-      else Seq(60, 25, 13)
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val outU = Staging.dir(s"scale-x$k")
-    val outS = Staging.dir(s"skew-x$k")
-    build(spark, base, outU, k)
-    build(spark, base, outS, k, skewize)
-    // one untimed JIT/ingest pass per side at the default width
-    Seq(outU, outS).foreach { d =>
-      val s0 = spark.newSession()
-      SparkEntry.queries("graph_betweenness")(s0, d).count()
-    }
-    def once(d: String, w: Int): Double = {
-      val s2 = spark.newSession()
-      s2.conf.set("graft.graph.rootBatchBits", w.toString)
-      graft.graph.GraphFixture(s2, d).edges.count() // graph build untimed
-      val t0 = System.nanoTime()
-      SparkEntry.queries("graph_betweenness")(s2, d).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val body = (for (w <- widths; (side, d) <- Seq("uniform" -> outU, "skew" -> outS))
-      yield {
-        val t = math.min(once(d, w), once(d, w))
-        s""""${side}_w$w":${f"$t%.2f"}"""
-      }).mkString(",")
-    spark.stop()
-    println(s"""{"metric":"bc_root_batches","k":$k,"widths":[${widths.mkString(",")}],$body}""")
-    System.out.flush()
-  }
-
-  /** Like-for-like BSP coloring probe (r14 verdict ask #6):
-    * `ScaleBench coloringbsp [baseDir] [K]` — times graph_coloring with
-    * the sequential tail DISABLED (graft.graph.coloringLocalThreshold=0,
-    * so every measurement runs the layered-MIS BSP head) at base and K×,
-    * uniform AND skew, fresh session per side (the fixture memo is
-    * per-(session, dir)), min-of-2 after one untimed JIT pass. This is
-    * the same BSP/BSP evidence graph_mis has (SCALE.md): the shipped
-    * adaptive key switches paths across the threshold, so its raw probe
-    * ratio compares DIFFERENT plans; this mode pins the head's own
-    * scaling. */
-  def coloringBspMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val outU = Staging.dir(s"scale-x$k")
-    val outS = Staging.dir(s"skew-x$k")
-    build(spark, base, outU, k)
-    build(spark, base, outS, k, skewize)
-    def once(d: String): Double = {
-      val s2 = spark.newSession()
-      s2.conf.set("graft.graph.coloringLocalThreshold", "0")
-      graft.graph.GraphFixture(s2, d).edges.count() // graph build untimed
-      val t0 = System.nanoTime()
-      SparkEntry.queries("graph_coloring")(s2, d).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once(base) // one untimed JIT/codegen pass
-    val body = Seq("base" -> base, "uniform" -> outU, "skew" -> outS)
-      .map { case (side, d) =>
-        val t = math.min(once(d), once(d))
-        s""""$side":${f"$t%.2f"}"""
-      }.mkString(",")
-    spark.stop()
-    println(s"""{"metric":"coloring_bsp","k":$k,$body}""")
-    System.out.flush()
-  }
-
   /** Targeted key probe: `ScaleBench probe [baseDir] [K] keys...` —
     * builds the K× blow-up, warms ONLY the graph build (not the full
     * artifact suite: a single-key A/B should not pay 18 minutes of
@@ -649,12 +459,6 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("skew")) return skewMain(args.drop(1))
-    if (args.headOption.contains("bfslean")) return bfsLeanMain(args.drop(1))
-    if (args.headOption.contains("bcfrontier"))
-      return bcFrontierMain(args.drop(1))
-    if (args.headOption.contains("bcbatch")) return bcBatchMain(args.drop(1))
-    if (args.headOption.contains("coloringbsp"))
-      return coloringBspMain(args.drop(1))
     if (args.headOption.contains("probe")) return probeMain(args.drop(1))
     if (args.headOption.contains("probecount"))
       return probeCountMain(args.drop(1))

@@ -215,6 +215,12 @@ object util {
     * first, DuckDB last). */
   def sortAll(df: DataFrame): DataFrame = df.orderBy(df.columns.map(col).toSeq: _*)
 
+  /** A zero-row frame of the DDL schema `ddl` (loop and fold state before
+    * its first round). */
+  def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType.fromDDL(ddl))
+
   /** Lineage cut for ITERATIVE loops: localCheckpoint + a stats reset.
     *
     * `Dataset.localCheckpoint` alone is NOT enough in a loop: the

@@ -79,23 +79,10 @@ object Boruvka {
         val rows = it.toArray
         def lv(r: org.apache.spark.sql.Row, i: Int): Long =
           r.get(i).asInstanceOf[Number].longValue
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
-        }
+        val uf = new UnionFind
         rows.sortBy(r =>
             (r.get(2).asInstanceOf[Number].doubleValue, lv(r, 0), lv(r, 1)))
-          .iterator.filter { r =>
-            val (ra, rb) = (find(lv(r, 0)), find(lv(r, 1)))
-            if (ra == rb) false
-            else { parent(math.max(ra, rb)) = math.min(ra, rb); true }
-          }
+          .iterator.filter(r => uf.union(lv(r, 0), lv(r, 1)))
       }
     spark.createDataFrame(kept, schema).orderBy("a", "b")
   }

@@ -49,10 +49,7 @@ object Matching {
     // and `e` only needs it from the first shrink on.
     var e = edges0.select("a", "b", "w")
     var cnt = e.count()
-    var out = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "r INT, a BIGINT, b BIGINT, w DOUBLE"))
+    var out = graft.util.empty(spark, "r INT, a BIGINT, b BIGINT, w DOUBLE")
     var r = 1
     // ⌊V/2⌋ bounds the true round count; 64 is a runaway backstop only —
     // but localTail materializes its input in ONE task, so the backstop
@@ -114,10 +111,7 @@ object Matching {
     val spark = edges0.sparkSession
     var e = edges0.select("a", "b", "w") // cut from the first shrink on
     var cnt = e.count()
-    var out = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "a BIGINT, b BIGINT, w DOUBLE"))
+    var out = graft.util.empty(spark, "a BIGINT, b BIGINT, w DOUBLE")
     var r = 1
     while (r <= 64 && cnt > 0 && cnt > localThreshold) {
       val half = e.select(col("a").as("v"), col("a"), col("b"), col("w"))
@@ -309,9 +303,7 @@ object Mis {
   def greedy(und0: DataFrame, localThreshold: Long = 0L): DataFrame = {
     val spark = und0.sparkSession
     var e = und0.select("a", "b") // cut from the first shrink on
-    var out = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"))
+    var out = graft.util.empty(spark, "id BIGINT")
     var r = 1
     var eCnt = e.count()
     // `alive` starts as support(e) — built LAZILY (null encodes exactly
@@ -415,9 +407,7 @@ object Coloring {
     val spark = und0.sparkSession
     var remE = und0.select("a", "b") // cut from the first shrink on
     var cnt = remE.count()
-    var out = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, color INT"))
+    var out = graft.util.empty(spark, "id BIGINT, color INT")
     var c = 1
     // remV lazily, like Mis.greedy's `alive`: null encodes
     // "remV ≡ support(remE)", under which the tail's isolated-vertex set

@@ -900,23 +900,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     val head = pairs.limit(cap + 1).collect()
     val merged =
       if (head.length <= cap) {
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val n = parent.getOrElse(c, c); parent(c) = r; c = n
-          }
-          r
-        }
-        head.foreach { r =>
-          val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-          if (a != b) { if (a < b) parent(b) = a else parent(a) = b }
-        }
+        val uf = new UnionFind
+        head.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
         val ids = head.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
         val sp = spark; import sp.implicits._
-        ids.map(i => (i, find(i))).toSeq.toDF("component", "mergedc")
+        ids.map(i => (i, uf.find(i))).toSeq.toDF("component", "mergedc")
       } else PairCC.labelsConverged(pairs, maxRounds = math.max(rounds, 32))
         // FIXPOINT, not a fixed `rounds` budget (r11): a component-merge
         // graph usually converges in 2-3 hook+jump rounds (star-shaped

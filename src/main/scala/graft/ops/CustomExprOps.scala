@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Op, OpModule, Tables, num}
 import graft.functions.GraftFunctions
+import graft.streaming.Maintain
 import org.apache.spark.sql.functions._
 
 /** The custom-Catalyst operator keys (SURVEY.md §2.9) plus secondary source
@@ -171,48 +172,34 @@ object CustomExprOps extends OpModule {
     Op("stream_countmin_maintain",
       (s, dir) => {
         GraftFunctions.register(s)
-        val stage = graft.Staging.dir(s"cms-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists()) {
+        val key = "stream_countmin_maintain"
+        val stage = Maintain.stage(key, dir, col("event_id")) {
           Tables(s, dir, "events").createOrReplaceTempView("events")
           s.sql("SELECT event_id, event_type, user_id FROM events")
-            .repartitionByRange(3, col("event_id"))
-            .write.mode("overwrite").parquet(stage)
         }
-        def empty(ddl: String) = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
         // ONE tagged state frame (kind 'c' → sketch cell at index k,
         // kind 'p' → probe key k's exact count): both halves fold with
         // the same order-free integer sum, so merging them costs one
         // lineage cut per batch instead of two — per-batch fixed action
         // latency is the maintain family's dominant cost at bench SF.
-        var state = empty("kind STRING, event_type STRING, k BIGINT, n BIGINT")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, event_type STRING, user_id BIGINT"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("cms-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            CustomExprOps.cmMaintainBatches.incrementAndGet()
-            val bc = batch.groupBy("event_type")
-              .agg(expr("count_min(user_id)").as("sk"))
-              .select(lit("c").as("kind"), col("event_type"),
-                posexplode(col("sk")).as(Seq("k", "n")))
-              .select(col("kind"), col("event_type"),
-                col("k").cast("long").as("k"), col("n"))
-            val bp = batch.filter(col("user_id") % 13 === 0)
-              .groupBy("event_type", "user_id")
-              .agg(count(lit(1)).as("n"))
-              .select(lit("p").as("kind"), col("event_type"),
-                col("user_id").as("k"), col("n"))
-            state = graft.util.cut(state.unionByName(bc).unionByName(bp)
-              .groupBy("kind", "event_type", "k").agg(sum("n").as("n")))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var state = graft.util.empty(s,
+          "kind STRING, event_type STRING, k BIGINT, n BIGINT")
+        Maintain.fold(s, key, stage,
+            "event_id BIGINT, event_type STRING, user_id BIGINT") { batch =>
+          val bc = batch.groupBy("event_type")
+            .agg(expr("count_min(user_id)").as("sk"))
+            .select(lit("c").as("kind"), col("event_type"),
+              posexplode(col("sk")).as(Seq("k", "n")))
+            .select(col("kind"), col("event_type"),
+              col("k").cast("long").as("k"), col("n"))
+          val bp = batch.filter(col("user_id") % 13 === 0)
+            .groupBy("event_type", "user_id")
+            .agg(count(lit(1)).as("n"))
+            .select(lit("p").as("kind"), col("event_type"),
+              col("user_id").as("k"), col("n"))
+          state = graft.util.cut(state.unionByName(bc).unionByName(bp)
+            .groupBy("kind", "event_type", "k").agg(sum("n").as("n")))
+        }
         state.filter(col("kind") === "c")
           .select(col("event_type"), col("k").cast("int").as("i"), col("n"))
           .createOrReplaceTempView("cm_cells")
@@ -234,9 +221,6 @@ object CustomExprOps extends OpModule {
       },
       Some(countMinOracleSql))
   )
-
-  /** Spec hook: stream_countmin_maintain must see several micro-batches. */
-  val cmMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Row-j Count–Min bucket of `x` — the SAME arithmetic in Spark SQL,
     * DuckDB SQL, and [[graft.functions.CountMinSketch.bucket]]. */

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Op, OpModule, Tables}
 import graft.functions.GraftFunctions
+import graft.streaming.Maintain
 import org.apache.spark.sql.functions._
 import textsql._
 
@@ -18,9 +19,6 @@ import textsql._
   * more than one bucket's pairs in an executor at a time. */
 object DedupOps extends OpModule {
 
-  /** Test observability: micro-batches folded by stream_minhash_maintain. */
-  val minhashMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Dev observability (r17 verdict ask): per-batch physical plans of the
     * streaming maintain keys are invisible to the Explain tool (it only
     * sees the terminal frame over fully-cut state), so with
@@ -33,12 +31,6 @@ object DedupOps extends OpModule {
       System.err.println(s"==== batch plan: $tag ====\n" +
         df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-
-  /** Test observability: micro-batches folded by stream_phash_maintain. */
-  val phashMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test observability: micro-batches folded by stream_substring_maintain. */
-  val substrMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Band signature (doc_id, b0, b1) for the docs in `docsRel` — the
     * per-batch step of the streaming dedup-index maintenance; same hash
@@ -761,74 +753,61 @@ object DedupOps extends OpModule {
     // ever recomputed.
     Op("stream_minhash_maintain",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"mhm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
+        val key = "stream_minhash_maintain"
+        val stage = Maintain.stage(key, dir, col("doc_id")) {
           Tables(s, dir, "documents").select("doc_id", "text")
-            .repartitionByRange(3, col("doc_id"))
-            .write.mode("overwrite").parquet(stage)
+        }
         Tables(s, dir, "documents").createOrReplaceTempView("documents")
         var bands = s.sql(bandsSql("documents")).limit(0)
-        var pairs = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "da BIGINT, db BIGINT, n_common BIGINT, jaccard DOUBLE"))
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, text STRING"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("mhm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            DedupOps.minhashMaintainBatches.incrementAndGet()
-            // foreachBatch hands a Dataset on a CLONED session; register
-            // and query everything through it (it inherited the
-            // `documents` view registered before start()).
-            val bs = batch.sparkSession
-            // spread (guide §2.5): the batch arrives as a one-file scan
-            // (one task), serializing the per-batch tokenize+shingle+
-            // 8-hash signature work
-            graft.util.spread(batch.toDF(), col("doc_id"))
-              .createOrReplaceTempView("mh_batch")
-            val nb = graft.util.cut(bs.sql(bandsSql("mh_batch")))
-            // bands state is PURE APPEND: union of per-batch checkpoints
-            // (r17) — nb is already materialized, so re-cutting the union
-            // rewrote the whole doc-count-sized index every batch; the
-            // lazy union scans the same bytes with zero per-batch rewrite
-            bands = bands.unionAll(nb)
-            def candOn(b: String) = broadcast(
-              nb.select(col("doc_id").as("nid"), col(b).as("k")))
-              .join(bands.select(col("doc_id").as("aid"), col(b).as("k")), "k")
-            val cand = candOn("b0").unionAll(candOn("b1"))
-              .filter(col("nid") =!= col("aid"))
-              .select(least(col("nid"), col("aid")).as("da"),
-                greatest(col("nid"), col("aid")).as("db"))
-              .distinct()
-              .join(pairs.select("da", "db"), Seq("da", "db"), "left_anti")
-            // cut BEFORE registering: candVerifySql references mh_cand
-            // three times (cids, inter, and via sh's IN-probe) and Spark
-            // inlines CTE/view references — un-materialized, the whole
-            // band-join + anti-join candidate plan re-executed per
-            // reference, tripling the verify step.
-            graft.util.cut(cand).createOrReplaceTempView("mh_cand")
-            // fan, not spread: the candidate-docs frame carries a
-            // broadcast exchange (probing it would execute it); it is
-            // candidate-bounded, so core-count width is always enough
-            graft.util.fan(bs.sql(candDocsSql), col("doc_id"))
-              .createOrReplaceTempView("mh_cdocs")
-            val shDf = bs.sql(candShinglesSql)
-            dumpBatchPlan("mhm_cand_shingles", shDf)
-            graft.util.cut(shDf).createOrReplaceTempView("mh_sh")
-            val verDf = bs.sql(candVerifySql)
-            dumpBatchPlan("mhm_verify", verDf)
-            // pairs state is pure append too: cut the batch's verified
-            // delta only (it is consumed by the next batch's anti-join and
-            // the terminal), never the accumulated set
-            pairs = pairs.unionAll(graft.util.cut(verDf))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var pairs = graft.util.empty(s,
+          "da BIGINT, db BIGINT, n_common BIGINT, jaccard DOUBLE")
+        Maintain.fold(s, key, stage,
+            "doc_id BIGINT, text STRING") { batch =>
+          // foreachBatch hands a Dataset on a CLONED session; register
+          // and query everything through it (it inherited the
+          // `documents` view registered before start()).
+          val bs = batch.sparkSession
+          // spread (guide §2.5): the batch arrives as a one-file scan
+          // (one task), serializing the per-batch tokenize+shingle+
+          // 8-hash signature work
+          graft.util.spread(batch.toDF(), col("doc_id"))
+            .createOrReplaceTempView("mh_batch")
+          val nb = graft.util.cut(bs.sql(bandsSql("mh_batch")))
+          // bands state is PURE APPEND: union of per-batch checkpoints
+          // (r17) — nb is already materialized, so re-cutting the union
+          // rewrote the whole doc-count-sized index every batch; the
+          // lazy union scans the same bytes with zero per-batch rewrite
+          bands = bands.unionAll(nb)
+          def candOn(b: String) = broadcast(
+            nb.select(col("doc_id").as("nid"), col(b).as("k")))
+            .join(bands.select(col("doc_id").as("aid"), col(b).as("k")), "k")
+          val cand = candOn("b0").unionAll(candOn("b1"))
+            .filter(col("nid") =!= col("aid"))
+            .select(least(col("nid"), col("aid")).as("da"),
+              greatest(col("nid"), col("aid")).as("db"))
+            .distinct()
+            .join(pairs.select("da", "db"), Seq("da", "db"), "left_anti")
+          // cut BEFORE registering: candVerifySql references mh_cand
+          // three times (cids, inter, and via sh's IN-probe) and Spark
+          // inlines CTE/view references — un-materialized, the whole
+          // band-join + anti-join candidate plan re-executed per
+          // reference, tripling the verify step.
+          graft.util.cut(cand).createOrReplaceTempView("mh_cand")
+          // fan, not spread: the candidate-docs frame carries a
+          // broadcast exchange (probing it would execute it); it is
+          // candidate-bounded, so core-count width is always enough
+          graft.util.fan(bs.sql(candDocsSql), col("doc_id"))
+            .createOrReplaceTempView("mh_cdocs")
+          val shDf = bs.sql(candShinglesSql)
+          dumpBatchPlan("mhm_cand_shingles", shDf)
+          graft.util.cut(shDf).createOrReplaceTempView("mh_sh")
+          val verDf = bs.sql(candVerifySql)
+          dumpBatchPlan("mhm_verify", verDf)
+          // pairs state is pure append too: cut the batch's verified
+          // delta only (it is consumed by the next batch's anti-join and
+          // the terminal), never the accumulated set
+          pairs = pairs.unionAll(graft.util.cut(verDf))
+        }
         pairs.select(col("da").as("doc_a"), col("db").as("doc_b"),
           col("n_common"), col("jaccard"))
           .orderBy("doc_a", "doc_b")
@@ -963,62 +942,48 @@ object DedupOps extends OpModule {
     Op("stream_phash_maintain",
       (s, dir) => {
         graft.functions.GraftFunctions.register(s)
-        val stage = graft.Staging.dir(s"phm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
-          phashAssetsDf(s, dir).repartitionByRange(3, col("asset_id"))
-            .write.mode("overwrite").parquet(stage)
-        def empty(ddl: String) = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        var fps = empty("asset_id BIGINT, fp BIGINT")
-        var bands = empty("asset_id BIGINT, bi INT, bv BIGINT")
-        var pairs = empty("da BIGINT, db BIGINT, hamming INT")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "asset_id BIGINT, payload BINARY"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("phm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            DedupOps.phashMaintainBatches.incrementAndGet()
-            val bs = batch.sparkSession
-            graft.functions.GraftFunctions.register(bs)
-            // NOT spread (r17 negative result): the per-batch phash64 mass
-            // is a few thousand 32×32 DCTs (~50 ms) — fanning the batch
-            // out propagated a 32-partition layout through every tiny
-            // downstream band/verify stage and measured 1.46 → 1.98 s in a
-            // paired A/B; the serial decode is cheaper than the task spray.
-            batch.createOrReplaceTempView("phm_batch")
-            val nfp = graft.util.cut(bs.sql(
-              "SELECT asset_id, phash64(payload) AS fp FROM phm_batch"))
-            nfp.createOrReplaceTempView("phm_nfp")
-            val nbands = graft.util.cut(bs.sql(
-              """SELECT asset_id, CAST(bis.bi AS INT) AS bi,
-                shiftright(fp, CAST(bis.bi * 16 AS INT)) & 65535 AS bv
-              FROM phm_nfp, (SELECT explode(sequence(0, 3)) AS bi) bis"""))
-            bands = graft.util.cut(bands.unionAll(nbands))
-            fps = graft.util.cut(fps.unionAll(nfp))
-            val cand = broadcast(nbands
-              .select(col("asset_id").as("nid"), col("bi"), col("bv")))
-              .join(bands.select(col("asset_id").as("aid"), col("bi"),
-                col("bv")), Seq("bi", "bv"))
-              .filter(col("nid") =!= col("aid"))
-              .select(least(col("nid"), col("aid")).as("da"),
-                greatest(col("nid"), col("aid")).as("db"))
-              .distinct()
-              .join(pairs.select("da", "db"), Seq("da", "db"), "left_anti")
-            val verified = cand
-              .join(fps.select(col("asset_id").as("da"), col("fp").as("fpa")), "da")
-              .join(fps.select(col("asset_id").as("db"), col("fp").as("fpb")), "db")
-              .select(col("da"), col("db"),
-                expr("CAST(bit_count(fpa ^ fpb) AS INT)").as("hamming"))
-              .filter(col("hamming") <= PHashHamming)
-            pairs = graft.util.cut(pairs.unionAll(verified))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        val key = "stream_phash_maintain"
+        val stage =
+          Maintain.stage(key, dir, col("asset_id"))(phashAssetsDf(s, dir))
+        var fps = graft.util.empty(s, "asset_id BIGINT, fp BIGINT")
+        var bands = graft.util.empty(s, "asset_id BIGINT, bi INT, bv BIGINT")
+        var pairs = graft.util.empty(s, "da BIGINT, db BIGINT, hamming INT")
+        Maintain.fold(s, key, stage,
+            "asset_id BIGINT, payload BINARY") { batch =>
+          val bs = batch.sparkSession
+          graft.functions.GraftFunctions.register(bs)
+          // NOT spread (r17 negative result): the per-batch phash64 mass
+          // is a few thousand 32×32 DCTs (~50 ms) — fanning the batch
+          // out propagated a 32-partition layout through every tiny
+          // downstream band/verify stage and measured 1.46 → 1.98 s in a
+          // paired A/B; the serial decode is cheaper than the task spray.
+          batch.createOrReplaceTempView("phm_batch")
+          val nfp = graft.util.cut(bs.sql(
+            "SELECT asset_id, phash64(payload) AS fp FROM phm_batch"))
+          nfp.createOrReplaceTempView("phm_nfp")
+          val nbands = graft.util.cut(bs.sql(
+            """SELECT asset_id, CAST(bis.bi AS INT) AS bi,
+              shiftright(fp, CAST(bis.bi * 16 AS INT)) & 65535 AS bv
+            FROM phm_nfp, (SELECT explode(sequence(0, 3)) AS bi) bis"""))
+          bands = graft.util.cut(bands.unionAll(nbands))
+          fps = graft.util.cut(fps.unionAll(nfp))
+          val cand = broadcast(nbands
+            .select(col("asset_id").as("nid"), col("bi"), col("bv")))
+            .join(bands.select(col("asset_id").as("aid"), col("bi"),
+              col("bv")), Seq("bi", "bv"))
+            .filter(col("nid") =!= col("aid"))
+            .select(least(col("nid"), col("aid")).as("da"),
+              greatest(col("nid"), col("aid")).as("db"))
+            .distinct()
+            .join(pairs.select("da", "db"), Seq("da", "db"), "left_anti")
+          val verified = cand
+            .join(fps.select(col("asset_id").as("da"), col("fp").as("fpa")), "da")
+            .join(fps.select(col("asset_id").as("db"), col("fp").as("fpb")), "db")
+            .select(col("da"), col("db"),
+              expr("CAST(bit_count(fpa ^ fpb) AS INT)").as("hamming"))
+            .filter(col("hamming") <= PHashHamming)
+          pairs = graft.util.cut(pairs.unionAll(verified))
+        }
         pairs.select("da", "db", "hamming").orderBy("da", "db")
       },
       Some(s"""WITH $duckPhashFpCtes,
@@ -1258,106 +1223,93 @@ object DedupOps extends OpModule {
     Op("stream_substring_maintain",
       (s, dir) => {
         val w = SubstrRunTokens
-        val stage = graft.Staging.dir(s"ssm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
+        val key = "stream_substring_maintain"
+        val stage = Maintain.stage(key, dir, col("doc_id")) {
           Tables(s, dir, "documents").select("doc_id", "source", "text")
-            .repartitionByRange(3, col("doc_id"))
-            .write.mode("overwrite").parquet(stage)
-        def empty(ddl: String) = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        var wins = empty("doc_id BIGINT, pos BIGINT, h BIGINT")
-        var hagg = empty("h BIGINT, dmin BIGINT, dmax BIGINT")
-        var docStats = empty("doc_id BIGINT, source STRING, fp STRING, ntok BIGINT")
-        var dupCnt = empty("doc_id BIGINT, dup_toks BIGINT")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, source STRING, text STRING"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("ssm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            DedupOps.substrMaintainBatches.incrementAndGet()
-            val bs = batch.sparkSession
-            // NOT spread (r17 negative result, twice over): fanning the
-            // one-task batch scan out for the windowChain hashing measured
-            // 3.88 → 4.75 s in a paired A/B (the 32-partition layout
-            // propagates through every tiny downstream per-batch stage —
-            // this key runs ~13 jobs/batch over the fanned frame, unlike
-            // minhash/pq whose batch SQL ends in an AQE-coalescible
-            // aggregate), and tapering with a trailing DISTRIBUTE BY made
-            // it 9.5 s (the checkpoint path does not coalesce that final
-            // exchange). The serial per-batch hash is the cheaper shape.
-            batch.createOrReplaceTempView("ss_batch")
-            val nw = graft.util.cut(bs.sql(s"""
-              WITH ${windowChain("ss_batch", "", "doc_id",
-                toks = sparkToks("text"), len = t => s"size($t)",
-                gen = n => s"explode(sequence(1, $n))",
-                slice = (t, a, l) => s"slice($t, $a, $l)",
-                join = a => s"concat_ws(' ', $a)", hash = sparkHash60)}
-              SELECT doc_id, pos, h FROM sh"""))
-            val nwAgg = nw.groupBy("h")
-              .agg(min("doc_id").as("dmin"), max("doc_id").as("dmax"))
-            // ONE aggregate computes the folded extremes AND the flip flag
-            // (r17, guide §2.4 — was a separate batch-vs-state left join
-            // before the fold, scanning the state twice per batch): a hash
-            // FLIPS to duplicated when its old extremes were equal or
-            // absent (omin <=> omax — null-safe covers the absent case)
-            // and the folded extremes are apart. A hash untouched by the
-            // batch can never flip: its folded extremes equal its old
-            // ones, so the two conditions are mutually exclusive.
-            val haggX = graft.util.cut(
-              hagg.withColumn("old", lit(true))
-                .unionAll(nwAgg.withColumn("old", lit(false)))
-                .groupBy("h").agg(
-                  min("dmin").as("dmin"), max("dmax").as("dmax"),
-                  min(when(col("old"), col("dmin"))).as("omin"),
-                  max(when(col("old"), col("dmax"))).as("omax")))
-            hagg = haggX.select("h", "dmin", "dmax")
-            val flippedH = haggX
-              .filter(col("dmin") =!= col("dmax") && col("omin") <=> col("omax"))
-              .select("h")
-            wins = graft.util.cut(wins.unionAll(nw))
-            // affected = batch docs ∪ flipped-window holders. NOT cut: both
-            // consumers broadcast the identical subplan, so the broadcast
-            // exchange is built once and reused (one state scan), without
-            // paying a per-batch materialization job for it.
-            val affected = broadcast(
-              wins.join(broadcast(flippedH), Seq("h")).select("doc_id")
-                .unionAll(nw.select("doc_id")).distinct())
-            // re-cover ONLY the affected docs: their windows, gated on the
-            // now-duplicated hash set, expanded to covered positions
-            // |covered| = Σ min(w, Δpos) over the doc's pos-sorted
-            // duplicated windows ((doc_id, pos) is unique in wins) — the
-            // dedupReportSql gap form, replacing explode(w)+distinct
-            val gw = org.apache.spark.sql.expressions.Window
-              .partitionBy("doc_id").orderBy("pos")
-            // the affected docs' windows are batch-bounded (affected is);
-            // broadcast THAT side of the dup-hash gate — the stored hash
-            // extremes stream past it instead of sort-merge-joining (r17
-            // batch-plan capture: this was the one SMJ left per batch)
-            val cov = broadcast(wins.join(affected, Seq("doc_id")))
-              .join(haggX.filter(col("dmin") =!= col("dmax")).select("h"), "h")
-              .select(col("doc_id"), col("pos"))
-              .withColumn("d", col("pos") - lag("pos", 1).over(gw))
-              .groupBy("doc_id")
-              .agg(sum(when(col("d").isNull || col("d") >= w, w)
-                .otherwise(col("d"))).as("dup_toks"))
-            val dupCnt2 = dupCnt.join(affected, Seq("doc_id"), "left_anti")
-              .unionAll(cov)
-            dumpBatchPlan("ssm_dupcnt", dupCnt2)
-            dupCnt = graft.util.cut(dupCnt2)
-            // same union-of-checkpoints shape: cut the BATCH delta only,
-            // never the accumulated doc-stats state
-            docStats = docStats.unionAll(graft.util.cut(bs.sql(s"""
-              SELECT doc_id, source, md5(text) AS fp,
-                CAST(size(${sparkToks("text")}) AS BIGINT) AS ntok
-              FROM ss_batch WHERE text IS NOT NULL""")))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        }
+        var wins = graft.util.empty(s, "doc_id BIGINT, pos BIGINT, h BIGINT")
+        var hagg = graft.util.empty(s, "h BIGINT, dmin BIGINT, dmax BIGINT")
+        var docStats = graft.util.empty(s,
+          "doc_id BIGINT, source STRING, fp STRING, ntok BIGINT")
+        var dupCnt = graft.util.empty(s, "doc_id BIGINT, dup_toks BIGINT")
+        Maintain.fold(s, key, stage,
+            "doc_id BIGINT, source STRING, text STRING") { batch =>
+          val bs = batch.sparkSession
+          // NOT spread (r17 negative result, twice over): fanning the
+          // one-task batch scan out for the windowChain hashing measured
+          // 3.88 → 4.75 s in a paired A/B (the 32-partition layout
+          // propagates through every tiny downstream per-batch stage —
+          // this key runs ~13 jobs/batch over the fanned frame, unlike
+          // minhash/pq whose batch SQL ends in an AQE-coalescible
+          // aggregate), and tapering with a trailing DISTRIBUTE BY made
+          // it 9.5 s (the checkpoint path does not coalesce that final
+          // exchange). The serial per-batch hash is the cheaper shape.
+          batch.createOrReplaceTempView("ss_batch")
+          val nw = graft.util.cut(bs.sql(s"""
+            WITH ${windowChain("ss_batch", "", "doc_id",
+              toks = sparkToks("text"), len = t => s"size($t)",
+              gen = n => s"explode(sequence(1, $n))",
+              slice = (t, a, l) => s"slice($t, $a, $l)",
+              join = a => s"concat_ws(' ', $a)", hash = sparkHash60)}
+            SELECT doc_id, pos, h FROM sh"""))
+          val nwAgg = nw.groupBy("h")
+            .agg(min("doc_id").as("dmin"), max("doc_id").as("dmax"))
+          // ONE aggregate computes the folded extremes AND the flip flag
+          // (r17, guide §2.4 — was a separate batch-vs-state left join
+          // before the fold, scanning the state twice per batch): a hash
+          // FLIPS to duplicated when its old extremes were equal or
+          // absent (omin <=> omax — null-safe covers the absent case)
+          // and the folded extremes are apart. A hash untouched by the
+          // batch can never flip: its folded extremes equal its old
+          // ones, so the two conditions are mutually exclusive.
+          val haggX = graft.util.cut(
+            hagg.withColumn("old", lit(true))
+              .unionAll(nwAgg.withColumn("old", lit(false)))
+              .groupBy("h").agg(
+                min("dmin").as("dmin"), max("dmax").as("dmax"),
+                min(when(col("old"), col("dmin"))).as("omin"),
+                max(when(col("old"), col("dmax"))).as("omax")))
+          hagg = haggX.select("h", "dmin", "dmax")
+          val flippedH = haggX
+            .filter(col("dmin") =!= col("dmax") && col("omin") <=> col("omax"))
+            .select("h")
+          wins = graft.util.cut(wins.unionAll(nw))
+          // affected = batch docs ∪ flipped-window holders. NOT cut: both
+          // consumers broadcast the identical subplan, so the broadcast
+          // exchange is built once and reused (one state scan), without
+          // paying a per-batch materialization job for it.
+          val affected = broadcast(
+            wins.join(broadcast(flippedH), Seq("h")).select("doc_id")
+              .unionAll(nw.select("doc_id")).distinct())
+          // re-cover ONLY the affected docs: their windows, gated on the
+          // now-duplicated hash set, expanded to covered positions
+          // |covered| = Σ min(w, Δpos) over the doc's pos-sorted
+          // duplicated windows ((doc_id, pos) is unique in wins) — the
+          // dedupReportSql gap form, replacing explode(w)+distinct
+          val gw = org.apache.spark.sql.expressions.Window
+            .partitionBy("doc_id").orderBy("pos")
+          // the affected docs' windows are batch-bounded (affected is);
+          // broadcast THAT side of the dup-hash gate — the stored hash
+          // extremes stream past it instead of sort-merge-joining (r17
+          // batch-plan capture: this was the one SMJ left per batch)
+          val cov = broadcast(wins.join(affected, Seq("doc_id")))
+            .join(haggX.filter(col("dmin") =!= col("dmax")).select("h"), "h")
+            .select(col("doc_id"), col("pos"))
+            .withColumn("d", col("pos") - lag("pos", 1).over(gw))
+            .groupBy("doc_id")
+            .agg(sum(when(col("d").isNull || col("d") >= w, w)
+              .otherwise(col("d"))).as("dup_toks"))
+          val dupCnt2 = dupCnt.join(affected, Seq("doc_id"), "left_anti")
+            .unionAll(cov)
+          dumpBatchPlan("ssm_dupcnt", dupCnt2)
+          dupCnt = graft.util.cut(dupCnt2)
+          // same union-of-checkpoints shape: cut the BATCH delta only,
+          // never the accumulated doc-stats state
+          docStats = docStats.unionAll(graft.util.cut(bs.sql(s"""
+            SELECT doc_id, source, md5(text) AS fp,
+              CAST(size(${sparkToks("text")}) AS BIGINT) AS ntok
+            FROM ss_batch WHERE text IS NOT NULL""")))
+        }
         val fpmin = docStats.groupBy("fp").agg(min("doc_id").as("m"))
         docStats.join(fpmin, "fp")
           .join(dupCnt, Seq("doc_id"), "left")

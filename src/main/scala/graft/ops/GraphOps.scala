@@ -3,6 +3,7 @@ package graft.ops
 import graft.{Op, OpModule}
 import graft.functions.GraftFunctions
 import graft.graph.{GraphFixture, GraphSql}
+import graft.streaming.Maintain
 import org.apache.spark.sql.functions._
 
 /** Graph operator keys (SURVEY.md §2.10) over the derived property graph.
@@ -13,10 +14,6 @@ import org.apache.spark.sql.functions._
   * implementation-defined (label propagation). */
 object GraphOps extends OpModule {
   import GraphSql.withGraph
-
-  /** Test observability: micro-batches folded by stream_mst_maintain. */
-  private[graft] val mstMaintainBatches =
-    new java.util.concurrent.atomic.AtomicLong(0)
 
   /** One-region robustness subgraph shared by the biconnectivity keys:
     * region 3, its nations, and their customers/suppliers, over the
@@ -1334,8 +1331,8 @@ object GraphOps extends OpModule {
     // Order-free fold ⇒ the batch key's oracle IS this key's oracle.
     Op("stream_mst_maintain",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"mstm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists()) {
+        val key = "stream_mst_maintain"
+        val stage = Maintain.stage(key, dir, col("a"), col("b")) {
           Seq("lineitem", "orders", "customer", "supplier")
             .foreach(n => graft.Tables(s, dir, n).createOrReplaceTempView(n))
           s.sql("""SELECT LEAST(s_nationkey, c_nationkey) AS a,
@@ -1346,39 +1343,24 @@ object GraphOps extends OpModule {
             JOIN customer ON c_custkey = o_custkey
             JOIN supplier ON s_suppkey = l_suppkey
             WHERE s_nationkey <> c_nationkey""")
-            .repartitionByRange(3, col("a"), col("b"))
-            .write.mode("overwrite").parquet(stage)
         }
-        def empty(ddl: String) = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        var pairW = empty("a INT, b INT, w DECIMAL(38,10)")
-        var forest = empty("a INT, b INT, w DOUBLE")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "a INT, b INT, rev DECIMAL(38,10)"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("mstm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            GraphOps.mstMaintainBatches.incrementAndGet()
-            val bAgg = batch.groupBy("a", "b")
-              .agg(sum("rev").cast("decimal(38,10)").as("w"))
-            pairW = graft.util.cut(pairW.unionByName(bAgg)
-              .groupBy("a", "b")
-              .agg(sum("w").cast("decimal(38,10)").as("w")))
-            // localThreshold: the pair relation is nations²-bounded by
-            // construction, so every per-batch recompute takes the
-            // executor-local Kruskal path (unique forest ⇒ identical
-            // output to the Borůvka rounds; Boruvka.msf scaladoc)
-            forest = graft.util.cut(graft.graph.Boruvka.msf(
-              pairW.select(col("a"), col("b"),
-                col("w").cast("double").as("w")), localThreshold = 100000))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var pairW = graft.util.empty(s, "a INT, b INT, w DECIMAL(38,10)")
+        var forest = graft.util.empty(s, "a INT, b INT, w DOUBLE")
+        Maintain.fold(s, key, stage,
+            "a INT, b INT, rev DECIMAL(38,10)") { batch =>
+          val bAgg = batch.groupBy("a", "b")
+            .agg(sum("rev").cast("decimal(38,10)").as("w"))
+          pairW = graft.util.cut(pairW.unionByName(bAgg)
+            .groupBy("a", "b")
+            .agg(sum("w").cast("decimal(38,10)").as("w")))
+          // localThreshold: the pair relation is nations²-bounded by
+          // construction, so every per-batch recompute takes the
+          // executor-local Kruskal path (unique forest ⇒ identical
+          // output to the Borůvka rounds; Boruvka.msf scaladoc)
+          forest = graft.util.cut(graft.graph.Boruvka.msf(
+            pairW.select(col("a"), col("b"),
+              col("w").cast("double").as("w")), localThreshold = 100000))
+        }
         forest.orderBy("a", "b")
       },
       Some(mstOracleSql)),
@@ -1475,15 +1457,9 @@ object GraphOps extends OpModule {
     // Oracle: 5 layers × 4 MIS rounds unrolled, nested. Same adaptive
     // hybrid as the cover: sequential below one task's scan, BSP layers
     // above (equivalence pinned in spec).
-    // The threshold is conf-overridable (like rootBatchBits) so the
-    // like-for-like BSP/BSP scale probe can force the layered-MIS head
-    // at every SF (ScaleBench coloringbsp).
     Op("graph_coloring",
       (s, dir) => graft.graph.Coloring.greedy(
-        GraphFixture(s, dir).undirectedEdges,
-        localThreshold = s.conf
-          .getOption("graft.graph.coloringLocalThreshold")
-          .map(_.toLong).getOrElse(16000000L)),
+        GraphFixture(s, dir).undirectedEdges, localThreshold = 16000000L),
       Some(coloringOracleSql)),
 
     // Gremlin local(out().limit(k)) — per-traverser bounded expansion

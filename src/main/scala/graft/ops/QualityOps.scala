@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Op, OpModule, Tables}
 import graft.graph.{GraphFixture, GraphSql}
+import graft.streaming.Maintain
 import org.apache.spark.sql.functions._
 import textsql._
 
@@ -18,15 +19,6 @@ import textsql._
   * order in both engines.
   */
 object QualityOps extends OpModule {
-
-  /** Test observability: micro-batches folded by stream_scd2_maintain. */
-  val scd2MaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test observability: micro-batches audited by stream_quality_gate. */
-  val qualityGateBatches = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test observability: micro-batches folded by stream_drift_maintain. */
-  val driftMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
 
   private def view(s: org.apache.spark.sql.SparkSession, dir: String, n: String): Unit =
     Tables(s, dir, n).createOrReplaceTempView(n)
@@ -133,28 +125,17 @@ object QualityOps extends OpModule {
               col("fk.from_tm").as("from_tm"),
               col("fk.from_eid").as("from_eid"), col("n"))
         }
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, event_type STRING, tm BIGINT, event_id BIGINT")
-        var state = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+        val ddl = "user_id BIGINT, event_type STRING, tm BIGINT, event_id BIGINT"
+        var state = graft.util.empty(s, ddl)
           .select(col("user_id"), col("event_type"), col("tm").as("from_tm"),
             col("event_id").as("from_eid"), lit(1L).as("n"))
           .limit(0)
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("scd2-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            QualityOps.scd2MaintainBatches.incrementAndGet()
-            val unitRuns = batch.select(col("user_id"), col("event_type"),
-              col("tm").as("from_tm"), col("event_id").as("from_eid"),
-              lit(1L).as("n"))
-            state = graft.util.cut(compress(state.unionAll(unitRuns)))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        Maintain.fold(s, "stream_scd2_maintain", inDir.toString, ddl) { batch =>
+          val unitRuns = batch.select(col("user_id"), col("event_type"),
+            col("tm").as("from_tm"), col("event_id").as("from_eid"),
+            lit(1L).as("n"))
+          state = graft.util.cut(compress(state.unionAll(unitRuns)))
+        }
         val wv = Window.partitionBy("user_id").orderBy("from_tm", "from_eid")
         state
           .withColumn("version", row_number().over(wv).cast("long"))
@@ -233,45 +214,30 @@ object QualityOps extends OpModule {
     // tail (shared SQL text) renders from folded state.
     Op("stream_drift_maintain",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"dqd-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists()) {
+        val key = "stream_drift_maintain"
+        val stage = Maintain.stage(key, dir, col("event_id")) {
           view(s, dir, "events")
           s.sql("SELECT event_id, event_type, value FROM events")
-            .repartitionByRange(3, col("event_id"))
-            .write.mode("overwrite").parquet(stage)
         }
         val mm = s.read.parquet(stage)
           .agg(min("value").as("mn"), max("value").as("mx")).head
         val (mn, mx) = (mm.getDouble(0), mm.getDouble(1))
-        def empty(ddl: String) = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        var counts =
-          empty("event_type STRING, bucket INT, n_ref BIGINT, n_cur BIGINT")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, event_type STRING, value DOUBLE"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("dqd-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            QualityOps.driftMaintainBatches.incrementAndGet()
-            val b = batch.select(col("event_type"),
-              least(lit(9), greatest(lit(0),
-                floor((col("value") - lit(mn)) * lit(10.0)
-                  / (lit(mx) - lit(mn))).cast("int"))).as("bucket"),
-              (col("event_id") % 2).as("slice"))
-              .groupBy("event_type", "bucket")
-              .agg(sum(when(col("slice") === 0, 1).otherwise(0)).as("n_ref"),
-                sum(when(col("slice") === 1, 1).otherwise(0)).as("n_cur"))
-            counts = graft.util.cut(counts.unionByName(b)
-              .groupBy("event_type", "bucket")
-              .agg(sum("n_ref").as("n_ref"), sum("n_cur").as("n_cur")))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var counts = graft.util.empty(s,
+          "event_type STRING, bucket INT, n_ref BIGINT, n_cur BIGINT")
+        Maintain.fold(s, key, stage,
+            "event_id BIGINT, event_type STRING, value DOUBLE") { batch =>
+          val b = batch.select(col("event_type"),
+            least(lit(9), greatest(lit(0),
+              floor((col("value") - lit(mn)) * lit(10.0)
+                / (lit(mx) - lit(mn))).cast("int"))).as("bucket"),
+            (col("event_id") % 2).as("slice"))
+            .groupBy("event_type", "bucket")
+            .agg(sum(when(col("slice") === 0, 1).otherwise(0)).as("n_ref"),
+              sum(when(col("slice") === 1, 1).otherwise(0)).as("n_cur"))
+          counts = graft.util.cut(counts.unionByName(b)
+            .groupBy("event_type", "bucket")
+            .agg(sum("n_ref").as("n_ref"), sum("n_cur").as("n_cur")))
+        }
         counts.createOrReplaceTempView("dqd_counts")
         s.sql(driftReportSql(
           "c AS (SELECT event_type, bucket, n_ref, n_cur FROM dqd_counts)"))
@@ -541,34 +507,22 @@ object QualityOps extends OpModule {
     // audit: three gated batches must sum exactly to it.
     Op("stream_quality_gate",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"dqg-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
-          Tables(s, dir, "events")
-            .select("event_id", "event_type", "value")
-            .repartitionByRange(3, col("event_id"))
-            .write.mode("overwrite").parquet(stage)
+        val key = "stream_quality_gate"
+        val stage = Maintain.stage(key, dir, col("event_id")) {
+          Tables(s, dir, "events").select("event_id", "event_type", "value")
+        }
         var state = Tables(s, dir, "events")
           .select(col("event_type"), lit(0L).as("n"), lit(0L).as("n_bad"))
           .limit(0)
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, event_type STRING, value DOUBLE"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("dqg-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            QualityOps.qualityGateBatches.incrementAndGet()
-            val audit = batch.groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                count(when(col("value") < 0.5, 1)).as("n_bad"))
-            state = graft.util.cut(state.unionAll(audit)
-              .groupBy("event_type")
-              .agg(sum("n").as("n"), sum("n_bad").as("n_bad")))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        Maintain.fold(s, key, stage,
+            "event_id BIGINT, event_type STRING, value DOUBLE") { batch =>
+          val audit = batch.groupBy("event_type")
+            .agg(count(lit(1)).as("n"),
+              count(when(col("value") < 0.5, 1)).as("n_bad"))
+          state = graft.util.cut(state.unionAll(audit)
+            .groupBy("event_type")
+            .agg(sum("n").as("n"), sum("n_bad").as("n_bad")))
+        }
         state.orderBy("event_type")
       },
       Some("""SELECT event_type, COUNT(*) AS n,

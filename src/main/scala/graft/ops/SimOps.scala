@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{Op, OpModule, Tables}
 import graft.functions.GraftFunctions
+import graft.streaming.Maintain
 import org.apache.spark.sql.functions._
 import textsql._
 
@@ -19,16 +20,6 @@ import textsql._
   * ([[graft.functions.FloatDotProduct]]) — bit-identical to the DuckDB
   * list_reduce fold, ~100× faster than interpreted HOF lambdas. */
 object SimOps extends OpModule {
-
-  /** Batch counter for stream_ivf_maintain (spec hook: SimSearchSpec
-    * asserts the maintenance loop actually saw multiple micro-batches —
-    * a single-batch run would trivially equal the batch pipeline). */
-  private[graft] val ivfMaintainBatches =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Batch counter for stream_pq_maintain (same spec hook). */
-  private[graft] val pqMaintainBatches =
-    new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Normalized embeddings (vector + its norm), materialized once per
     * (session, dir) and shared by every similarity/embedding-dedup key —
@@ -685,42 +676,28 @@ object SimOps extends OpModule {
     Op("stream_ivf_maintain",
       (s, dir) => {
         GraftFunctions.register(s)
-        val stage = graft.Staging.dir(s"ivfm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
+        val key = "stream_ivf_maintain"
+        val stage = Maintain.stage(key, dir, col("vec_id")) {
           Tables(s, dir, "embeddings").select("vec_id", "embedding")
-            .repartitionByRange(3, col("vec_id"))
-            .write.mode("overwrite").parquet(stage)
+        }
         val ca = quantizerView(s, dir)
-        var counts = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "cell BIGINT, n BIGINT"))
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "vec_id BIGINT, embedding ARRAY<FLOAT>"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("ivfm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            SimOps.ivfMaintainBatches.incrementAndGet()
-            val bs = batch.sparkSession
-            GraftFunctions.register(bs)
-            batch.createOrReplaceTempView("ivfm_batch")
-            val bc = bs.sql(s"""
-              WITH f AS (SELECT b.vec_id, c.cell,
-                  vec_dot(b.embedding, c.carr) - 0.5 * c.cnrm AS sc
-                FROM ivfm_batch b CROSS JOIN $ca c),
-              a AS (SELECT vec_id, cell FROM (
-                SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id
-                  ORDER BY sc DESC, cell) AS rn FROM f) t WHERE rn = 1)
-              SELECT cell, COUNT(*) AS n FROM a GROUP BY cell""")
-            counts = graft.util.cut(counts.unionAll(bc)
-              .groupBy("cell").agg(sum("n").as("n")))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var counts = graft.util.empty(s, "cell BIGINT, n BIGINT")
+        Maintain.fold(s, key, stage,
+            "vec_id BIGINT, embedding ARRAY<FLOAT>") { batch =>
+          val bs = batch.sparkSession
+          GraftFunctions.register(bs)
+          batch.createOrReplaceTempView("ivfm_batch")
+          val bc = bs.sql(s"""
+            WITH f AS (SELECT b.vec_id, c.cell,
+                vec_dot(b.embedding, c.carr) - 0.5 * c.cnrm AS sc
+              FROM ivfm_batch b CROSS JOIN $ca c),
+            a AS (SELECT vec_id, cell FROM (
+              SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id
+                ORDER BY sc DESC, cell) AS rn FROM f) t WHERE rn = 1)
+            SELECT cell, COUNT(*) AS n FROM a GROUP BY cell""")
+          counts = graft.util.cut(counts.unionAll(bc)
+            .groupBy("cell").agg(sum("n").as("n")))
+        }
         counts.createOrReplaceTempView("ivfm_counts")
         s.sql(ivfStatsFromCounts("ivfm_counts"))
       },
@@ -1186,57 +1163,43 @@ object SimOps extends OpModule {
     // staleness (a drifting corpus concentrates mass on few codewords).
     Op("stream_pq_maintain",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"pqm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
+        val key = "stream_pq_maintain"
+        val stage = Maintain.stage(key, dir, col("vec_id")) {
           Tables(s, dir, "embeddings").select("vec_id", "embedding")
-            .repartitionByRange(3, col("vec_id"))
-            .write.mode("overwrite").parquet(stage)
+        }
         val cb = pqCbView(s, dir)
         val mm = sqMmView(s, dir)
-        var counts = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "s BIGINT, j INT, n BIGINT"))
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "vec_id BIGINT, embedding ARRAY<FLOAT>"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("pqm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            SimOps.pqMaintainBatches.incrementAndGet()
-            val bs = batch.sparkSession
-            // spread (guide §2.5): the per-batch 64-dim posexplode +
-            // 16-codeword distance fold ran in the one-task batch scan
-            graft.util.spread(batch.toDF(), col("vec_id"))
-              .createOrReplaceTempView("pqm_batch")
-            val bc = bs.sql(s"""
-              WITH u AS (SELECT vec_id, dim, v FROM pqm_batch
-                LATERAL VIEW posexplode(embedding) t AS dim, v),
-              cdb AS (SELECT u.vec_id, u.dim,
-                  CASE WHEN m.mx = m.mn THEN CAST(0 AS BIGINT)
-                    ELSE CAST(floor((CAST(u.v AS DOUBLE) - m.mn) * 255.0
-                      / (m.mx - m.mn)) AS BIGINT) END AS code
-                FROM u JOIN $mm m ON m.dim = u.dim),
-              dist AS (SELECT v.vec_id, v.dim div 8 AS s, c.j,
-                  SUM((v.code - c.code) * (v.code - c.code)) AS d
-                FROM cdb v JOIN $cb c ON c.dim = v.dim GROUP BY 1, 2, 3),
-              -- argmin by (d, j) as a map-side-combined struct-min (r17,
-              -- guide §2.3): identical to the ROW_NUMBER(ORDER BY d, j)
-              -- rank-1 row this replaces ((d, j) unique per (vec, s)),
-              -- without shuffling and sorting the full 16-codeword
-              -- distance relation per batch
-              a AS (SELECT vec_id, s, m.j AS j FROM (
-                SELECT vec_id, s, MIN(struct(d, j)) AS m
-                FROM dist GROUP BY 1, 2) t)
-              SELECT s, j, COUNT(*) AS n FROM a GROUP BY s, j""")
-            counts = graft.util.cut(counts.unionAll(bc)
-              .groupBy("s", "j").agg(sum("n").as("n")))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var counts = graft.util.empty(s, "s BIGINT, j INT, n BIGINT")
+        Maintain.fold(s, key, stage,
+            "vec_id BIGINT, embedding ARRAY<FLOAT>") { batch =>
+          val bs = batch.sparkSession
+          // spread (guide §2.5): the per-batch 64-dim posexplode +
+          // 16-codeword distance fold ran in the one-task batch scan
+          graft.util.spread(batch.toDF(), col("vec_id"))
+            .createOrReplaceTempView("pqm_batch")
+          val bc = bs.sql(s"""
+            WITH u AS (SELECT vec_id, dim, v FROM pqm_batch
+              LATERAL VIEW posexplode(embedding) t AS dim, v),
+            cdb AS (SELECT u.vec_id, u.dim,
+                CASE WHEN m.mx = m.mn THEN CAST(0 AS BIGINT)
+                  ELSE CAST(floor((CAST(u.v AS DOUBLE) - m.mn) * 255.0
+                    / (m.mx - m.mn)) AS BIGINT) END AS code
+              FROM u JOIN $mm m ON m.dim = u.dim),
+            dist AS (SELECT v.vec_id, v.dim div 8 AS s, c.j,
+                SUM((v.code - c.code) * (v.code - c.code)) AS d
+              FROM cdb v JOIN $cb c ON c.dim = v.dim GROUP BY 1, 2, 3),
+            -- argmin by (d, j) as a map-side-combined struct-min (r17,
+            -- guide §2.3): identical to the ROW_NUMBER(ORDER BY d, j)
+            -- rank-1 row this replaces ((d, j) unique per (vec, s)),
+            -- without shuffling and sorting the full 16-codeword
+            -- distance relation per batch
+            a AS (SELECT vec_id, s, m.j AS j FROM (
+              SELECT vec_id, s, MIN(struct(d, j)) AS m
+              FROM dist GROUP BY 1, 2) t)
+            SELECT s, j, COUNT(*) AS n FROM a GROUP BY s, j""")
+          counts = graft.util.cut(counts.unionAll(bc)
+            .groupBy("s", "j").agg(sum("n").as("n")))
+        }
         counts.orderBy("s", "j")
       },
       Some(s"""

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Op, OpModule, Tables, num}
+import graft.streaming.Maintain
 import org.apache.spark.sql.functions._
 
 /** OLAP statistics operators: exact percentiles, numerically-exact
@@ -8,9 +9,6 @@ import org.apache.spark.sql.functions._
   * one-pass formula is order-independent, unlike streaming covar updates),
   * and pivot tables. */
 object StatsOps extends OpModule {
-
-  /** Spec hook: stream_hll_maintain must see several micro-batches. */
-  val hllMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
 
   def ops: Seq[Op] = Seq(
 
@@ -379,38 +377,23 @@ object StatsOps extends OpModule {
     // estimates against their ±5% hard contracts.
     Op("stream_hll_maintain",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"hllm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists()) {
+        val key = "stream_hll_maintain"
+        val stage = Maintain.stage(key, dir, col("event_id")) {
           Tables(s, dir, "events").createOrReplaceTempView("events")
           s.sql("SELECT event_id, event_type, user_id FROM events")
-            .repartitionByRange(3, col("event_id"))
-            .write.mode("overwrite").parquet(stage)
         }
-        def empty(ddl: String) = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        var sk = empty("event_type STRING, sk BINARY")
-        var pairs = empty("event_type STRING, user_id BIGINT")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, event_type STRING, user_id BIGINT"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("hllm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            StatsOps.hllMaintainBatches.incrementAndGet()
-            val bs = batch.groupBy("event_type")
-              .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
-            sk = graft.util.cut(sk.unionByName(bs)
-              .groupBy("event_type")
-              .agg(expr("hll_union_agg(sk)").as("sk")))
-            pairs = graft.util.cut(pairs.unionByName(
-              batch.select("event_type", "user_id")).distinct())
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        var sk = graft.util.empty(s, "event_type STRING, sk BINARY")
+        var pairs = graft.util.empty(s, "event_type STRING, user_id BIGINT")
+        Maintain.fold(s, key, stage,
+            "event_id BIGINT, event_type STRING, user_id BIGINT") { batch =>
+          val bs = batch.groupBy("event_type")
+            .agg(expr("hll_sketch_agg(user_id, 12)").as("sk"))
+          sk = graft.util.cut(sk.unionByName(bs)
+            .groupBy("event_type")
+            .agg(expr("hll_union_agg(sk)").as("sk")))
+          pairs = graft.util.cut(pairs.unionByName(
+            batch.select("event_type", "user_id")).distinct())
+        }
         sk.createOrReplaceTempView("hll_state")
         pairs.createOrReplaceTempView("hll_pairs")
         s.sql("""

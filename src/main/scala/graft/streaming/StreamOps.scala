@@ -23,12 +23,6 @@ import org.apache.spark.sql.functions._
   * spills in the external sort instead of buffering on a task heap. */
 object StreamOps extends OpModule {
 
-  /** Test observability: micro-batches folded by stream_cc_maintain. */
-  val ccMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test observability: micro-batches folded by stream_topk_maintain. */
-  val topkMaintainBatches = new java.util.concurrent.atomic.AtomicLong(0)
-
   def ops: Seq[Op] = Seq(
 
     // True streaming source inside the harness (§2.1 source_stream_events):
@@ -172,29 +166,17 @@ object StreamOps extends OpModule {
       (s, dir) => {
         val g = graft.graph.GraphFixture(s, dir)
         val B = graft.graph.GraphFixture.B
-        val stage = graft.Staging.dir(s"ccm-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
-          Tables(s, dir, "events")
-            .select("user_id", "event_id")
-            .repartitionByRange(3, col("event_id"))
-            .write.mode("overwrite").parquet(stage)
+        val key = "stream_cc_maintain"
+        val stage = Maintain.stage(key, dir, col("event_id")) {
+          Tables(s, dir, "events").select("user_id", "event_id")
+        }
         var lbl = g.storedBaseCC(col("label") === "did")
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id BIGINT, event_id BIGINT"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .select((lit(7 * B) + col("user_id")).as("src"),
-            (lit(8 * B) + col("event_id")).as("dst"))
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("ccm-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            StreamOps.ccMaintainBatches.incrementAndGet()
-            lbl = graft.util.cut(g.foldBatchCC(lbl, batch))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        Maintain.fold(s, key, stage,
+            "user_id BIGINT, event_id BIGINT") { batch =>
+          lbl = graft.util.cut(g.foldBatchCC(lbl,
+            batch.select((lit(7 * B) + col("user_id")).as("src"),
+              (lit(8 * B) + col("event_id")).as("dst"))))
+        }
         lbl.orderBy("id")
       },
       Some(graft.graph.GraphSql.withGraph(
@@ -244,12 +226,10 @@ object StreamOps extends OpModule {
     // per-window batch top-k; this one maintains a global leaderboard.)
     Op("stream_topk_maintain",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"topk-src-${dir.hashCode.toHexString}")
-        if (!new java.io.File(s"$stage/_SUCCESS").exists())
-          Tables(s, dir, "events")
-            .select("event_type", "event_id", "value")
-            .repartitionByRange(3, col("event_id"))
-            .write.mode("overwrite").parquet(stage)
+        val key = "stream_topk_maintain"
+        val stage = Maintain.stage(key, dir, col("event_id")) {
+          Tables(s, dir, "events").select("event_type", "event_id", "value")
+        }
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("event_type")
           .orderBy(col("value").desc, col("event_id").desc)
@@ -258,22 +238,11 @@ object StreamOps extends OpModule {
           .filter(col("rn") <= 3)
         var state = Tables(s, dir, "events")
           .select("event_type", "event_id", "value").limit(0)
-        val q = s.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "event_type STRING, event_id BIGINT, value DOUBLE"))
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .select("event_type", "event_id", "value")
-          .writeStream
-          .option("checkpointLocation", graft.Staging.fresh("topk-chk"))
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            StreamOps.topkMaintainBatches.incrementAndGet()
-            state = graft.util.cut(
-              top3(state.unionAll(top3(batch).drop("rn"))).drop("rn"))
-            ()
-          }
-          .start()
-        q.processAllAvailable()
-        q.stop()
+        Maintain.fold(s, key, stage,
+            "event_type STRING, event_id BIGINT, value DOUBLE") { batch =>
+          state = graft.util.cut(
+            top3(state.unionAll(top3(batch).drop("rn"))).drop("rn"))
+        }
         top3(state).select("event_type", "rn", "event_id", "value")
           .orderBy("event_type", "rn")
       },

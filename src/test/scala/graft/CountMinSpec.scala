@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.streaming.Maintain
 
 /** [[graft.functions.CountMinSketch]] semantics, independent of the DuckDB
   * oracle: an in-memory plain-Scala recomputation of every cell, the
@@ -110,12 +111,12 @@ class CountMinSpec extends AnyFunSuite {
   }
 
   test("stream_countmin_maintain fold == batch report, over >1 micro-batch") {
-    val before = ops.CustomExprOps.cmMaintainBatches.get()
+    val before = Maintain.batches("stream_countmin_maintain")
     val streamed = SparkEntry.queries("stream_countmin_maintain")(spark, TestSpark.sf)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("agg_countmin")(spark, TestSpark.sf)
       .collect().map(_.toSeq).toSeq
-    assert(ops.CustomExprOps.cmMaintainBatches.get() - before >= 2,
+    assert(Maintain.batches("stream_countmin_maintain") - before >= 2,
       "maintain loop must fold multiple micro-batches")
     assert(streamed == batch)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
+import graft.streaming.Maintain
 
 /** Independent-algorithm certification for the LLM-pipeline flagship keys
   * (the §2.10a/§2.11 audit extended to the similarity/dedup families):
@@ -838,10 +839,10 @@ class LlmIndependenceSpec extends AnyFunSuite {
       .map { case (a, b2) =>
         (a, b2, java.lang.Long.bitCount(fps(a) ^ fps(b2))) }
       .filter(_._3 <= 10).sorted
-    val before = graft.ops.DedupOps.phashMaintainBatches.get()
+    val before = Maintain.batches("stream_phash_maintain")
     val got = SparkEntry.queries("stream_phash_maintain")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(graft.ops.DedupOps.phashMaintainBatches.get() >= before + 2,
+    assert(Maintain.batches("stream_phash_maintain") >= before + 2,
       "expected the staged source to arrive in multiple micro-batches")
     assert(got == want, s"got ${got.size} pairs, want ${want.size}")
     assert(want.nonEmpty)

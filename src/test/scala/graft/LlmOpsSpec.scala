@@ -3,6 +3,7 @@ package graft
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.Maintain
 
 class LlmOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -193,10 +194,10 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("stream_minhash_maintain folds corpus slices to the exact batch pair set") {
-    val before = ops.DedupOps.minhashMaintainBatches.get()
+    val before = Maintain.batches("stream_minhash_maintain")
     val maintained = SparkEntry.queries("stream_minhash_maintain")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val nBatches = ops.DedupOps.minhashMaintainBatches.get() - before
+    val nBatches = Maintain.batches("stream_minhash_maintain") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     val full = SparkEntry.queries("dedup_minhash")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -204,11 +205,11 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("stream_substring_maintain folds corpus slices to the exact batch report") {
-    val before = ops.DedupOps.substrMaintainBatches.get()
+    val before = Maintain.batches("stream_substring_maintain")
     val maintained = SparkEntry.queries("stream_substring_maintain")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getDouble(6))).toSeq
-    val nBatches = ops.DedupOps.substrMaintainBatches.get() - before
+    val nBatches = Maintain.batches("stream_substring_maintain") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     val full = SparkEntry.queries("text_dedup_report")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),

@@ -3,6 +3,7 @@ package graft
 import graft.graph.GraphFixture
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.Maintain
 
 class PropertyGraphSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -519,12 +520,12 @@ class PropertyGraphSpec extends AnyFunSuite {
   }
 
   test("stream_mst_maintain: multi-batch fold equals the batch forest exactly") {
-    val before = graft.ops.GraphOps.mstMaintainBatches.get()
+    val before = Maintain.batches("stream_mst_maintain")
     val streamed = SparkEntry.queries("stream_mst_maintain")(spark, TestSpark.sf)
       .collect().map(_.toString).toSeq
     // the maintenance loop genuinely folded multiple micro-batches (a
     // single batch would trivially equal the batch pipeline)
-    assert(graft.ops.GraphOps.mstMaintainBatches.get() - before >= 2)
+    assert(Maintain.batches("stream_mst_maintain") - before >= 2)
     val batch = SparkEntry.queries("graph_mst")(spark, TestSpark.sf)
       .collect().map(_.toString).toSeq
     assert(streamed == batch)

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.Maintain
 
 /** Semantic invariants for the QualityOps additions (cross-engine value
   * equality is the Verify/DuckDB gate's job; these assert the properties
@@ -127,10 +128,10 @@ class QualityOpsSpec extends AnyFunSuite {
   }
 
   test("stream_scd2_maintain folds ordered micro-batches to the exact batch SCD2") {
-    val before = ops.QualityOps.scd2MaintainBatches.get()
+    val before = Maintain.batches("stream_scd2_maintain")
     val maintained = SparkEntry.queries("stream_scd2_maintain")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val nBatches = ops.QualityOps.scd2MaintainBatches.get() - before
+    val nBatches = Maintain.batches("stream_scd2_maintain") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     val full = SparkEntry.queries("cdc_scd2")(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -200,10 +201,10 @@ class QualityOpsSpec extends AnyFunSuite {
   }
 
   test("stream_quality_gate sums batch audits to the whole-corpus audit") {
-    val before = ops.QualityOps.qualityGateBatches.get()
+    val before = Maintain.batches("stream_quality_gate")
     val gated = SparkEntry.queries("stream_quality_gate")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val nBatches = ops.QualityOps.qualityGateBatches.get() - before
+    val nBatches = Maintain.batches("stream_quality_gate") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     import org.apache.spark.sql.functions._
     val full = Tables(spark, sf, "events").groupBy("event_type")
@@ -215,10 +216,10 @@ class QualityOpsSpec extends AnyFunSuite {
   }
 
   test("stream_drift_maintain folds micro-batches to the exact batch drift report") {
-    val before = ops.QualityOps.driftMaintainBatches.get()
+    val before = Maintain.batches("stream_drift_maintain")
     val streamed = SparkEntry.queries("stream_drift_maintain")(spark, sf)
       .collect().map(_.toString).toSeq
-    val nBatches = ops.QualityOps.driftMaintainBatches.get() - before
+    val nBatches = Maintain.batches("stream_drift_maintain") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     val batch = SparkEntry.queries("dq_drift")(spark, sf)
       .collect().map(_.toString).toSeq

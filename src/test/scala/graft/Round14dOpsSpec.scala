@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.Maintain
 
 /** In-memory recomputations for the round-14d relational/sim/text keys
   * (sim_mips, text_collocations, ts_changepoint, agg_hll_merge) — each
@@ -82,12 +83,12 @@ class Round14dOpsSpec extends AnyFunSuite {
   }
 
   test("stream_hll_maintain fold == batch report, over >1 micro-batch") {
-    val before = ops.StatsOps.hllMaintainBatches.get()
+    val before = Maintain.batches("stream_hll_maintain")
     val streamed = SparkEntry.queries("stream_hll_maintain")(spark, TestSpark.sf)
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("agg_hll_merge")(spark, TestSpark.sf)
       .collect().map(_.toSeq).toSeq
-    assert(ops.StatsOps.hllMaintainBatches.get() - before >= 2,
+    assert(Maintain.batches("stream_hll_maintain") - before >= 2,
       "maintain loop must fold multiple micro-batches")
     assert(streamed == batch)
   }

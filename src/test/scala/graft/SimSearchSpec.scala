@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.streaming.Maintain
 
 /** Recall/structure checks for the approximate similarity operators against
   * the brute-force baseline (sim_topk is exact — it's the ground truth). */
@@ -36,10 +37,10 @@ class SimSearchSpec extends AnyFunSuite {
     // batch pipeline's occupancy stats — and the run must actually SEE
     // multiple micro-batches (a single-batch pass would equal the batch
     // pipeline trivially).
-    val before = graft.ops.SimOps.ivfMaintainBatches.get()
+    val before = Maintain.batches("stream_ivf_maintain")
     val got = SparkEntry.queries("stream_ivf_maintain")(spark, sf)
       .collect().map(_.toSeq)
-    assert(graft.ops.SimOps.ivfMaintainBatches.get() >= before + 2,
+    assert(Maintain.batches("stream_ivf_maintain") >= before + 2,
       "expected the staged source to arrive in multiple micro-batches")
     val want = SparkEntry.queries("sim_ivf_stats")(spark, sf)
       .collect().map(_.toSeq)
@@ -167,10 +168,10 @@ class SimSearchSpec extends AnyFunSuite {
     // offline model (codebook + per-dim min/max) lands exactly on the
     // batch assignments' occupancy grid, and the run must actually see
     // multiple micro-batches.
-    val before = graft.ops.SimOps.pqMaintainBatches.get()
+    val before = Maintain.batches("stream_pq_maintain")
     val got = SparkEntry.queries("stream_pq_maintain")(spark, sf)
       .collect().map(_.toSeq)
-    assert(graft.ops.SimOps.pqMaintainBatches.get() >= before + 2,
+    assert(Maintain.batches("stream_pq_maintain") >= before + 2,
       "expected the staged source to arrive in multiple micro-batches")
     val want = spark.sql(s"""SELECT s, j, COUNT(*) AS n
       FROM ${ops.SimOps.pqAsgView(spark, sf)}

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Streams
+import graft.streaming.{Maintain, Streams}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -236,10 +236,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_cc_maintain folds multiple real micro-batches to the full-CC fixpoint") {
-    val before = graft.streaming.StreamOps.ccMaintainBatches.get()
+    val before = Maintain.batches("stream_cc_maintain")
     val maintained = SparkEntry.queries("stream_cc_maintain")(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val nBatches = graft.streaming.StreamOps.ccMaintainBatches.get() - before
+    val nBatches = Maintain.batches("stream_cc_maintain") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     val full = graft.graph.GraphFixture(spark, TestSpark.sf).connectedComponents
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -247,10 +247,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_topk_maintain folds micro-batches to the exact full-data top-3") {
-    val before = graft.streaming.StreamOps.topkMaintainBatches.get()
+    val before = Maintain.batches("stream_topk_maintain")
     val maintained = SparkEntry.queries("stream_topk_maintain")(spark, TestSpark.sf)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
-    val nBatches = graft.streaming.StreamOps.topkMaintainBatches.get() - before
+    val nBatches = Maintain.batches("stream_topk_maintain") - before
     assert(nBatches >= 2, s"expected multiple micro-batches, saw $nBatches")
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
@@ -262,6 +262,30 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy("event_type", "rn")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
     assert(maintained == full, "maintained leaderboard ≠ full-data top-3")
+  }
+
+  test("Maintain.fold: a fold that throws fails the op and leaves no query running") {
+    val key = "spec_failing_maintain"
+    val op = Op(key, (s, dir) => {
+      val stage = Maintain.stage(key, dir, col("event_id")) {
+        Tables(s, dir, "events").select("event_id", "value")
+      }
+      var seen = 0
+      Maintain.fold(s, key, stage, "event_id BIGINT, value DOUBLE") { batch =>
+        seen += 1
+        if (seen == 2) throw new IllegalStateException("fold failed on batch 2")
+        batch.count()
+      }
+      s.range(1).toDF()
+    }, None)
+    val before = Maintain.batches(key)
+    val err = intercept[Exception](op.fn(spark, TestSpark.sf).collect())
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists(_.getMessage == "fold failed on batch 2"),
+      s"fold error not in the cause chain: ${chain.map(_.toString)}")
+    assert(spark.streams.active.isEmpty, "the failed fold left its query running")
+    assert(Maintain.batches(key) - before == 2)
   }
 
   test("ts_gapfill grid is complete: consecutive 5-min buckets, no holes") {
