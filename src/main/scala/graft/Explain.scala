@@ -2,10 +2,10 @@ package graft
 
 /** Dev utility: print the FINAL (post-AQE) formatted physical plan of one or
   * more registered keys under the bench session config. Usage:
-  * `runMain graft.Explain <sfDir> <key>[,key...]`. Complements [[Prof]]
-  * (which times) and [[Plans]] (which snapshots the showcase list into
-  * PLANS.md at sf0.001) — this one is for diagnosing plan instability at the
-  * bench SF without touching PLANS.md. */
+  * `runMain graft.Explain <sfDir> <key>[,key...]`. Complements [[Jobs]]
+  * (which times keys and counts their jobs) and [[Plans]] (which snapshots
+  * the showcase list into PLANS.md at sf0.001) — this one is for diagnosing
+  * plan instability at the bench SF without touching PLANS.md. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, keys) = args

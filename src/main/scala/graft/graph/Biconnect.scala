@@ -85,22 +85,24 @@ object Biconnect {
 
     // 1. BFS forest: vis(id, parent, lvl, rt); parent = min lower-level
     // neighbor; rt = owning root, inherited from the claiming parent.
-    var vis = cut(roots0.select(col("id"),
+    // every level is a measured cut: its row count is the loop's test
+    var (vis, live) = Superstep.counted(roots0.select(col("id"),
       lit(null).cast("long").as("parent"), lit(0).as("lvl"),
       col("id").as("rt")))
     var frontier = vis.select("id", "rt")
     var lvl = 0
-    while (frontier.limit(1).count() > 0) {
-      require(lvl <= maxDepth,
-        s"BFS depth exceeded $maxDepth; raise maxDepth for this graph")
+    while (live > 0) {
+      Superstep.cap("Biconnect.forest BFS (raise maxDepth)", lvl, maxDepth,
+        live)
       lvl += 1
-      val nxt = cut(und
+      val (nxt, n) = Superstep.counted(und
         .join(frontier.withColumnRenamed("id", "a"), "a")
         .join(vis.select(col("id").as("b")), Seq("b"), "left_anti")
         .groupBy(col("b").as("id"))
         .agg(min("a").as("parent"), min("rt").as("rt"))
         .withColumn("lvl", lit(lvl)))
       frontier = nxt.select("id", "rt")
+      live = n
       vis = cut(vis.unionAll(nxt.select("id", "parent", "lvl", "rt")))
     }
     val maxLvl = lvl - 1

@@ -72,27 +72,23 @@ object Boruvka {
     * relation — executor-side via mapPartitions on a single coalesced
     * partition, never a driver collect. */
   private def localMsf(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val schema = edges.select("a", "b", "w").schema
-    val kept = edges.select("a", "b", "w").coalesce(1).rdd
-      .mapPartitions { it =>
-        val rows = it.toArray
-        def lv(r: org.apache.spark.sql.Row, i: Int): Long =
-          r.get(i).asInstanceOf[Number].longValue
-        val uf = new UnionFind
-        rows.sortBy(r =>
-            (r.get(2).asInstanceOf[Number].doubleValue, lv(r, 0), lv(r, 1)))
-          .iterator.filter(r => uf.union(lv(r, 0), lv(r, 1)))
-      }
-    spark.createDataFrame(kept, schema).orderBy("a", "b")
+    val e = edges.select("a", "b", "w")
+    Superstep.inOneTask(e, e.schema.toDDL) { it =>
+      val rows = it.toArray
+      def lv(r: org.apache.spark.sql.Row, i: Int): Long =
+        r.get(i).asInstanceOf[Number].longValue
+      val uf = new UnionFind
+      rows.sortBy(r =>
+          (r.get(2).asInstanceOf[Number].doubleValue, lv(r, 0), lv(r, 1)))
+        .iterator.filter(r => uf.union(lv(r, 0), lv(r, 1)))
+    }.orderBy("a", "b")
   }
 
   private def msfDistributed(edges0: DataFrame): DataFrame = {
-    val spark = edges0.sparkSession
-    var edges = cut(edges0.select("a", "b", "w"))
-    var comp = cut(edges.select(col("a").as("id"))
+    var (edges, nE) = Superstep.counted(edges0.select("a", "b", "w"))
+    var (comp, nV) = Superstep.counted(edges.select(col("a").as("id"))
       .unionAll(edges.select(col("b").as("id")))
-      .distinct().withColumn("comp", col("id")), eager = false)
+      .distinct().withColumn("comp", col("id")))
     // cut frames carry no stats, so hint the bounded sides explicitly (the
     // Matching/Densest count-guard discipline). TWO guards (r17 — the
     // round-0 pin kept every component-sized join off broadcast forever on
@@ -101,32 +97,34 @@ object Boruvka {
     // (comp's ROW count never shrinks — only its distinct labels do), and
     // `hc` guards the component-sized frames (sel/hook/jump/relabel),
     // whose bound is the previous round's hooked-component count — already
-    // materialized by that round's par.count(), so the tighter guard costs
+    // measured by that round's hook forest, so the tighter guard costs
     // zero extra jobs. Locally (|V| ≪ 4M) every plan is unchanged.
-    val nV = comp.count()
-    def h(df: DataFrame): DataFrame = if (nV <= 4000000) broadcast(df) else df
+    def h(df: DataFrame): DataFrame = Superstep.small(df, nV)
     var cBound = nV
-    def hc(df: DataFrame): DataFrame =
-      if (cBound <= 4000000) broadcast(df) else df
+    def hc(df: DataFrame): DataFrame = Superstep.small(df, cBound)
     val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var rounds = 0
-    while (rounds < 32 && !edges.isEmpty) {
+    while (nE > 0) {
       rounds += 1
       // label both endpoints; drop intra-component edges for good
       val cross = edges
         .join(h(comp.select(col("id").as("a"), col("comp").as("ca"))), "a")
         .join(h(comp.select(col("id").as("b"), col("comp").as("cb"))), "b")
         .filter(col("ca") =!= col("cb"))
-      edges = cut(cross.select("a", "b", "w"), eager = false)
-      if (!edges.isEmpty) {
+      val live = Superstep.counted(cross.select("a", "b", "w"))
+      edges = live._1; nE = live._2
+      if (nE > 0) {
+        // the component count at least halves per round: 32 rounds cover
+        // 2^32 components, so a 33rd round with cross edges left is a bug
+        Superstep.cap("Boruvka.msf", rounds, 32, nE)
         // every component's minimum cross edge, seen from both endpoints
         val halves = cross
           .select(col("ca").as("c"), col("cb").as("tgt"),
             col("w"), col("a"), col("b"))
           .unionAll(cross.select(col("cb").as("c"), col("ca").as("tgt"),
             col("w"), col("a"), col("b")))
-        // lazy cuts from here on: par.count() (and the next round's
-        // isEmpty) materializes the whole round in one job tree
+        // lazy cuts from here on: the measured hook forest (and the next
+        // round's measured cross edges) materializes the round's job trees
         val sel = cut(halves.groupBy("c")
           .agg(min(struct(col("w"), col("a"), col("b"), col("tgt"))).as("m"))
           .select(col("c"), col("m.w").as("w"), col("m.a").as("a"),
@@ -135,18 +133,18 @@ object Boruvka {
         // hook; break each mutual pair toward the smaller id (tree root)
         val x = sel.select(col("c"), col("tgt"))
         val y = x.select(col("c").as("tc"), col("tgt").as("ttgt"))
-        var par = cut(x.join(hc(y), col("tgt") === col("tc"))
+        val (hooked, n) = Superstep.counted(x.join(hc(y), col("tgt") === col("tc"))
           .select(col("c"),
             when(col("ttgt") === col("c") && col("c") < col("tgt"), col("c"))
-              .otherwise(col("tgt")).as("p")), eager = false)
+              .otherwise(col("tgt")).as("p")))
         // pointer-jump every chain onto its root. Chains are bounded by
         // the hooked-component count n, so ⌈log₂ n⌉ UNCHECKED jumps reach
         // every root (after k jumps a pointer covers distance 2^k; roots
         // self-loop and stay) — one count per round replaces a per-jump
         // convergence probe, which was a join + driver action apiece and
         // dominated the key's wall-clock on small component graphs.
-        val n = par.count()
         cBound = n
+        var par = hooked
         val jumps =
           if (n <= 2) 1
           else 64 - java.lang.Long.numberOfLeadingZeros(n - 1).toInt

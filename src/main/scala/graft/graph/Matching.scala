@@ -58,39 +58,11 @@ object Matching {
     // O(E) remainder into toArray would be a single-executor OOM). The
     // loop always terminates: the globally max-weight edge is mutual-best
     // every round, so cnt strictly decreases.
-    // THREE actions per round — the cut of the nomination frame, the cut
-    // of the shrunken edge list, and its count. Everything else (the
-    // handshake join, the matched-vertex set, the per-round output slice)
-    // stays LAZY over the two checkpointed frames: per-round fixed action
-    // latency, not data volume, dominates a many-round BSP on a shrinking
-    // relation, so the loop's job count is the thing to engineer down.
     val oneTaskCap = 16000000L
     while (cnt > 0 && cnt > localThreshold && (r <= 64 || cnt > oneTaskCap)) {
-      val half = e.select(col("a").as("v"), col("a"), col("b"), col("w"))
-        .unionAll(e.select(col("b").as("v"), col("a"), col("b"), col("w")))
-      // CUT the nomination frame before the handshake: both join sides
-      // derive from it, and an uncut plan would run the (dominant)
-      // min-struct aggregate twice per round.
-      val best = cut(half
-        .groupBy("v")
-        .agg(min(struct((-col("w")).as("nw"), col("a"), col("b"))).as("s"))
-        .select(col("v"), col("s.a").as("a"), col("s.b").as("b"),
-          (-col("s.nw")).as("w")), eager = false)
-      val m = cut(best.filter(col("v") === col("a")).drop("v")
-        .join(best.filter(col("v") === col("b")).select("a", "b"),
-          Seq("a", "b"), "left_semi"), eager = false)
-      // ≤ 2·matched rows, V/2-bounded — broadcast by construction (a cut
-      // frame has no stats, AQE can't see it; deployments with larger
-      // matches per round swap the hint for a stats-aware choice).
-      val mv = broadcast(m.select(col("a").as("mid"))
-        .unionAll(m.select(col("b").as("mid"))))
+      val (m, next, n) = mutualBest(e)
       out = out.unionByName(m.select(lit(r).as("r"), col("a"), col("b"), col("w")))
-      // LAZY cuts throughout the round (the hits half-round lesson):
-      // nothing consumes best/m/e until this count fires, so the whole
-      // round materializes in one job tree instead of one job per cut.
-      e = cut(e.join(mv, e("a") === mv("mid"), "left_anti")
-        .join(mv, e("b") === mv("mid"), "left_anti"), eager = false)
-      cnt = e.count()
+      e = next; cnt = n
       r += 1
     }
     if (cnt > 0) out = out.unionByName(localTail(e, r))
@@ -114,62 +86,71 @@ object Matching {
     var out = graft.util.empty(spark, "a BIGINT, b BIGINT, w DOUBLE")
     var r = 1
     while (r <= 64 && cnt > 0 && cnt > localThreshold) {
-      val half = e.select(col("a").as("v"), col("a"), col("b"), col("w"))
-        .unionAll(e.select(col("b").as("v"), col("a"), col("b"), col("w")))
-      val best = cut(half
-        .groupBy("v")
-        .agg(min(struct((-col("w")).as("nw"), col("a"), col("b"))).as("s"))
-        .select(col("v"), col("s.a").as("a"), col("s.b").as("b"),
-          (-col("s.nw")).as("w")), eager = false)
-      val m = cut(best.filter(col("v") === col("a")).drop("v")
-        .join(best.filter(col("v") === col("b")).select("a", "b"),
-          Seq("a", "b"), "left_semi"), eager = false)
-      val mv = broadcast(m.select(col("a").as("mid"))
-        .unionAll(m.select(col("b").as("mid"))))
-      out = out.unionByName(m.select(col("a"), col("b"), col("w")))
-      // LAZY cuts throughout the round (the hits half-round lesson):
-      // nothing consumes best/m/e until this count fires, so the whole
-      // round materializes in one job tree instead of one job per cut.
-      e = cut(e.join(mv, e("a") === mv("mid"), "left_anti")
-        .join(mv, e("b") === mv("mid"), "left_anti"), eager = false)
-      cnt = e.count()
+      val (m, next, n) = mutualBest(e)
+      out = out.unionByName(m.select("a", "b", "w"))
+      e = next; cnt = n
       r += 1
     }
     if (cnt > 0) {
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "a BIGINT, b BIGINT, w DOUBLE")
-      // Sort DISTRIBUTEDLY (Tungsten range sort), CUT, then scan the rank
-      // order through one task. The cut between sort and coalesce is
-      // load-bearing twice over: (a) `orderBy(...).coalesce(1)` collapses
-      // the whole sort into ONE partition (measured 33–80 s at the 10×
-      // probe vs ~3 s distributed); (b) localCheckpoint freezes partition
-      // order, and coalesce(1) without shuffle concatenates the
-      // range-sorted partitions in index order — so the stream arrives
-      // globally sorted and the greedy scan is one O(E) pass with a
-      // free-set (the inherently sequential step of greedy matching).
-      val sorted = cut(e.select("a", "b", "w")
-        .orderBy(col("w").desc, col("a"), col("b")))
-      val rdd = sorted.coalesce(1).rdd.mapPartitions { it =>
+      // the rank-order stream through one task: one O(E) pass with a
+      // free-set (the inherently sequential step of greedy matching)
+      out = out.unionByName(Superstep.inOneTask(e.select("a", "b", "w"),
+          "a BIGINT, b BIGINT, w DOUBLE", col("w").desc, col("a"), col("b")) { it =>
         val used = new java.util.HashSet[Long]()
         it.filter { row =>
           val a = row.getLong(0); val b = row.getLong(1)
           if (used.contains(a) || used.contains(b)) false
           else { used.add(a); used.add(b); true }
         }
-      }
-      out = out.unionByName(spark.createDataFrame(rdd, schema))
+      })
     }
     cut(out)
   }
 
+  /** One mutual-best round over the live edges `e` (a, b, w). Returns the
+    * matched edges, the edge list left once matched vertices leave, and
+    * its row count.
+    *
+    * TWO actions per round — the cut of the nomination frame and the
+    * measured cut of the shrunken edge list, whose count rides its own
+    * job. Everything else (the handshake join, the matched-vertex set, the
+    * per-round output slice) stays LAZY over the checkpointed frames:
+    * per-round fixed action latency, not data volume, dominates a
+    * many-round BSP on a shrinking relation, so the loop's job count is
+    * the thing to engineer down. */
+  private def mutualBest(e: DataFrame): (DataFrame, DataFrame, Long) = {
+    val half = e.select(col("a").as("v"), col("a"), col("b"), col("w"))
+      .unionAll(e.select(col("b").as("v"), col("a"), col("b"), col("w")))
+    // CUT the nomination frame before the handshake: both join sides
+    // derive from it, and an uncut plan would run the (dominant)
+    // min-struct aggregate twice per round.
+    val best = cut(half
+      .groupBy("v")
+      .agg(min(struct((-col("w")).as("nw"), col("a"), col("b"))).as("s"))
+      .select(col("v"), col("s.a").as("a"), col("s.b").as("b"),
+        (-col("s.nw")).as("w")), eager = false)
+    val m = cut(best.filter(col("v") === col("a")).drop("v")
+      .join(best.filter(col("v") === col("b")).select("a", "b"),
+        Seq("a", "b"), "left_semi"), eager = false)
+    // ≤ 2·matched rows, V/2-bounded — broadcast by construction (a cut
+    // frame has no stats, AQE can't see it; deployments with larger
+    // matches per round swap the hint for a stats-aware choice).
+    val mv = broadcast(m.select(col("a").as("mid"))
+      .unionAll(m.select(col("b").as("mid"))))
+    // LAZY cuts throughout the round (the hits half-round lesson):
+    // nothing consumes best/m until the shrunken list is measured, so the
+    // whole round materializes in one job tree instead of one job per cut.
+    val (next, n) = Superstep.counted(e.join(mv, e("a") === mv("mid"), "left_anti")
+      .join(mv, e("b") === mv("mid"), "left_anti"))
+    (m, next, n)
+  }
+
   /** Executor-local continuation: the identical mutual-best round loop
-    * over the (threshold-bounded) remainder in one task — one coalesced
-    * partition, never a driver collect (Boruvka.localMsf's shape). */
-  private def localTail(e: DataFrame, r0: Int): DataFrame = {
-    val spark = e.sparkSession
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "r INT, a BIGINT, b BIGINT, w DOUBLE")
-    val rdd = e.select("a", "b", "w").coalesce(1).rdd.mapPartitions { it =>
+    * over the (threshold-bounded) remainder in one task (Boruvka.localMsf's
+    * shape). */
+  private def localTail(e: DataFrame, r0: Int): DataFrame =
+    Superstep.inOneTask(e.select("a", "b", "w"),
+        "r INT, a BIGINT, b BIGINT, w DOUBLE") { it =>
       var es = it.map(row => (row.getLong(0), row.getLong(1),
         row.getDouble(2))).toArray
       val out = scala.collection.mutable.ArrayBuffer
@@ -195,8 +176,6 @@ object Matching {
       }
       out.iterator
     }
-    spark.createDataFrame(rdd, schema)
-  }
 }
 
 /** Distributed densest-subgraph 4-approximation — Charikar's greedy peel in
@@ -218,9 +197,9 @@ object Densest {
     * marking the density-maximal snapshot (ties → earliest round).
     *
     * Loop state is the DEGREE frame (id, d) — one row per surviving
-    * vertex — so each round is: ONE scalar aggregate over it (n and Σd =
-    * 2e together), a survivor filter, and the edge shrink. The shrink is
-    * two SEMI-joins against the survivor set, not anti-joins against the
+    * vertex — so each round is: its measured cut (n and Σd = 2e read in
+    * the materialization job), a survivor filter, and the edge shrink.
+    * The shrink is two SEMI-joins against the survivor set, not anti-joins against the
     * removed set: the ε=1 rule keeps < n/2 vertices per round, so the
     * JOINED side collapses geometrically and is explicitly broadcast
     * (a cut frame has no stats — AQE can't discover broadcastability on
@@ -229,41 +208,40 @@ object Densest {
   def peel(und0: DataFrame): DataFrame = {
     val spark = und0.sparkSession
     var e = und0.select("a", "b") // cut from the first shrink on
-    def degOf(ed: DataFrame, verts: Option[DataFrame]): DataFrame = {
+    // the degree frame, measured: n and Σd (= 2e) ride its
+    // materialization job
+    def degOf(ed: DataFrame, verts: Option[DataFrame]) = {
       val cnt = ed.select(col("a").as("id"))
         .unionAll(ed.select(col("b").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
-      verts match {
+      Superstep.round(verts match {
         case None => cnt
         case Some(v) => v.join(cnt, Seq("id"), "left")
           .select(col("id"), coalesce(col("d"), lit(0L)).as("d"))
-      }
+      }, count(lit(1)).as("n"), sum("d").as("sd"))
     }
-    var deg = cut(degOf(e, None), eager = false)
+    var (deg, row) = degOf(e, None)
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var r = 1
-    var done = false
-    while (r <= 64 && !done) {
-      val row = deg.agg(count(lit(1)).as("n"), sum("d").as("sd")).head
+    while (row.getLong(0) > 0) {
       val n = row.getLong(0)
-      if (n == 0) done = true
-      else {
-        val ecnt = if (row.isNullAt(1)) 0L else row.getLong(1) / 2
-        stats += ((r, n, ecnt))
-        val surv = cut(deg
-          .filter(col("d") * lit(n) > lit(4L) * lit(ecnt)).select("id"),
-          eager = false)
-        // < n/2 by the ε=1 rule, but guard the hint anyway: at deployment
-        // scale an early round's survivor set can exceed executor memory,
-        // and a shuffle semi-join is the correct fallback there.
-        val sb = if (surv.count() <= 4000000) broadcast(surv) else surv
-        // lazy: the next round's scalar aggregate over deg materializes
-        // the e/deg pair in one job tree
-        e = cut(e.join(sb, e("a") === sb("id"), "left_semi")
-          .join(sb, e("b") === sb("id"), "left_semi"), eager = false)
-        deg = cut(degOf(e, Some(surv)), eager = false)
-        r += 1
-      }
+      // < n/2 survive each round (ε=1), so ⌈log₂ V⌉ ≤ 64 rounds always
+      Superstep.cap("Densest.peel", r, 64, n)
+      val ecnt = if (row.isNullAt(1)) 0L else row.getLong(1) / 2
+      stats += ((r, n, ecnt))
+      val (surv, nSurv) = Superstep.counted(deg
+        .filter(col("d") * lit(n) > lit(4L) * lit(ecnt)).select("id"))
+      // < n/2 by the ε=1 rule, but guard the hint anyway: at deployment
+      // scale an early round's survivor set can exceed executor memory,
+      // and a shuffle semi-join is the correct fallback there.
+      val sb = Superstep.small(surv, nSurv)
+      // lazy: the next round's measured degree frame materializes the
+      // e/deg pair in one job tree
+      e = cut(e.join(sb, e("a") === sb("id"), "left_semi")
+        .join(sb, e("b") === sb("id"), "left_semi"), eager = false)
+      val next = degOf(e, Some(surv))
+      deg = next._1; row = next._2
+      r += 1
     }
     import spark.implicits._
     // Density compare on the few-row stats frame: one IEEE division of
@@ -295,11 +273,10 @@ object Mis {
     *
     * `localThreshold` > 0 enables the sequential tail (the family's
     * hybrid): the lexicographic MIS equals the greedy-by-id scan (add v
-    * iff no smaller neighbor was added), so once the remaining edge
-    * relation fits one task it streams through the same (b, a)-sorted
-    * mex-style pass the coloring tail uses — a vertex first seen as `a`
-    * that was never a `b` has no smaller neighbors and joins the MIS on
-    * sight. Hybrid ≡ BSP equality pinned in MatchingDensestSpec. */
+    * iff no smaller neighbor was added), which is greedy color class 1,
+    * so once the remaining edge relation fits one task it takes class 1
+    * of [[Coloring]]'s one-task tail. Hybrid ≡ BSP equality pinned in
+    * MatchingDensestSpec and ApproxPropSpec. */
   def greedy(und0: DataFrame, localThreshold: Long = 0L): DataFrame = {
     val spark = und0.sparkSession
     var e = und0.select("a", "b") // cut from the first shrink on
@@ -315,63 +292,36 @@ object Mis {
     var alive: DataFrame = null
     var aliveCnt = 0L
     if (eCnt > localThreshold) {
-      alive = cut(e.select(col("a").as("id"))
-        .unionAll(e.select(col("b").as("id"))).distinct(), eager = false)
-      aliveCnt = alive.count()
+      val (a0, n) = Superstep.counted(e.select(col("a").as("id"))
+        .unionAll(e.select(col("b").as("id"))).distinct())
+      alive = a0; aliveCnt = n
     }
     while (r <= 64 && aliveCnt > 0 && eCnt > localThreshold) {
-      // Hints guarded by cheap counts on already-materialized frames: cut
-      // frames carry no stats, so AQE can't see broadcastability, but an
-      // adversarial round can have O(V) winners where shuffle is right.
-      def hinted(df: DataFrame): DataFrame =
-        if (df.count() <= 4000000) broadcast(df) else df
+      // Hints guarded by the rounds' measured counts: cut frames carry no
+      // stats, so AQE can't see broadcastability, but an adversarial round
+      // can have O(V) winners where shuffle is right.
       val losers = e.select(col("b").as("id")).distinct()
-      val winners = cut(alive.join(losers, Seq("id"), "left_anti"),
-        eager = false)
-      val wb = hinted(winners)
+      val (winners, nWin) = Superstep.counted(
+        alive.join(losers, Seq("id"), "left_anti"))
+      val wb = Superstep.small(winners, nWin)
       val dead = e.join(wb, e("a") === wb("id"), "left_semi")
         .select(col("b").as("id")).distinct()
       out = out.unionByName(winners)
-      alive = cut(alive.join(winners, Seq("id"), "left_anti")
-        .join(dead, Seq("id"), "left_anti"), eager = false)
-      val ab = hinted(alive)
-      e = cut(e.join(ab, e("a") === ab("id"), "left_semi")
-        .join(ab, e("b") === ab("id"), "left_semi"), eager = false)
-      aliveCnt = alive.count()
-      eCnt = e.count()
+      val (a2, nAlive) = Superstep.counted(alive.join(winners, Seq("id"), "left_anti")
+        .join(dead, Seq("id"), "left_anti"))
+      alive = a2; aliveCnt = nAlive
+      val ab = Superstep.small(alive, aliveCnt)
+      val (e2, nE) = Superstep.counted(e.join(ab, e("a") === ab("id"), "left_semi")
+        .join(ab, e("b") === ab("id"), "left_semi"))
+      e = e2; eCnt = nE
       r += 1
     }
     if (eCnt > 0 && (alive == null || aliveCnt > 0)) {
-      // Sequential tail: greedy-by-id over the (b, a)-sorted stream (cut
-      // between sort and coalesce — the cover-tail lesson).
-      val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT")
-      val sortedE = cut(e.select("a", "b").orderBy("b", "a"))
-      val rdd = sortedE.coalesce(1).rdd.mapPartitions { it =>
-        val inMis = new java.util.HashMap[Long, java.lang.Boolean]()
-        val outRows = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        var curB = Long.MinValue
-        var open = false
-        var blocked = false
-        def flush(): Unit = if (open) {
-          inMis.put(curB, java.lang.Boolean.valueOf(!blocked))
-          if (!blocked) outRows += org.apache.spark.sql.Row(curB)
-        }
-        it.foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          if (!open || b != curB) { flush(); curB = b; open = true; blocked = false }
-          var ma = inMis.get(a)
-          if (ma == null) {
-            ma = java.lang.Boolean.TRUE
-            inMis.put(a, ma)
-            outRows += org.apache.spark.sql.Row(a)
-          }
-          if (ma.booleanValue()) blocked = true
-        }
-        flush()
-        outRows.iterator
-      }
-      out = out.unionByName(spark.createDataFrame(rdd, schema))
+      // Sequential tail: the lex MIS is exactly greedy color class 1 (a
+      // vertex takes color 1 iff no smaller neighbor has it), so the
+      // coloring tail's class 1 over the remaining edges IS their MIS.
+      out = out.unionByName(Coloring.tail(e, 0)
+        .filter(col("color") === 1).select("id"))
       // alive vertices with no remaining edges are trivially in the MIS
       // (when the loop never ran, alive ≡ support(e) and this set is
       // empty — alive == null skips it)
@@ -413,6 +363,7 @@ object Coloring {
     // "remV ≡ support(remE)", under which the tail's isolated-vertex set
     // is empty by construction and the support distinct+cut is skipped.
     var remV: DataFrame = null
+    var nRemV = 0L
     if (cnt > localThreshold)
       remV = cut(remE.select(col("a").as("id"))
         .unionAll(remE.select(col("b").as("id"))).distinct(), eager = false)
@@ -423,61 +374,20 @@ object Coloring {
       val isolated = remV.join(supp, Seq("id"), "left_anti")
       val layer = cut(mis.unionAll(isolated), eager = false)
       out = out.unionByName(layer.select(col("id"), lit(c).as("color")))
-      remV = cut(remV.join(layer, Seq("id"), "left_anti"), eager = false)
+      val (v2, nV) = Superstep.counted(remV.join(layer, Seq("id"), "left_anti"))
+      remV = v2; nRemV = nV
       // remV shrinks by only ONE MIS layer per iteration and can stay
       // ~|V| for many layers — guard the hint like Mis.greedy/Densest.peel
       // (a cut frame has no stats, so AQE can't pick broadcast itself,
       // but an O(V) remainder must take the shuffle semi-join).
-      val rb = if (remV.count() <= 4000000) broadcast(remV) else remV
-      remE = cut(remE.join(rb, remE("a") === rb("id"), "left_semi")
-        .join(rb, remE("b") === rb("id"), "left_semi"), eager = false)
-      cnt = remE.count()
+      val rb = Superstep.small(remV, nRemV)
+      val (e2, nE) = Superstep.counted(remE.join(rb, remE("a") === rb("id"), "left_semi")
+        .join(rb, remE("b") === rb("id"), "left_semi"))
+      remE = e2; cnt = nE
       c += 1
     }
     if (cnt > 0) {
-      // Sequential tail as a STREAMING mex pass: edges arrive sorted by
-      // (b, a) — distributed Tungsten sort, cut before coalesce(1) (the
-      // cover-tail lesson: `orderBy(...).coalesce(1)` collapses the sort
-      // into one partition) — so each vertex's smaller-neighbor group is
-      // contiguous and every smaller endpoint is already resolved when
-      // its group arrives: a vertex first seen as `a` that was never a
-      // `b` has no smaller neighbors (its smaller-edges would have keyed
-      // to an earlier group) ⇒ color 1 on sight. One O(E) scan, one
-      // color map, no adjacency materialization.
-      val base = c - 1
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, color INT")
-      val sortedE = cut(remE.select("a", "b").orderBy("b", "a"))
-      val rdd = sortedE.coalesce(1).rdd.mapPartitions { it =>
-        val color = new java.util.HashMap[Long, Integer]()
-        val outRows = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        val used = new java.util.HashSet[Int]()
-        var curB = Long.MinValue
-        var open = false
-        def flush(): Unit = if (open) {
-          var k = 1
-          while (used.contains(k)) k += 1
-          color.put(curB, k)
-          outRows += org.apache.spark.sql.Row(curB, base + k)
-          used.clear()
-        }
-        it.foreach { row =>
-          val a = row.getLong(0); val b = row.getLong(1)
-          if (!open || b != curB) { flush(); curB = b; open = true }
-          var ca = color.get(a)
-          if (ca == null) {
-            ca = Integer.valueOf(1)
-            color.put(a, ca)
-            outRows += org.apache.spark.sql.Row(a, base + 1)
-          }
-          used.add(ca.intValue())
-        }
-        flush()
-        outRows.iterator
-      }
-      val tail = spark.createDataFrame(rdd, schema)
-      out = out.unionByName(tail)
+      out = out.unionByName(tail(remE, c - 1))
       // remaining vertices with no remaining edges take the first free
       // color (empty by construction when the loop never ran: remV ≡
       // support(remE) then — remV == null skips the two-distinct anti-join)
@@ -488,10 +398,50 @@ object Coloring {
           .select(col("id"), lit(c).as("color"))
         out = out.unionByName(iso)
       }
-    } else if (remV != null && !remV.isEmpty) {
+    } else if (nRemV > 0) {
       // edges exhausted but vertices remain (all isolated): one layer
       out = out.unionByName(remV.select(col("id"), lit(c).as("color")))
     }
     cut(out).orderBy("id")
   }
+
+  /** Sequential greedy coloring of support(`e`) (a, b; canonical a < b) in
+    * ascending id order, colors numbered from `base` + 1 — as a STREAMING
+    * mex pass: edges arrive sorted by (b, a), so each vertex's
+    * smaller-neighbor group is contiguous and every smaller endpoint is
+    * already resolved when its group arrives: a vertex first seen as `a`
+    * that was never a `b` has no smaller neighbors (its smaller-edges
+    * would have keyed to an earlier group) ⇒ color 1 on sight. One O(E)
+    * scan, one color map, no adjacency materialization. Class `base` + 1
+    * is the lexicographic MIS of support(`e`) — [[Mis]]'s tail. */
+  private[graph] def tail(e: DataFrame, base: Int): DataFrame =
+    Superstep.inOneTask(e.select("a", "b"), "id BIGINT, color INT",
+        col("b"), col("a")) { it =>
+      val color = new java.util.HashMap[Long, Integer]()
+      val outRows = scala.collection.mutable.ArrayBuffer
+        .empty[org.apache.spark.sql.Row]
+      val used = new java.util.HashSet[Int]()
+      var curB = Long.MinValue
+      var open = false
+      def flush(): Unit = if (open) {
+        var k = 1
+        while (used.contains(k)) k += 1
+        color.put(curB, k)
+        outRows += org.apache.spark.sql.Row(curB, base + k)
+        used.clear()
+      }
+      it.foreach { row =>
+        val a = row.getLong(0); val b = row.getLong(1)
+        if (!open || b != curB) { flush(); curB = b; open = true }
+        var ca = color.get(a)
+        if (ca == null) {
+          ca = Integer.valueOf(1)
+          color.put(a, ca)
+          outRows += org.apache.spark.sql.Row(a, base + 1)
+        }
+        used.add(ca.intValue())
+      }
+      flush()
+      outRows.iterator
+    }
 }

@@ -104,11 +104,9 @@ object PairCC {
         // limit-1 early-out: we only need moved-or-not, not how many.
         moving = next.join(lbl.select(col("id"), col("lbl").as("prev")), "id")
           .filter(col("lbl") =!= col("prev")).limit(1).count() > 0
-        require(!(moving && r == maxPass),
-          s"PairCC: labels still moving after $rounds hook+jump rounds " +
-            "plus a confirming pass — " +
-            "the pair graph's diameter exceeds the round budget; " +
-            "raise maxRounds")
+        // the probe stops at one moved label, so `live` reads 1
+        if (moving) Superstep.cap("PairCC.labelsConverged (the pair " +
+          "graph's diameter exceeds maxRounds)", r, rounds, 1)
       }
       lbl = next
     }

@@ -776,9 +776,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   lazy val stronglyConnectedComponents: DataFrame = {
     val sp = spark; import sp.implicits._
     sccBuilt = true
-    var e = graft.util.cut(
+    var (e, n) = Superstep.counted(
       edges.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
-    var n = e.count()
     var rounds = 0
     while (n > 0 && rounds < 16) {
       // vertices with BOTH an out-edge and an in-edge in the remaining set
@@ -787,10 +786,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         .groupBy("id").agg(max("o").as("o"), max("i").as("i"))
         .filter(col("o") === 1 && col("i") === 1)
         .select("id")
-      val e2 = graft.util.cut(
+      val (e2, n2) = Superstep.counted(
         e.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
           .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-      val n2 = e2.count()
       if (n2 == n) { rounds = 16 } else { e = e2; n = n2; rounds += 1 }
     }
     val coreLbl: DataFrame =
@@ -1162,13 +1160,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       // quantized normalization is inherently sequential — but strips each
       // to the minimal job). The max value is bit-identical to the old
       // aggregate's, so the quantized oracle replay is unchanged.
-      val obs = org.apache.spark.sql.Observation()
-      val raw = graft.util.cut(
+      val (raw, st) = Superstep.round(
         e.join(vhint(scores.withColumnRenamed("id", in)), in)
           .groupBy(out).agg(sum(inScore).as("raw"))
-          .withColumnRenamed(out, "id")
-          .observe(obs, max(col("raw")).as("mx")), eager = true)
-      val mx = obs.get("mx").asInstanceOf[Long]
+          .withColumnRenamed(out, "id"), max(col("raw")).as("mx"))
+      // an empty half's max is null: it reads as 0 (scale 1)
+      val mx = if (st.isNullAt(0)) 0L else st.getLong(0)
       val scale = math.max(mx / U, 1L)
       raw.selectExpr("id", s"raw div ${scale}L AS $outScore")
     }
@@ -1342,8 +1339,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // the fixed-round oracle still lands on the identical table.
     val cap = if (k <= 3) 1 else rounds
     for (_ <- 1 to cap if !done) {
-      out = graft.util.cut(t.join(trussSupport(t), Seq("a", "b"))
+      val (live, n) = Superstep.counted(t.join(trussSupport(t), Seq("a", "b"))
         .filter(col("support") >= k - 2))
+      out = live
       // EXACT early exit: the peel is monotone (each round only removes
       // edges), so an unchanged survivor COUNT means an identical edge
       // set, whose support recomputation — and every further round — is a
@@ -1351,7 +1349,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       // lands on the same table; this just skips re-enumerating a
       // converged triangle mass (the fixture converges in round 1 at
       // every SF — a third of the key's cost was inert re-enumeration).
-      val n = out.count()
       if (n == prevN) done = true
       prevN = n
       t = out.select("a", "b")

@@ -489,9 +489,8 @@ object GraphOps extends OpModule {
             t.join(g.vhint(blocked), Seq("id"), "left_semi"), eager = false)
         }
         while (n > 0) {
-          require(layer <= 32,
-            s"topo depth cap: DAG deeper than 32 layers (raise the cap); " +
-              "an actual cycle is caught by the no-progress check below")
+          // depth cap (a cycle is caught by the no-progress check below)
+          graft.graph.Superstep.cap("graph_topo_layers", layer, 32, n)
           // TWO peels per driver barrier (guide §2.4 — the count() was the
           // only job per layer, so K layers cost K scheduling round-trips;
           // pairing them halves that). If the first peel of a pair already

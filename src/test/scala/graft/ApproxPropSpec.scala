@@ -218,6 +218,19 @@ class ApproxPropSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(1), r.getLong(2), r.getInt(3)))
       assert(peel.count(_._3 == 1) == 1)
       assert(peel.head._1 == support.size && peel.head._2 == edges.size)
+
+      // BSP only (threshold 0) and tail only (threshold max) agree
+      def ids(t: Long) =
+        graph.Mis.greedy(df, localThreshold = t).collect().map(_.getLong(0)).toSeq
+      assert(ids(0L) == ids(Long.MaxValue), "Mis: BSP vs tail")
+      def colors(t: Long) = graph.Coloring.greedy(df, localThreshold = t)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq
+      assert(colors(0L) == colors(Long.MaxValue), "Coloring: BSP vs tail")
+      def cover(t: Long) = graph.Matching.maximalMatching(wdf, localThreshold = t)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val mm = cover(0L)
+      assert(mm == cover(Long.MaxValue), "maximalMatching: BSP vs tail")
+      assert(mm == m.toSet, "maximalMatching's edge set differs from greedy's")
     }
   }
 }
