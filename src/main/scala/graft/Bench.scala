@@ -1,10 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** The harness SparkSession every benchmark main shares (Bench itself and
-    * ScaleBench): local[cpus], AQE on, 64 MB broadcast threshold, tmpfs
-    * shuffle scratch. One builder so a scale run measures the same engine
-    * configuration the per-round bench does. */
+  /** The harness SparkSession every measuring entry point shares (Bench,
+    * ScaleBench, Probe and perfbench): local[cpus], AQE on, 64 MB broadcast
+    * threshold, tmpfs shuffle scratch. One builder so every measurement
+    * sees the same engine configuration the per-round bench does. */
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -275,7 +275,7 @@ object ScaleBench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** min-of-2 per key (same protocol as Bench's >2.5 s re-measure rule,
+  /** min-of-2 per key (same protocol as Bench's >1.0 s re-measure rule,
     * applied unconditionally here — the paired ratio is the signal and a
     * single GC pause would poison it). */
   def time(spark: SparkSession, dir: String, keys: Seq[String])
@@ -373,97 +373,8 @@ object ScaleBench {
     System.out.flush()
   }
 
-  /** Targeted key probe: `ScaleBench probe [baseDir] [K] keys...` —
-    * builds the K× blow-up, warms ONLY the graph build (not the full
-    * artifact suite: a single-key A/B should not pay 18 minutes of
-    * unrelated warmup), and times the given keys min-of-2 paired
-    * base-vs-scaled. For spot-checking one operator's scaling after a
-    * change without re-running the whole curve. */
-  def probeMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val keys = args.drop(2).toSeq
-    require(keys.nonEmpty, "probe mode needs explicit keys")
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val out = Staging.dir(s"scale-x$k")
-    build(spark, base, out, k)
-    Seq(base, out).foreach(d =>
-      graft.graph.GraphFixture(spark, d).edges.count())
-    keys.foreach { q => once(spark, base, q); once(spark, out, q) } // JIT
-    val rows = keys.map { q =>
-      val b = math.min(once(spark, base, q), once(spark, base, q))
-      val s = math.min(once(spark, out, q), once(spark, out, q))
-      s""""$q":{"base":${f"$b%.2f"},"scaled":${f"$s%.2f"},""" +
-        s""""ratio":${f"${s / b}%.2f"}}"""
-    }.mkString(",")
-    spark.stop()
-    println(s"""{"metric":"scale_probe","k":$k,$rows}""")
-    System.out.flush()
-  }
-
-  /** Cold-build probe: `ScaleBench probecold [baseDir] [K] keys...` —
-    * times each key's FIRST execution per dir (no JIT pre-run, no
-    * min-of-2), base then scaled. For keys whose first run builds a
-    * memoized ingest artifact (the ANN views, stored labelings): the
-    * warmed re-run that `probe` measures hides exactly the cost an
-    * ingest stage pays. JIT/class-load noise (~5 s) rides on the first
-    * key — order the list so the key under study is not first, or accept
-    * the bias when the effect under study is 10×+ that size. */
-  def probeColdMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val keys = args.drop(2).toSeq
-    require(keys.nonEmpty, "probecold mode needs explicit keys")
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val out = Staging.dir(s"scale-x$k")
-    build(spark, base, out, k)
-    Seq(base, out).foreach(d =>
-      graft.graph.GraphFixture(spark, d).edges.count())
-    val rows = keys.map { q =>
-      val b = once(spark, base, q)
-      val s = once(spark, out, q)
-      s""""$q":{"base_cold":${f"$b%.2f"},"scaled_cold":${f"$s%.2f"},""" +
-        s""""ratio":${f"${s / b}%.2f"}}"""
-    }.mkString(",")
-    spark.stop()
-    println(s"""{"metric":"scale_probe_cold","k":$k,$rows}""")
-    System.out.flush()
-  }
-
-  /** Output-cardinality attribution: `ScaleBench probecount [baseDir] [K]
-    * keys...` — counts each key's RESULT rows base vs K×-scaled. When a
-    * probe-mode time ratio tracks the output-row ratio, the cost is the
-    * answer getting bigger (path enumeration, pattern matches), not a
-    * super-linear plan — the evidence SCALE.md cites for the walk keys. */
-  def probeCountMain(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val keys = args.drop(2).toSeq
-    require(keys.nonEmpty, "probecount mode needs explicit keys")
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val out = Staging.dir(s"scale-x$k")
-    build(spark, base, out, k)
-    val rows = keys.map { q =>
-      val b = SparkEntry.queries(q)(spark, base).count()
-      val s = SparkEntry.queries(q)(spark, out).count()
-      s""""$q":{"base_rows":$b,"scaled_rows":$s,""" +
-        s""""row_ratio":${f"${s.toDouble / math.max(b, 1)}%.2f"}}"""
-    }.mkString(",")
-    spark.stop()
-    println(s"""{"metric":"scale_probe_rows","k":$k,$rows}""")
-    System.out.flush()
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("skew")) return skewMain(args.drop(1))
-    if (args.headOption.contains("probe")) return probeMain(args.drop(1))
-    if (args.headOption.contains("probecount"))
-      return probeCountMain(args.drop(1))
-    if (args.headOption.contains("probecold"))
-      return probeColdMain(args.drop(1))
     val base = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)

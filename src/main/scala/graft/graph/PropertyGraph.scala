@@ -1509,22 +1509,17 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // LogicalRDD reports UnknownPartitioning (verified round 2 — both
     // groupBys grew real Exchanges and the query doubled in time), while
     // InMemoryRelation preserves the repartition's HashPartitioning.
-    val sp = spark
     val und = undByA
-    // The label map is vertex-sized; broadcast it so the edge side never
-    // moves and the join preserves und's partitioning (checkpointed
-    // generations are LogicalRDDs with unknown stats, so WITHOUT the hint
-    // the planner assumes huge and sort-merge-joins — shuffling the edge
-    // list AND losing the partitioning, measured ~1.5× the whole query).
-    // At cluster scale where the vertex map outgrows broadcast, set
-    // graft.graph.broadcastLabels=false: label side shuffles (vertex-sized
-    // — the cheap side), edges still never move.
-    val bcastLabels =
-      sp.conf.getOption("graft.graph.broadcastLabels").forall(_.toBoolean)
-    def hint(df: DataFrame): DataFrame = if (bcastLabels) broadcast(df) else df
+    // The label map has exactly |V| rows; broadcast it (vhint) so the edge
+    // side never moves and the join preserves und's partitioning
+    // (checkpointed generations are LogicalRDDs with unknown stats, so
+    // WITHOUT the hint the planner assumes huge and sort-merge-joins —
+    // shuffling the edge list AND losing the partitioning, measured ~1.5×
+    // the whole query). Where |V| × 48 B outgrows the session's broadcast
+    // threshold, vhint leaves the map unhinted and the planner shuffles.
     var lbl = vertices.select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to iters) {
-      val pick = und.join(hint(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
+      val pick = und.join(vhint(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
         .groupBy(col("a").as("id"), col("l")).agg(count(lit(1)).as("n"))
         .groupBy("id").agg(max(struct(col("n"), (-col("l")).as("negl"))).as("m"))
         .select(col("id"), (-col("m.negl")).as("l"))

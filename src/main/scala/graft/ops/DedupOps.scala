@@ -19,19 +19,6 @@ import textsql._
   * more than one bucket's pairs in an executor at a time. */
 object DedupOps extends OpModule {
 
-  /** Dev observability (r17 verdict ask): per-batch physical plans of the
-    * streaming maintain keys are invisible to the Explain tool (it only
-    * sees the terminal frame over fully-cut state), so with
-    * `graft.debug.batchPlans=true` each batch's key frames print their
-    * formatted plan to stderr before materialization. Off by default. */
-  private def dumpBatchPlan(tag: String, df: org.apache.spark.sql.DataFrame): Unit =
-    if (df.sparkSession.conf.getOption("graft.debug.batchPlans")
-        .orElse(df.sparkSession.conf.getOption("spark.graft.debug.batchPlans"))
-        .contains("true"))
-      System.err.println(s"==== batch plan: $tag ====\n" +
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-
   /** Band signature (doc_id, b0, b1) for the docs in `docsRel` — the
     * per-batch step of the streaming dedup-index maintenance; same hash
     * family and band layout as [[minhashCtes]], Spark dialect only. */
@@ -799,10 +786,8 @@ object DedupOps extends OpModule {
           graft.util.fan(bs.sql(candDocsSql), col("doc_id"))
             .createOrReplaceTempView("mh_cdocs")
           val shDf = bs.sql(candShinglesSql)
-          dumpBatchPlan("mhm_cand_shingles", shDf)
           graft.util.cut(shDf).createOrReplaceTempView("mh_sh")
           val verDf = bs.sql(candVerifySql)
-          dumpBatchPlan("mhm_verify", verDf)
           // pairs state is pure append too: cut the batch's verified
           // delta only (it is consumed by the next batch's anti-join and
           // the terminal), never the accumulated set
@@ -1301,7 +1286,6 @@ object DedupOps extends OpModule {
               .otherwise(col("d"))).as("dup_toks"))
           val dupCnt2 = dupCnt.join(affected, Seq("doc_id"), "left_anti")
             .unionAll(cov)
-          dumpBatchPlan("ssm_dupcnt", dupCnt2)
           dupCnt = graft.util.cut(dupCnt2)
           // same union-of-checkpoints shape: cut the BATCH delta only,
           // never the accumulated doc-stats state

@@ -29,4 +29,10 @@ object GraftBridge {
       ck.sparkSession)
     classic.Dataset.ofRows(ck.sparkSession, plan)
   }
+
+  /** Blocks until every listener has handled the events posted so far
+    * (`waitUntilEmpty` is private[spark]): read listener counts after this,
+    * never after a sleep. */
+  def drain(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -35,8 +35,8 @@ class SuperstepSpec extends AnyFunSuite {
       assert(row.getLong(0) == wantN)
       assert(row.getLong(1) == wantMax)
       assert(cutDf.count() == wantN)
-      // listener events are async; give the bus a beat to drain
-      Thread.sleep(500)
+      // listener events are async: wait until the bus has delivered them
+      org.apache.spark.sql.GraftBridge.drain(spark)
       assert(jobs.get() == 1, s"round ran ${jobs.get()} jobs")
     } finally sc.removeSparkListener(listener)
 

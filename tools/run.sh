@@ -1,5 +1,5 @@
 #!/bin/bash
-# Direct runner for graft mains (Bench/Verify/ScaleBench/...) — same JVM
+# Direct runner for graft mains (Bench/Verify/ScaleBench/Probe) — same JVM
 # flags build.sbt forks with, but without holding the sbt lock, so
 # measurement runs and compiles can overlap. Usage: tools/run.sh <MainClass> [args...]
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
