@@ -15,15 +15,25 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Dev runner: how many jobs, which joins and which plans a registered key
   * runs. Usage: `runMain graft.Probe <sfDir> <key>[,key...] [K]`.
   *
-  * Runs under [[Bench.session]] WITHOUT [[Bench.warmup]], so run1 is the
-  * cold cost, lazy artifact builds included. Each key runs twice with
-  * `count()`; per key and directory it prints one JSON line to stdout — both runs' seconds, jobs, stages, tasks
-  * and query executions, the result rows, and run2's join operators summed
-  * over every query execution of the run (cuts, checkpoints and streaming
-  * micro-batch frames included, not only the terminal frame) — and run2's
-  * executed plans to stderr in formatted mode, one header per execution.
+  * Runs under [[Bench.session]] WITHOUT [[Bench.warmup]]. Each key runs
+  * twice with `count()`, the action the recorded job tables counted, and
+  * then once more with `collect()` of the key's own frame — the action the
+  * benchmark runs — whose plans are printed and whose jobs are not
+  * counted. Per key and directory it prints one JSON line to stdout: both
+  * count runs' seconds, jobs, stages, tasks and query executions, the
+  * result rows, and the join operators summed over every query execution
+  * of the collect pass (cuts, checkpoints and streaming micro-batch frames
+  * included, and the terminal plan of the key's result). Those executed
+  * plans go to stderr in formatted mode, one header per execution.
   * With K it also writes the K× blow-up ([[ScaleBench.build]]) and repeats
-  * the lines for it. */
+  * the lines for it.
+  *
+  * run1 is the cold cost, lazy artifact builds included, only for the
+  * first key on the base directory: later keys and the K× pass reuse the
+  * artifacts and cached frames built before them in the session, so run2
+  * can depend on the keys listed before it (graph_densest reads 18 jobs
+  * alone and 17 once `undDegrees` is cached). To compare counts across
+  * commits, probe one key per JVM. */
 object Probe {
 
   /** One run of a key: wall seconds, the Spark jobs started, the stages
@@ -31,10 +41,14 @@ object Probe {
   final case class Run(sec: Double, jobs: Long, stages: Long, tasks: Long,
       execs: Int)
 
-  /** One measured key: both runs, run2's result rows, run2's join
-    * operators and run2's executions as (action name, formatted plan). */
+  /** One query execution: its action (`count`, `collect`,
+    * `localCheckpoint`, ...), the output columns and the formatted plan. */
+  final case class Exec(action: String, columns: Seq[String], plan: String)
+
+  /** One measured key: both count runs, run2's result rows, and the join
+    * operators and executions of the collect pass. */
   final case class Record(key: String, dir: String, run1: Run, run2: Run,
-      rows: Long, joins: Seq[(String, Int)], plans: Seq[(String, String)])
+      rows: Long, joins: Seq[(String, Int)], plans: Seq[Exec])
 
   private val JoinNames = Seq("bhj", "smj", "shj", "bnlj", "cartesian")
 
@@ -56,11 +70,11 @@ object Probe {
       here ++ (p.children ++ p.subqueries).flatMap(joinsOf)
   }
 
-  /** Runs `key` on `dir` twice with one SparkListener and one
-    * QueryExecutionListener registered, and unregisters both before it
-    * returns. Query executions of a streaming key's micro-batches are
-    * seen too: a stream's session is cloned with the listeners registered
-    * at its start. */
+  /** Runs `key` on `dir` twice with `count()` and once with `collect()`,
+    * with one SparkListener and one QueryExecutionListener registered, and
+    * unregisters both before it returns. Query executions of a streaming
+    * key's micro-batches are seen too: a stream's session is cloned with
+    * the listeners registered at its start. */
   def measure(spark: SparkSession, key: String, dir: String): Record = {
     val jobs, stages, tasks = new AtomicLong(0)
     val execs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
@@ -94,11 +108,19 @@ object Probe {
       }
       val (run1, _) = run()
       val (run2, rows) = run()
+      // count() plans a pruned aggregate over the key's frame (empty scan
+      // schemas, no final sort, other join sizes); the plans of its result
+      // are those of collect()
+      execs.clear()
+      SparkEntry.queries(key)(spark, dir).collect()
+      GraftBridge.drain(spark)
       val qes = execs.asScala.toVector
       val all = qes.flatMap { case (_, qe) => joinsOf(qe.executedPlan) }
       Record(key, dir, run1, run2, rows,
         JoinNames.map(j => j -> all.count(_ == j)),
-        qes.map { case (f, qe) => f -> qe.explainString(FormattedMode) })
+        qes.map { case (f, qe) =>
+          Exec(f, qe.analyzed.output.map(_.name), qe.explainString(FormattedMode))
+        })
     } finally {
       spark.sparkContext.removeSparkListener(sched)
       spark.listenerManager.unregister(plans)
@@ -124,9 +146,9 @@ object Probe {
     }
     for (key <- keys; dir <- dirs) {
       val r = measure(spark, key, dir)
-      r.plans.zipWithIndex.foreach { case ((f, plan), i) =>
-        System.err.println(
-          s"==== $key $dir run2 execution ${i + 1}/${r.plans.size}: $f ====\n$plan")
+      r.plans.zipWithIndex.foreach { case (e, i) =>
+        System.err.println(s"==== $key $dir execution ${i + 1}/${r.plans.size}: " +
+          s"${e.action} [${e.columns.mkString(", ")}] ====\n${e.plan}")
       }
       println(json(r))
       System.out.flush()

@@ -1510,16 +1510,16 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // groupBys grew real Exchanges and the query doubled in time), while
     // InMemoryRelation preserves the repartition's HashPartitioning.
     val und = undByA
-    // The label map has exactly |V| rows; broadcast it (vhint) so the edge
-    // side never moves and the join preserves und's partitioning
-    // (checkpointed generations are LogicalRDDs with unknown stats, so
-    // WITHOUT the hint the planner assumes huge and sort-merge-joins —
-    // shuffling the edge list AND losing the partitioning, measured ~1.5×
-    // the whole query). Where |V| × 48 B outgrows the session's broadcast
-    // threshold, vhint leaves the map unhinted and the planner shuffles.
+    // The label map is vertex-sized; broadcast it so the edge side never
+    // moves and the join preserves und's partitioning (checkpointed
+    // generations are LogicalRDDs with unknown stats, so WITHOUT the hint
+    // the planner assumes huge and sort-merge-joins — shuffling the edge
+    // list AND losing the partitioning, measured ~1.5× the whole query).
+    // The hint is unconditional: where |V| outgrows broadcast, any
+    // replacement must be measured against this plan first (ROADMAP).
     var lbl = vertices.select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to iters) {
-      val pick = und.join(vhint(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
+      val pick = und.join(broadcast(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
         .groupBy(col("a").as("id"), col("l")).agg(count(lit(1)).as("n"))
         .groupBy("id").agg(max(struct(col("n"), (-col("l")).as("negl"))).as("m"))
         .select(col("id"), (-col("m.negl")).as("l"))

@@ -2,13 +2,12 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.GraftBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.Probe's per-key measurement: stable listener counts, the key's
-  * real row count, every query execution of a run (loop checkpoints and
-  * streaming micro-batch frames, not only the terminal frame), and no
-  * listener left behind. */
+  * real row count, every query execution of the collect pass (loop
+  * checkpoints, streaming micro-batch frames and the result's own plan),
+  * and no listener left behind. */
 class ProbeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
@@ -26,36 +25,37 @@ class ProbeSpec extends AnyFunSuite {
     (sched ++ qe).map(_.getClass.getName).filter(_.startsWith("graft.Probe"))
   }
 
-  test("graph_hits: run2 counts repeat, rows match, each half-round checkpoint is captured") {
+  test("graph_hits: run2 counts repeat, rows match, each half-round checkpoint and the result's plan are captured") {
     val a = Probe.measure(spark, "graph_hits", sf)
     val b = Probe.measure(spark, "graph_hits", sf)
     def counts(r: Probe.Run) = (r.jobs, r.stages, r.tasks)
     assert(counts(a.run2) == counts(b.run2))
     assert(a.run2.jobs > 0)
-    assert(a.rows == SparkEntry.queries("graph_hits")(spark, sf).count())
+    val frame = SparkEntry.queries("graph_hits")(spark, sf)
+    assert(a.rows == frame.count())
     // HITS runs >= 6 half-rounds through Superstep.round (an eager cut)
-    val checkpoints = a.plans.count(_._1 == "localCheckpoint")
+    val checkpoints = a.plans.count(_.action == "localCheckpoint")
     assert(checkpoints >= 6, s"$checkpoints checkpoint executions")
-    assert(a.plans.size == a.run2.execs)
-    assert(a.plans.forall(_._2.contains("Physical Plan")))
-
-    // listeners are gone: none is registered, and a further query leaves
-    // the record as it was
+    // the last execution is the key's own result, collected, not count()'s
+    // pruned aggregate
+    assert(a.plans.last.action == "collect")
+    assert(a.plans.last.columns == frame.columns.toSeq)
+    assert(a.plans.forall(_.plan.contains("Physical Plan")))
     assert(probeListeners.isEmpty, probeListeners)
-    val before = a.copy()
-    SparkEntry.queries("graph_hits")(spark, sf).count()
-    GraftBridge.drain(spark)
-    assert(a == before)
   }
 
-  test("stream_minhash_maintain: every micro-batch's executions are captured") {
+  test("stream_minhash_maintain: every micro-batch's verify cut is captured") {
     val key = "stream_minhash_maintain"
     val before = streaming.Maintain.batches(key)
+    val rows = SparkEntry.queries(key)(spark, sf).count()
+    val perRun = streaming.Maintain.batches(key) - before
+    assert(perRun >= 2, s"one run folded $perRun batches")
     val r = Probe.measure(spark, key, sf)
-    val grown = streaming.Maintain.batches(key) - before
-    assert(grown >= 4, s"two runs folded $grown batches")
-    assert(r.run1.execs + r.run2.execs >= grown,
-      s"${r.run1.execs} + ${r.run2.execs} executions for $grown batches")
-    assert(r.rows == SparkEntry.queries(key)(spark, sf).count())
+    // the verified delta each batch cuts (the frame the old per-batch
+    // plan dump tagged mhm_verify)
+    val verify = r.plans.count(e => e.action == "localCheckpoint" &&
+      e.columns == Seq("da", "db", "n_common", "jaccard"))
+    assert(verify == perRun, s"$verify verify cuts for $perRun batches")
+    assert(r.rows == rows)
   }
 }
