@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -18,45 +18,60 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Runs under [[Bench.session]] WITHOUT [[Bench.warmup]]. Each key runs
   * twice with `count()`, the action the recorded job tables counted, and
   * then once more with `collect()` of the key's own frame — the action the
-  * benchmark runs — whose plans are printed and whose jobs are not
-  * counted. Per key and directory it prints one JSON line to stdout: both
-  * count runs' seconds, jobs, stages, tasks and query executions, the
-  * result rows, and the join operators summed over every query execution
-  * of the collect pass (cuts, checkpoints and streaming micro-batch frames
-  * included, and the terminal plan of the key's result). Those executed
-  * plans go to stderr in formatted mode, one header per execution.
+  * benchmark runs — whose jobs are not counted. Per key and directory it
+  * prints one JSON line to stdout: both count runs' seconds, jobs,
+  * stages, tasks, query executions, task CPU and shuffle bytes written,
+  * the result rows, and the operator counts (joins by strategy, shuffle
+  * exchanges, sorts) summed over every query execution of run1, of run2
+  * and of the collect pass (cuts, checkpoints and streaming micro-batch
+  * frames included, and the terminal plan of the key's result). The
+  * executed plans of run1 and of the collect pass go to stderr in
+  * formatted mode, one header per execution: run1's are the only ones
+  * that show a lazily built artifact's plans (by the collect pass it is
+  * cached), the collect pass's are the plans the benchmark runs.
   * With K it also writes the K× blow-up ([[ScaleBench.build]]) and repeats
   * the lines for it.
   *
   * run1 is the cold cost, lazy artifact builds included, only for the
   * first key on the base directory: later keys and the K× pass reuse the
   * artifacts and cached frames built before them in the session, so run2
-  * can depend on the keys listed before it (graph_densest reads 18 jobs
-  * alone and 17 once `undDegrees` is cached). To compare counts across
+  * can depend on the keys listed before it. To compare counts across
   * commits, probe one key per JVM. */
 object Probe {
 
-  /** One run of a key: wall seconds, the Spark jobs started, the stages
-    * completed and their tasks, and the query executions it made. */
-  final case class Run(sec: Double, jobs: Long, stages: Long, tasks: Long,
-      execs: Int)
-
   /** One query execution: its action (`count`, `collect`,
-    * `localCheckpoint`, ...), the output columns and the formatted plan. */
-  final case class Exec(action: String, columns: Seq[String], plan: String)
+    * `localCheckpoint`, ...), the output columns, the formatted plan and
+    * the counted operators of the executed plan. */
+  final case class Exec(action: String, columns: Seq[String], plan: String,
+      ops: Seq[String])
 
-  /** One measured key: both count runs, run2's result rows, and the join
-    * operators and executions of the collect pass. */
+  /** One run of a key: wall seconds, the Spark jobs started, the stages
+    * completed and their tasks, the completed stages' executor CPU
+    * seconds and shuffle bytes written, and the query executions it made. */
+  final case class Run(sec: Double, jobs: Long, stages: Long, tasks: Long,
+      cpuSec: Double, shuffleBytes: Long, plans: Seq[Exec]) {
+    def execs: Int = plans.size
+    def ops: Seq[(String, Int)] = opCounts(plans)
+  }
+
+  /** One measured key: both count runs, run2's result rows, and the
+    * executions of the collect pass. */
   final case class Record(key: String, dir: String, run1: Run, run2: Run,
-      rows: Long, joins: Seq[(String, Int)], plans: Seq[Exec])
+      rows: Long, plans: Seq[Exec]) {
+    def ops: Seq[(String, Int)] = opCounts(plans)
+  }
 
-  private val JoinNames = Seq("bhj", "smj", "shj", "bnlj", "cartesian")
+  /** Counted operators: joins by strategy, shuffle exchanges (broadcast
+    * exchanges are not counted) and sorts. */
+  private val OpNames =
+    Seq("bhj", "smj", "shj", "bnlj", "cartesian", "exchange", "sort")
 
-  /** Join operators of an executed plan, following adaptive query stages
-    * and subqueries; a reused exchange is counted once, where it was built. */
-  private def joinsOf(p: SparkPlan): Seq[String] = p match {
-    case a: AdaptiveSparkPlanExec => joinsOf(a.executedPlan)
-    case q: QueryStageExec => joinsOf(q.plan)
+  /** Counted operators of an executed plan, following adaptive query
+    * stages and subqueries; a reused exchange is counted once, where it
+    * was built. */
+  private[graft] def opsOf(p: SparkPlan): Seq[String] = p match {
+    case a: AdaptiveSparkPlanExec => opsOf(a.executedPlan)
+    case q: QueryStageExec => opsOf(q.plan)
     case _: ReusedExchangeExec => Nil
     case _ =>
       val here = p match {
@@ -65,9 +80,17 @@ object Probe {
         case _: ShuffledHashJoinExec => Seq("shj")
         case _: BroadcastNestedLoopJoinExec => Seq("bnlj")
         case _: CartesianProductExec => Seq("cartesian")
+        case _: ShuffleExchangeExec => Seq("exchange")
+        case _: SortExec => Seq("sort")
         case _ => Nil
       }
-      here ++ (p.children ++ p.subqueries).flatMap(joinsOf)
+      here ++ (p.children ++ p.subqueries).flatMap(opsOf)
+  }
+
+  /** Each counted operator's total over `plans`. */
+  def opCounts(plans: Seq[Exec]): Seq[(String, Int)] = {
+    val all = plans.flatMap(_.ops)
+    OpNames.map(o => o -> all.count(_ == o))
   }
 
   /** Runs `key` on `dir` twice with `count()` and once with `collect()`,
@@ -76,7 +99,7 @@ object Probe {
     * key's micro-batches are seen too: a stream's session is cloned with
     * the listeners registered at its start. */
   def measure(spark: SparkSession, key: String, dir: String): Record = {
-    val jobs, stages, tasks = new AtomicLong(0)
+    val jobs, stages, tasks, cpuNs, shuffled = new AtomicLong(0)
     val execs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val sched = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -84,10 +107,16 @@ object Probe {
       }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
+        tasks.addAndGet(s.stageInfo.numTasks.toLong)
+        val m = s.stageInfo.taskMetrics
+        if (m != null) {
+          cpuNs.addAndGet(m.executorCpuTime)
+          shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        }
+        ()
       }
     }
-    val plans = new QueryExecutionListener {
+    val queries = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
         execs.add(f -> qe); ()
       }
@@ -96,43 +125,49 @@ object Probe {
       }
     }
     spark.sparkContext.addSparkListener(sched)
-    spark.listenerManager.register(plans)
+    spark.listenerManager.register(queries)
+    // the executions seen since the last call, in order
+    def drained(): Vector[Exec] = {
+      GraftBridge.drain(spark)
+      val out = execs.asScala.toVector.map { case (f, qe) =>
+        Exec(f, qe.analyzed.output.map(_.name),
+          qe.explainString(FormattedMode), opsOf(qe.executedPlan))
+      }
+      execs.clear()
+      out
+    }
     try {
       def run(): (Run, Long) = {
-        jobs.set(0); stages.set(0); tasks.set(0); execs.clear()
+        Seq(jobs, stages, tasks, cpuNs, shuffled).foreach(_.set(0))
         val t0 = System.nanoTime()
         val rows = SparkEntry.queries(key)(spark, dir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        GraftBridge.drain(spark)
-        (Run(sec, jobs.get(), stages.get(), tasks.get(), execs.size), rows)
+        val plans = drained()
+        (Run(sec, jobs.get(), stages.get(), tasks.get(), cpuNs.get() / 1e9,
+          shuffled.get(), plans), rows)
       }
       val (run1, _) = run()
       val (run2, rows) = run()
       // count() plans a pruned aggregate over the key's frame (empty scan
       // schemas, no final sort, other join sizes); the plans of its result
       // are those of collect()
-      execs.clear()
       SparkEntry.queries(key)(spark, dir).collect()
-      GraftBridge.drain(spark)
-      val qes = execs.asScala.toVector
-      val all = qes.flatMap { case (_, qe) => joinsOf(qe.executedPlan) }
-      Record(key, dir, run1, run2, rows,
-        JoinNames.map(j => j -> all.count(_ == j)),
-        qes.map { case (f, qe) =>
-          Exec(f, qe.analyzed.output.map(_.name), qe.explainString(FormattedMode))
-        })
+      Record(key, dir, run1, run2, rows, drained())
     } finally {
       spark.sparkContext.removeSparkListener(sched)
-      spark.listenerManager.unregister(plans)
+      spark.listenerManager.unregister(queries)
     }
   }
 
   private def json(r: Record): String = {
+    def ops(o: Seq[(String, Int)]) =
+      o.map { case (j, n) => s""""$j":$n""" }.mkString("{", ",", "}")
     def run(x: Run) = f"""{"s":${x.sec}%.3f,"jobs":${x.jobs},""" +
-      s""""stages":${x.stages},"tasks":${x.tasks},"execs":${x.execs}}"""
+      s""""stages":${x.stages},"tasks":${x.tasks},"execs":${x.execs},""" +
+      f""""cpu_s":${x.cpuSec}%.3f,"shuffle_mb":${x.shuffleBytes / 1e6}%.3f,""" +
+      s""""ops":${ops(x.ops)}}"""
     s"""{"key":"${r.key}","dir":"${r.dir}","rows":${r.rows},""" +
-      s""""run1":${run(r.run1)},"run2":${run(r.run2)},"joins":""" +
-      r.joins.map { case (j, n) => s""""$j":$n""" }.mkString("{", ",", "}}")
+      s""""run1":${run(r.run1)},"run2":${run(r.run2)},"ops":${ops(r.ops)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -146,10 +181,10 @@ object Probe {
     }
     for (key <- keys; dir <- dirs) {
       val r = measure(spark, key, dir)
-      r.plans.zipWithIndex.foreach { case (e, i) =>
-        System.err.println(s"==== $key $dir execution ${i + 1}/${r.plans.size}: " +
-          s"${e.action} [${e.columns.mkString(", ")}] ====\n${e.plan}")
-      }
+      for ((pass, plans) <- Seq("run1" -> r.run1.plans, "collect" -> r.plans);
+           (e, i) <- plans.zipWithIndex)
+        System.err.println(s"==== $key $dir $pass execution ${i + 1}/" +
+          s"${plans.size}: ${e.action} [${e.columns.mkString(", ")}] ====\n${e.plan}")
       println(json(r))
       System.out.flush()
     }

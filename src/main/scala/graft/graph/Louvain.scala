@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.cut
 
@@ -9,8 +8,8 @@ import graft.util.cut
   * et al. '08), in the synchronous-sweep form that distributes: every
   * sweep, ALL vertices simultaneously evaluate the standard Louvain gain
   * of moving into each neighboring community — computed against the
-  * PREVIOUS sweep's assignment, so a sweep is three equi-join/groupBy
-  * passes over the half-edge list, never a sequential scan — and move to
+  * PREVIOUS sweep's assignment, so a sweep is one join/groupBy pass over
+  * the half-edge list, never a sequential scan — and move to
   * the best strictly-improving community (ties → smallest community id).
   * Synchronous sweeps are the Louvain analog of graph_labelprop's
   * synchronous propagation: deterministic, BSP-shaped, and exactly
@@ -41,24 +40,32 @@ import graft.util.cut
   * moves twice), not a convergence loop: fixed sweeps make the unrolled
   * oracle finite and the cross-engine replay exact, the lp3 discipline.
   *
-  * Scale: each sweep = one half-edge × assignment join (edge-linear, the
-  * dominant shuffle), one community-degree aggregate (community-sized),
-  * one window pick partitioned by vertex (vertex-sized). Loop state is
-  * the (id, comm) frame, cut() once per sweep; degrees and 2m are
-  * sweep-invariant and computed once. */
+  * Scale: each sweep = one pass over the half-edge list that looks the
+  * neighbor's community up in the broadcast assignment (no edge shuffle),
+  * one candidate aggregate per (vertex, community), one community-degree
+  * aggregate and one per-vertex pick aggregate — three shuffles, all
+  * candidate-, community- or vertex-sized. Loop state is the (id, comm,
+  * deg) frame, cut() once per sweep; its row count and 2m are measured
+  * once with the degree frame, and decide the broadcast
+  * ([[Superstep.small]]) in every sweep. Unhinted, the stats-less
+  * assignment cut planned a sort-merge join that hash-shuffled the whole
+  * half-edge list by j every sweep before AQE saw the cut was small.
+  * Measured on the lu4 build at sf0.1 (local[4], 4 cores; graft.Probe
+  * run1 after graph_densest built the graph, two JVMs per side): jobs
+  * 52 → 32, shuffle exchanges per sweep 7 → 3, shuffle written 340 →
+  * 103 MB, task CPU 58 → 37–39 s, wall 25.2 → 17.3 s. */
 object Louvain {
 
   /** Run `sweeps` synchronous sweeps over undirected simple edges
-    * (columns a, b; canonical a < b, distinct). Returns (id, community)
-    * over the edge support, sorted by id. */
-  def oneLevel(und0: DataFrame, sweeps: Int): DataFrame = {
-    val und = cut(und0.select("a", "b"))
+    * (columns a, b; canonical a < b, distinct — the persisted
+    * [[PropertyGraph.undirectedEdges]], read as is). Returns (id,
+    * community) over the edge support, sorted by id. */
+  def oneLevel(und: DataFrame, sweeps: Int): DataFrame = {
     val half = und.select(col("a").as("i"), col("b").as("j"))
       .unionAll(und.select(col("b").as("i"), col("a").as("j")))
       .withColumn("w", lit(1L))
-    val deg = cut(half.groupBy("i").agg(count(lit(1)).as("deg"))
-      .withColumnRenamed("i", "id"))
-    weightedSweeps(half, deg, sweeps)
+    weightedSweeps(half,
+      half.groupBy(col("i").as("id")).agg(count(lit(1)).as("deg")), sweeps)
   }
 
   /** The sweep loop over an arbitrary WEIGHTED half-edge list — the
@@ -73,60 +80,51 @@ object Louvain {
     * DECIMAL(38,0) form — weights are edge counts. */
   def weightedSweeps(half: DataFrame, deg: DataFrame,
       sweeps: Int): DataFrame = {
-    // 2m: one 1-row scalar action, sweep-invariant.
-    val m2 = deg.agg(sum("deg")).head.getLong(0)
-    // NO broadcast hints on the vertex-sized sweep frames: driver-
-    // collected broadcast builds per sweep × 4 sweeps cost more than the
-    // sort-merge exchanges they replace (measured 15.3 → 19.2 s at sf0.1
-    // when hinted — the Mis/Coloring guard pattern pays off only for ONE
-    // shrinking frame per round, not several stable ones). AQE's runtime
-    // stats still broadcast the community-sized tot join dynamically.
-    // The loop state FUSES deg into the assignment frame (id, comm, deg):
-    // deg is sweep-invariant, and carrying it drops two per-sweep joins
-    // (the separate own/deg lookups) plus tot's deg join.
-    var c = cut(deg.select(col("id"), col("id").as("comm"), col("deg")))
+    // The degree frame, measured: its row count n (the assignment's, in
+    // every sweep) and 2m ride its materialization job.
+    val (d, row) =
+      Superstep.round(deg, count(lit(1)).as("n"), sum("deg").as("m2"))
+    val n = row.getLong(0)
+    val m2 = if (row.isNullAt(1)) 0L else row.getLong(1)
+    // The loop state carries deg beside the assignment (id, comm, deg):
+    // deg is sweep-invariant, and one broadcast lookup then serves both
+    // the neighbor's community and the vertex's own community and degree.
+    var c = d.select(col("id"), col("id").as("comm"), col("deg"))
     var t = 1
     while (t <= sweeps) {
       // Only this sweep's parity class evaluates moves (see scaladoc);
-      // the filter lands on the HALF-EDGE STREAM before the gain fold,
-      // so the sweep's dominant shuffle is half-sized too.
-      val elig = (col("i") + lit(t.toLong)) % 2 === 0
-      val kic = half.filter(elig)
-        .join(c.select(col("id").as("j"), col("comm").as("cc")), "j")
-        .groupBy("i", "cc").agg(sum("w").as("k"))
-      val tot = c.groupBy("comm").agg(sum("deg").as("tot"))
-      val own = c.select(col("id").as("i"), col("comm").as("own"),
-        col("deg")).filter(elig)
+      // the filter lands on the half-edge stream before the gain fold.
+      // t % 2, not t: sweeps 3-4 then reuse sweeps 1-2's generated code.
+      def parity(v: String) = (col(v) + lit(t % 2)) % 2
+      val bc = Superstep.small(c, n)
       // Own community is always a candidate (k_i,own may be 0 when no
-      // neighbor shares it) — the MAX(k) fold dedups it against kic.
-      val cand = kic
-        .unionByName(own.select(col("i"), col("own").as("cc"),
-          lit(0L).as("k")))
-        .groupBy("i", "cc").agg(max("k").as("k"))
-      val scored = cand
-        .join(own, "i")
-        .join(tot.withColumnRenamed("comm", "cc"), "cc")
-        .withColumn("score",
-          lit(m2).cast("decimal(38,0)") * col("k")
-            - col("deg").cast("decimal(38,0)") *
-              (col("tot") - when(col("cc") === col("own"), col("deg"))
-                .otherwise(lit(0L))))
-      // stay score via a WINDOW over the same per-vertex partitioning the
-      // pick below uses — NOT a scored⋈scored self-join: Spark INLINES a
-      // twice-referenced subplan, so the self-join form executed the
-      // whole sweep chain (kic + 3 joins) twice per sweep. Every i has
-      // exactly one cc = own row (cand unions it in), so the MAX is total.
-      val byI = Window.partitionBy("i")
-      val picked = scored
-        .withColumn("stay", max(when(col("cc") === col("own"),
-          col("score"))).over(byI))
-        .filter(col("cc") === col("own") || col("score") > col("stay"))
-        .withColumn("rn", row_number().over(
-          byI.orderBy(col("score").desc, col("cc"))))
-        .filter(col("rn") === 1)
-        .select(col("i").as("id"), col("cc").as("comm"), col("deg"))
-      c = cut(picked.unionByName(
-        c.filter((col("id") + lit(t.toLong)) % 2 =!= 0)))
+      // neighbor shares it): a w = 0 row per eligible vertex joins the
+      // half-edge stream before the one candidate aggregate.
+      val kic = half.filter(parity("i") === 0)
+        .join(bc, col("j") === col("id"))
+        .select(col("i"), col("comm").as("cc"), col("w"))
+        .unionByName(c.filter(parity("id") === 0)
+          .select(col("id").as("i"), col("comm").as("cc"), lit(0L).as("w")))
+        .groupBy("i", "cc").agg(sum("w").as("k"))
+      val tot = Superstep.small(c.groupBy(col("comm").as("tc"))
+        .agg(sum("deg").as("tot")), n)
+      // after the lookup on i below, comm/deg are i's own community/degree
+      val score = lit(m2).cast("decimal(38,0)") * col("k") -
+        col("deg").cast("decimal(38,0)") *
+          (col("tot") - when(col("cc") === col("comm"), col("deg"))
+            .otherwise(lit(0L)))
+      // One pick per vertex: the max of (score, is-own, −cc) is the best
+      // strictly-improving candidate (a candidate that only ties the stay
+      // score loses to the own row), ties → smallest community id.
+      val picked = kic
+        .join(bc, col("i") === col("id"))
+        .join(tot, col("cc") === col("tc"))
+        .groupBy(col("i").as("id"), col("deg"))
+        .agg(max(struct(score.as("score"),
+          (col("cc") === col("comm")).as("own"), (-col("cc")).as("ncc")))
+          .as("best"))
+        .select(col("id"), (-col("best.ncc")).as("comm"), col("deg"))
+      c = cut(picked.unionByName(c.filter(parity("id") =!= 0)))
       t += 1
     }
     c.select("id", "comm").orderBy("id")

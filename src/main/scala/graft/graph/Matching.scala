@@ -192,7 +192,10 @@ object Matching {
   * rule removes it (deg·n = 0 ≤ 4e always fires next round). */
 object Densest {
 
-  /** Peel `und` (columns a, b; canonical a < b, distinct). Returns one row
+  /** Peel `und` (columns a, b; canonical a < b, distinct), starting from
+    * its degree frame `deg0` (id, d) when the caller stores one (a
+    * [[PropertyGraph.undDegrees]] read gives the first round the same plan
+    * whether or not that index is cached yet). Returns one row
     * per non-empty round: (r, n_vertices, n_edges, is_best) with is_best
     * marking the density-maximal snapshot (ties → earliest round).
     *
@@ -205,22 +208,17 @@ object Densest {
     * (a cut frame has no stats — AQE can't discover broadcastability on
     * its own), making the dominant first rounds map-side over the big
     * edge list with zero edge shuffle. */
-  def peel(und0: DataFrame): DataFrame = {
+  def peel(und0: DataFrame, deg0: Option[DataFrame] = None): DataFrame = {
     val spark = und0.sparkSession
     var e = und0.select("a", "b") // cut from the first shrink on
+    def degOf(ed: DataFrame) = ed.select(col("a").as("id"))
+      .unionAll(ed.select(col("b").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("d"))
     // the degree frame, measured: n and Σd (= 2e) ride its
     // materialization job
-    def degOf(ed: DataFrame, verts: Option[DataFrame]) = {
-      val cnt = ed.select(col("a").as("id"))
-        .unionAll(ed.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("d"))
-      Superstep.round(verts match {
-        case None => cnt
-        case Some(v) => v.join(cnt, Seq("id"), "left")
-          .select(col("id"), coalesce(col("d"), lit(0L)).as("d"))
-      }, count(lit(1)).as("n"), sum("d").as("sd"))
-    }
-    var (deg, row) = degOf(e, None)
+    def measured(d: DataFrame) =
+      Superstep.round(d, count(lit(1)).as("n"), sum("d").as("sd"))
+    var (deg, row) = measured(deg0.getOrElse(degOf(e)))
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var r = 1
     while (row.getLong(0) > 0) {
@@ -239,7 +237,8 @@ object Densest {
       // e/deg pair in one job tree
       e = cut(e.join(sb, e("a") === sb("id"), "left_semi")
         .join(sb, e("b") === sb("id"), "left_semi"), eager = false)
-      val next = degOf(e, Some(surv))
+      val next = measured(surv.join(degOf(e), Seq("id"), "left")
+        .select(col("id"), coalesce(col("d"), lit(0L)).as("d")))
       deg = next._1; row = next._2
       r += 1
     }

@@ -1140,8 +1140,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // cut() per half-round: `raw` is read twice (the scalar max and the
     // normalize) and feeds the next half — un-materialized, the lineage
     // re-executes and DOUBLES per half-round (measured as a 450-stage job
-    // for iters=3). LAZY cut (the repeatUntil lesson): nothing consumes a
-    // half until the terminal fires, so each materializes exactly once.
+    // for iters=3). The cut is Superstep.round's EAGER one: the half's
+    // scale needs its max before the next half is planned, and the max
+    // is observed in the cut's own job, so each half materializes
+    // exactly once, in one job.
     def half(scores: DataFrame, in: String, inScore: String, out: String,
         outScore: String): DataFrame = {
       // vhint: the score frame is a cut leaf (no stats) — without the
@@ -1472,11 +1474,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     val interDeg = half.groupBy("i").agg(sum("w").as("dw"))
       .withColumnRenamed("i", "id")
     val nodes = lbl.select(col("refined").as("id")).distinct()
-    val deg = graft.util.cut(nodes
+    // measured (and cut) by the sweep loop's first round
+    val deg = nodes
       .join(interDeg, Seq("id"), "left")
       .join(selfW, Seq("id"), "left")
       .select(col("id"), (coalesce(col("dw"), lit(0L))
-        + lit(2L) * coalesce(col("wself"), lit(0L))).as("deg")))
+        + lit(2L) * coalesce(col("wself"), lit(0L))).as("deg"))
     val c2 = Louvain.weightedSweeps(graft.util.cut(half), deg, 4)
     graft.util.cut(l1
       .join(c2.select(col("id").as("refined"), col("comm").as("level2")),

@@ -1394,8 +1394,10 @@ object GraphOps extends OpModule {
     // (degree-1 event vertices are always ≤ average), leaving the
     // order/part/customer core as the dense snapshot.
     Op("graph_densest",
-      (s, dir) => graft.graph.Densest.peel(
-        GraphFixture(s, dir).undirectedEdges),
+      (s, dir) => {
+        val g = GraphFixture(s, dir)
+        graft.graph.Densest.peel(g.undirectedEdges, Some(g.undDegrees))
+      },
       Some(densestOracleSql)),
 
     // VERTEX COVER 2-approximation — the endpoints of a MAXIMAL matching
@@ -2505,7 +2507,11 @@ object GraphOps extends OpModule {
     // graph_labelprop propagates without an objective, graph_modularity
     // scores a given labeling — this key MOVES vertices to improve the
     // score). Integer gain in DECIMAL(38,0); ties → smallest community
-    // id; fixed sweeps make the oracle finite, the lp3 discipline.
+    // id; fixed sweeps make the oracle finite, the lp3 discipline. Each
+    // sweep reads the half-edge list once against the broadcast
+    // assignment and shuffles only the candidate, community and
+    // per-vertex aggregates (3 exchanges; lu4's cold build at sf0.1:
+    // 32 jobs, 103 MB shuffled — see Louvain's Scale note).
     Op("graph_louvain",
       (s, dir) => GraphFixture(s, dir).lu4,
       Some(withGraph(
@@ -2550,8 +2556,10 @@ object GraphOps extends OpModule {
     // two-level hierarchy a production community pipeline stores. The
     // sweep loop runs on the contracted graph (pieces, not vertices),
     // which is the collapse that keeps multi-level Louvain tractable at
-    // 100 TB; GraphAlgoIndependenceSpec asserts Q(level2) ≥ Q(level1)
-    // on the fixture. Oracle: the full unrolled chain — louvain sweeps,
+    // 100 TB, with the same broadcast-assignment sweeps as graph_louvain
+    // (no shuffle of the contracted half-edge list);
+    // GraphAlgoIndependenceSpec asserts Q(level2) ≥ Q(level1) on the
+    // fixture. Oracle: the full unrolled chain — louvain sweeps,
     // flood+jump refinement, contraction, weighted sweeps
     // (GraphSql.louvain2Ctes).
     Op("graph_louvain_hierarchy",

@@ -73,27 +73,8 @@ class GraphAlgoIndependenceSpec extends AnyFunSuite {
       adj.getOrElseUpdate(b, new mutable.ArrayBuffer) += a
     }
     val deg: Map[Long, Long] = adj.view.mapValues(_.size.toLong).toMap
-    val m2 = BigInt(deg.values.sum)
-    var comm: Map[Long, Long] = deg.keys.map(id => id -> id).toMap
-    for (t <- 1 to 4) {
-      val tot = new mutable.HashMap[Long, Long].withDefaultValue(0L)
-      for ((id, d) <- deg) tot(comm(id)) += d
-      comm = deg.keys.map { i =>
-        val own = comm(i)
-        if ((i + t) % 2 != 0) i -> own else {
-        val kic = new mutable.HashMap[Long, Long].withDefaultValue(0L)
-        adj(i).foreach(j => kic(comm(j)) += 1L)
-        val cands = (kic.keySet + own).toSeq
-        def score(c: Long): BigInt =
-          m2 * BigInt(kic(c)) - BigInt(deg(i)) *
-            BigInt(tot(c) - (if (c == own) deg(i) else 0L))
-        val stay = score(own)
-        val best = cands.filter(c => c == own || score(c) > stay)
-          .minBy(c => (-score(c), c))
-        i -> best
-        }
-      }.toMap
-    }
+    val comm = LouvainSweeps.run(
+      adj.toSeq.flatMap { case (i, js) => js.map(j => (i, j, 1L)) }, deg, 4)
     val got = SparkEntry.queries("graph_louvain")(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == comm, "Spark Louvain diverges from in-memory sweeps")

@@ -1,14 +1,17 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.Probe's per-key measurement: stable listener counts, the key's
-  * real row count, every query execution of the collect pass (loop
-  * checkpoints, streaming micro-batch frames and the result's own plan),
-  * and no listener left behind. */
-class ProbeSpec extends AnyFunSuite {
+  * real row count, every query execution of run1 and of the collect pass
+  * (loop checkpoints, a lazily built artifact's cuts, streaming
+  * micro-batch frames and the result's own plan) with their operator
+  * counts, and no listener left behind. */
+class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.sf
 
@@ -41,7 +44,61 @@ class ProbeSpec extends AnyFunSuite {
     assert(a.plans.last.action == "collect")
     assert(a.plans.last.columns == frame.columns.toSeq)
     assert(a.plans.forall(_.plan.contains("Physical Plan")))
+    // run1's executions are kept and counted too: its half-round cuts,
+    // each an aggregate behind a shuffle exchange
+    assert(a.run1.plans.count(_.action == "localCheckpoint") >= 6)
+    val ops1 = a.run1.ops.toMap
+    assert(ops1("exchange") >= 6, ops1)
+    assert(a.ops.map(_._1) == a.run1.ops.map(_._1))
+    assert(a.ops.map(_._1).containsSlice(Seq("exchange", "sort")))
     assert(probeListeners.isEmpty, probeListeners)
+  }
+
+  private val copies = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh copy of the fixture directory: the memoized graph and its
+    * lazily built artifacts are per directory, so a copy starts cold. */
+  private def freshCopy(): String = {
+    val src = Paths.get(sf)
+    val out = Files.createTempDirectory("probe-sf")
+    copies += out
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val to = out.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to)
+      else Files.copy(p, to)
+    }
+    out.toString
+  }
+
+  override def afterAll(): Unit = {
+    copies.foreach { d =>
+      graph.GraphFixture(spark, d.toString).uncache()
+      Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
+    super.afterAll()
+  }
+
+  test("graph_louvain: run1 shows the lazy lu4 build the collect pass no longer runs") {
+    val r = Probe.measure(spark, "graph_louvain", freshCopy())
+    // 4 sweeps, each cutting the (id, comm, deg) loop state
+    def sweeps(plans: Seq[Probe.Exec]) = plans.count(e =>
+      e.action == "localCheckpoint" && e.columns == Seq("id", "comm", "deg"))
+    assert(sweeps(r.run1.plans) == 4, r.run1.plans.map(_.action))
+    assert(sweeps(r.plans) == 0 && sweeps(r.run2.plans) == 0)
+    val ops1 = r.run1.ops.toMap
+    assert(ops1("exchange") >= 12 && ops1("smj") == 0, ops1)
+    assert(r.run1.jobs > r.run2.jobs)
+    assert(r.run1.cpuSec > 0 && r.run1.shuffleBytes > 0)
+  }
+
+  test("graph_densest: run2 counts do not depend on a prior undDegrees build") {
+    def counts(r: Probe.Run) = (r.jobs, r.stages, r.tasks)
+    val cold = Probe.measure(spark, "graph_densest", freshCopy())
+    val dir = freshCopy()
+    graph.GraphFixture(spark, dir).undDegrees.count()
+    val warm = Probe.measure(spark, "graph_densest", dir)
+    assert(counts(cold.run2) == counts(warm.run2))
+    assert(cold.rows == warm.rows)
   }
 
   test("stream_minhash_maintain: every micro-batch's verify cut is captured") {
