@@ -88,10 +88,9 @@ object Tables {
   * persisted temp views. Spark INLINES multi-referenced SQL CTEs, so a
   * subplan referenced k times executes k times — and expensive derived sets
   * (document shingles, normalized embeddings) are shared both within one
-  * query and across operator keys. persist (NOT localCheckpoint: a
-  * checkpoint's LogicalRDD loses size estimates, and downstream joins that
-  * should broadcast silently become sort-merge — measured 3× worse on the
-  * MinHash pipeline); the view gives SQL-dialect operators a stable name to
+  * query and across operator keys. persist (lazy: nothing runs until a
+  * consumer reads the view, and InMemoryRelation keeps the child plan's
+  * estimates until then); the view gives SQL-dialect operators a stable name to
   * splice in. (The reference-family analog: derived indexes are stored, not
   * re-derived per query.) These caches are intentional session-scoped state,
   * like GraphFixture's; entries drop when their SparkContext stops. */
@@ -114,12 +113,13 @@ object Views {
     * >15 min of driver CPU on the level-5 betweenness chain. A
     * checkpointed level is a LogicalRDD leaf — constant-size plan per
     * level, like the iterative engines' own per-superstep RDD barrier.
-    * Costs stats (joins over it won't auto-broadcast) — fine for level
-    * frames that feed vertex-keyed equi-joins of similar-sized sides. */
+    * The level is an eager [[util.cut]], so joins over the view see its
+    * measured stored size and broadcast it when it fits the session's
+    * threshold, like any other eager cut. */
   def checkpointed(s: SparkSession, dir: String, name: String, sql: => String): String =
     memo.getOrElseUpdate(s, (dir, name)) {
       val vn = s"graft_${name}_${Integer.toHexString(dir.hashCode)}"
-      s.sql(sql).localCheckpoint(true).createOrReplaceTempView(vn)
+      util.cut(s.sql(sql)).createOrReplaceTempView(vn)
       vn
     }
 }
@@ -221,29 +221,27 @@ object util {
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType.fromDDL(ddl))
 
-  /** Lineage cut for ITERATIVE loops: localCheckpoint + a stats reset.
+  /** Lineage cut: the one way this codebase checkpoints a frame (loop
+    * rounds, stored artifacts, checkpointed views).
     *
-    * `Dataset.localCheckpoint` alone is NOT enough in a loop: the
-    * checkpoint's LogicalRDD carries `originStats` — the full pre-cut
-    * plan statistics — so a self-joining round makes sizeInBytes SQUARE
-    * every iteration. The estimate's BigInt digit count then doubles per
-    * round, and after a few folds Catalyst's size-only stats visitor spends
-    * minutes in Karatsuba/Toom-Cook multiplication (observed: 550 s of
-    * driver CPU planning stream_cc_maintain's third micro-batch fold).
-    * Rebuilding the frame from the checkpointed RDD through the public
-    * row-level constructor drops originStats, so every cut is a fresh
-    * leaf and per-round planning cost stays constant. The row↔internal
-    * conversion this adds is paid on loop-state-sized data (labelings,
-    * pair sets, top-k rows) — noise next to a single stats blowup.
+    * `Dataset.localCheckpoint` alone is NOT enough: the checkpoint's
+    * LogicalRDD carries `originStats` — the full pre-cut plan estimate —
+    * so a self-joining round makes sizeInBytes SQUARE every iteration.
+    * The estimate's BigInt digit count then doubles per round, and after a
+    * few folds Catalyst's size-only stats visitor spends minutes in
+    * Karatsuba/Toom-Cook multiplication (observed: 550 s of driver CPU
+    * planning stream_cc_maintain's third micro-batch fold). Outside a loop
+    * the estimate is merely wrong (a 50k-row join result read as 99.3 GiB).
     *
-    * r16: the row↔internal conversion turned out NOT to be noise once the
-    * suite carried ~30 cut-heavy iterative keys — it was paid twice per cut
-    * on every round. [[org.apache.spark.sql.GraftBridge.statlessCut]] now
-    * builds the same stats-less LogicalRDD leaf directly from the
-    * checkpointed internal rows (identical planner behavior, zero
-    * conversion). */
+    * [[org.apache.spark.sql.GraftBridge.cut]] builds a fresh leaf instead:
+    * an EAGER cut carries the bytes its checkpointed blocks store, measured
+    * after the job — a constant that never compounds, so per-round planning
+    * stays flat, and Catalyst/AQE pick broadcast or shuffle at the
+    * session's autoBroadcastJoinThreshold with no hint. Never hint an eager
+    * cut. A LAZY cut has stored nothing yet and stays stats-less: a join
+    * against it plans as a shuffle unless the caller hints it. */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
-    org.apache.spark.sql.GraftBridge.statlessCut(df, eager)
+    org.apache.spark.sql.GraftBridge.cut(df, eager)
 
   /** Spread a CPU-heavy per-row stage across the cores (r17, guide §2.5's
     * "unsplittable input → repartition immediately after the read").

@@ -89,8 +89,8 @@ object Boruvka {
     var (comp, nV) = Superstep.counted(edges.select(col("a").as("id"))
       .unionAll(edges.select(col("b").as("id")))
       .distinct().withColumn("comp", col("id")))
-    // cut frames carry no stats, so hint the bounded sides explicitly (the
-    // Matching/Densest count-guard discipline). TWO guards (r17 — the
+    // comp and par are LAZY cuts from round 2 on and carry no stats, so
+    // hint the bounded sides with counts measured elsewhere. TWO guards (r17 — the
     // round-0 pin kept every component-sized join off broadcast forever on
     // a >4M-vertex graph, even after the hook forest collapsed to
     // thousands of components): `h` guards the |support|-row labeling

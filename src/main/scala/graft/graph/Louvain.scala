@@ -45,15 +45,16 @@ import graft.util.cut
   * one candidate aggregate per (vertex, community), one community-degree
   * aggregate and one per-vertex pick aggregate — three shuffles, all
   * candidate-, community- or vertex-sized. Loop state is the (id, comm,
-  * deg) frame, cut() once per sweep; its row count and 2m are measured
-  * once with the degree frame, and decide the broadcast
-  * ([[Superstep.small]]) in every sweep. Unhinted, the stats-less
-  * assignment cut planned a sort-merge join that hash-shuffled the whole
-  * half-edge list by j every sweep before AQE saw the cut was small.
-  * Measured on the lu4 build at sf0.1 (local[4], 4 cores; graft.Probe
-  * run1 after graph_densest built the graph, two JVMs per side): jobs
-  * 52 → 32, shuffle exchanges per sweep 7 → 3, shuffle written 340 →
-  * 103 MB, task CPU 58 → 37–39 s, wall 25.2 → 17.3 s. */
+  * deg) frame, cut() once per sweep; 2m is measured once with the degree
+  * frame. The assignment and the community totals are eager cuts (or
+  * aggregates of one) that carry their measured size, so the planner
+  * broadcasts them at the session's threshold with no hint: the neighbor
+  * lookup streams the half-edge list and never shuffles it. Measured on
+  * the lu4 build at sf0.1 (local[4], 4 cores; graft.Probe run1 after
+  * graph_densest built the graph, two JVMs per side) against the
+  * stats-less assignment's sort-merge join: jobs 52 → 32, shuffle
+  * exchanges per sweep 7 → 3, shuffle written 340 → 103 MB, task CPU
+  * 58 → 37–39 s, wall 25.2 → 17.3 s. */
 object Louvain {
 
   /** Run `sweeps` synchronous sweeps over undirected simple edges
@@ -80,12 +81,9 @@ object Louvain {
     * DECIMAL(38,0) form — weights are edge counts. */
   def weightedSweeps(half: DataFrame, deg: DataFrame,
       sweeps: Int): DataFrame = {
-    // The degree frame, measured: its row count n (the assignment's, in
-    // every sweep) and 2m ride its materialization job.
-    val (d, row) =
-      Superstep.round(deg, count(lit(1)).as("n"), sum("deg").as("m2"))
-    val n = row.getLong(0)
-    val m2 = if (row.isNullAt(1)) 0L else row.getLong(1)
+    // The degree frame, measured: 2m rides its materialization job.
+    val (d, row) = Superstep.round(deg, sum("deg").as("m2"))
+    val m2 = if (row.isNullAt(0)) 0L else row.getLong(0)
     // The loop state carries deg beside the assignment (id, comm, deg):
     // deg is sweep-invariant, and one broadcast lookup then serves both
     // the neighbor's community and the vertex's own community and degree.
@@ -96,18 +94,16 @@ object Louvain {
       // the filter lands on the half-edge stream before the gain fold.
       // t % 2, not t: sweeps 3-4 then reuse sweeps 1-2's generated code.
       def parity(v: String) = (col(v) + lit(t % 2)) % 2
-      val bc = Superstep.small(c, n)
       // Own community is always a candidate (k_i,own may be 0 when no
       // neighbor shares it): a w = 0 row per eligible vertex joins the
       // half-edge stream before the one candidate aggregate.
       val kic = half.filter(parity("i") === 0)
-        .join(bc, col("j") === col("id"))
+        .join(c, col("j") === col("id"))
         .select(col("i"), col("comm").as("cc"), col("w"))
         .unionByName(c.filter(parity("id") === 0)
           .select(col("id").as("i"), col("comm").as("cc"), lit(0L).as("w")))
         .groupBy("i", "cc").agg(sum("w").as("k"))
-      val tot = Superstep.small(c.groupBy(col("comm").as("tc"))
-        .agg(sum("deg").as("tot")), n)
+      val tot = c.groupBy(col("comm").as("tc")).agg(sum("deg").as("tot"))
       // after the lookup on i below, comm/deg are i's own community/degree
       val score = lit(m2).cast("decimal(38,0)") * col("k") -
         col("deg").cast("decimal(38,0)") *
@@ -117,7 +113,7 @@ object Louvain {
       // strictly-improving candidate (a candidate that only ties the stay
       // score loses to the own row), ties → smallest community id.
       val picked = kic
-        .join(bc, col("i") === col("id"))
+        .join(c, col("i") === col("id"))
         .join(tot, col("cc") === col("tc"))
         .groupBy(col("i").as("id"), col("deg"))
         .agg(max(struct(score.as("score"),

@@ -204,10 +204,10 @@ object Densest {
     * the materialization job), a survivor filter, and the edge shrink.
     * The shrink is two SEMI-joins against the survivor set, not anti-joins against the
     * removed set: the ε=1 rule keeps < n/2 vertices per round, so the
-    * JOINED side collapses geometrically and is explicitly broadcast
-    * (a cut frame has no stats — AQE can't discover broadcastability on
-    * its own), making the dominant first rounds map-side over the big
-    * edge list with zero edge shuffle. */
+    * JOINED side collapses geometrically; it is an eager cut carrying its
+    * measured size, so the planner broadcasts it while it fits, making the
+    * dominant first rounds map-side over the big edge list with zero edge
+    * shuffle. */
   def peel(und0: DataFrame, deg0: Option[DataFrame] = None): DataFrame = {
     val spark = und0.sparkSession
     var e = und0.select("a", "b") // cut from the first shrink on
@@ -227,16 +227,12 @@ object Densest {
       Superstep.cap("Densest.peel", r, 64, n)
       val ecnt = if (row.isNullAt(1)) 0L else row.getLong(1) / 2
       stats += ((r, n, ecnt))
-      val (surv, nSurv) = Superstep.counted(deg
+      val surv = cut(deg
         .filter(col("d") * lit(n) > lit(4L) * lit(ecnt)).select("id"))
-      // < n/2 by the ε=1 rule, but guard the hint anyway: at deployment
-      // scale an early round's survivor set can exceed executor memory,
-      // and a shuffle semi-join is the correct fallback there.
-      val sb = Superstep.small(surv, nSurv)
       // lazy: the next round's measured degree frame materializes the
       // e/deg pair in one job tree
-      e = cut(e.join(sb, e("a") === sb("id"), "left_semi")
-        .join(sb, e("b") === sb("id"), "left_semi"), eager = false)
+      e = cut(e.join(surv, e("a") === surv("id"), "left_semi")
+        .join(surv, e("b") === surv("id"), "left_semi"), eager = false)
       val next = measured(surv.join(degOf(e), Seq("id"), "left")
         .select(col("id"), coalesce(col("d"), lit(0L)).as("d")))
       deg = next._1; row = next._2
@@ -296,22 +292,19 @@ object Mis {
       alive = a0; aliveCnt = n
     }
     while (r <= 64 && aliveCnt > 0 && eCnt > localThreshold) {
-      // Hints guarded by the rounds' measured counts: cut frames carry no
-      // stats, so AQE can't see broadcastability, but an adversarial round
-      // can have O(V) winners where shuffle is right.
+      // winners and alive are eager cuts: the planner sees their measured
+      // sizes and broadcasts them only while they fit (an adversarial
+      // round can have O(V) winners, where the shuffle join is right).
       val losers = e.select(col("b").as("id")).distinct()
-      val (winners, nWin) = Superstep.counted(
-        alive.join(losers, Seq("id"), "left_anti"))
-      val wb = Superstep.small(winners, nWin)
-      val dead = e.join(wb, e("a") === wb("id"), "left_semi")
+      val winners = cut(alive.join(losers, Seq("id"), "left_anti"))
+      val dead = e.join(winners, e("a") === winners("id"), "left_semi")
         .select(col("b").as("id")).distinct()
       out = out.unionByName(winners)
       val (a2, nAlive) = Superstep.counted(alive.join(winners, Seq("id"), "left_anti")
         .join(dead, Seq("id"), "left_anti"))
       alive = a2; aliveCnt = nAlive
-      val ab = Superstep.small(alive, aliveCnt)
-      val (e2, nE) = Superstep.counted(e.join(ab, e("a") === ab("id"), "left_semi")
-        .join(ab, e("b") === ab("id"), "left_semi"))
+      val (e2, nE) = Superstep.counted(e.join(alive, e("a") === alive("id"), "left_semi")
+        .join(alive, e("b") === alive("id"), "left_semi"))
       e = e2; eCnt = nE
       r += 1
     }
@@ -376,12 +369,11 @@ object Coloring {
       val (v2, nV) = Superstep.counted(remV.join(layer, Seq("id"), "left_anti"))
       remV = v2; nRemV = nV
       // remV shrinks by only ONE MIS layer per iteration and can stay
-      // ~|V| for many layers — guard the hint like Mis.greedy/Densest.peel
-      // (a cut frame has no stats, so AQE can't pick broadcast itself,
-      // but an O(V) remainder must take the shuffle semi-join).
-      val rb = Superstep.small(remV, nRemV)
-      val (e2, nE) = Superstep.counted(remE.join(rb, remE("a") === rb("id"), "left_semi")
-        .join(rb, remE("b") === rb("id"), "left_semi"))
+      // ~|V| for many layers: as an eager cut it carries its measured
+      // size, and an O(V) remainder past the threshold takes the shuffle
+      // semi-join.
+      val (e2, nE) = Superstep.counted(remE.join(remV, remE("a") === remV("id"), "left_semi")
+        .join(remV, remE("b") === remV("id"), "left_semi"))
       remE = e2; cnt = nE
       c += 1
     }

@@ -48,12 +48,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * table-level rowCount a deployment's ANALYZE records). */
   lazy val numVertices: Long = vertices.count()
 
-  /** Size-aware broadcast hint for VERTEX-BOUNDED loop frames (per-vertex
-    * scores/labels/frontiers, usually after a lineage cut): `graft.util.cut`
-    * rebuilds a frame as a stats-less LogicalRDD leaf, so Catalyst plans
-    * every join against it as a full shuffle of BOTH sides even when the
-    * frame is a few MB (guide §3.1: size estimates are often wrong after
-    * opaque operations — hint when you know better). The hint re-attaches
+  /** Size-aware broadcast hint for VERTEX-BOUNDED LAZY loop frames
+    * (per-vertex scores/labels/frontiers behind a lazy `graft.util.cut`):
+    * a lazy cut is a stats-less LogicalRDD leaf, so Catalyst plans every
+    * join against it as a full shuffle of BOTH sides even when the frame
+    * is a few MB. Never use it on an eager cut, which carries its measured
+    * size and needs no hint. The hint re-attaches
     * the one statistic known by construction — row count ≤ |V| — and fires
     * only when |V| × rowBytes fits the session's autoBroadcastJoinThreshold,
     * so a billion-vertex deployment degrades to exactly the shuffle join
@@ -368,26 +368,24 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     *
     * Execution shape (r12, 3.6× the r11 form at sf0.1 — 1.7 s vs 5.9 s
     * driver min-of-2):
-    *  - the cap-bounded FRONTIER is the broadcast build side of the step
-    *    join (classic frontier-broadcast BFS): each level's job builds a
-    *    hash over ≤cap walks and STREAMS the adjacency relation — r11 let
-    *    Catalyst pick the opposite side, so every level's separate job
-    *    re-built a full-edge-relation hash (broadcast instances don't
-    *    survive across jobs the way ReuseExchange dedupes them within
-    *    one). The hint is dropped when `cap` is raised past what a
-    *    broadcast can carry, and the stop flag joins against the LAZY
-    *    vertex projection so its statistics keep that join broadcast too.
+    *  - the FRONTIER is an eager cut carrying its measured stored size,
+    *    so while it fits the session's broadcast threshold it is the
+    *    broadcast build side of the step join (classic frontier-broadcast
+    *    BFS): each level's job builds a hash over the walks and STREAMS
+    *    the adjacency relation — r11 let Catalyst pick the opposite side,
+    *    so every level's separate job re-built a full-edge-relation hash
+    *    (broadcast instances don't survive across jobs the way
+    *    ReuseExchange dedupes them within one). Past the threshold the
+    *    planner takes the shuffle join; the stop flag joins against the
+    *    LAZY vertex projection so its statistics keep that join broadcast.
     *  - each level is materialized NARROW — (id, path, __stop), the stop
-    *    predicate folded in as a boolean — via direct
-    *    `Dataset.localCheckpoint` (InternalRow blocks; graft.util.cut's
-    *    Row round-trip re/de-serializes every path array, measured ~2×
-    *    the whole loop at 378k walks).
-    *  - the cap guard counts the checkpoint itself — TOTAL walks, stop
-    *    AND live (r11 counted only continuing walks, so a level whose
-    *    walks all stopped evaded the cap) — at metadata-ish cost. The
-    *    offending level of a blowup does materialize before the error
-    *    (disk-backed blocks, never a silent OOM), and the error fires
-    *    before the NEXT level can multiply it. */
+    *    predicate folded in as a boolean — by [[Superstep.counted]].
+    *  - the cap guard reads the level's row count from that same job —
+    *    TOTAL walks, stop AND live (r11 counted only continuing walks, so
+    *    a level whose walks all stopped evaded the cap). The offending
+    *    level of a blowup does materialize before the error (disk-backed
+    *    blocks, never a silent OOM), and the error fires before the NEXT
+    *    level can multiply it. */
   def pathsUntil(sources: DataFrame, adj: DataFrame, pred: Column,
       maxLoops: Int, cap: Long = 1000000L,
       stepFilter: (Column, Column) => Column = (_, _) => lit(true),
@@ -395,11 +393,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       : DataFrame = {
     require(maxLoops >= 1 && maxLoops <= 16,
       s"until guard out of range: $maxLoops")
-    // frontier-broadcast only while cap-bounded walk sets are broadcast
-    // material (~8M rows × a short path array ≈ hundreds of MB ceiling)
-    val hintFrontier = cap <= 8000000L
-    var active = sources.select(col("id"), array(col("id")).as("path"))
-      .localCheckpoint(true)
+    var active = graft.util.cut(
+      sources.select(col("id"), array(col("id")).as("path")))
     var out: Option[DataFrame] = None
     for (i <- 1 to maxLoops) {
       // fresh Alias per level: the checkpointed level's output carries its
@@ -407,19 +402,16 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       // same expression id on both sides of the next level's join
       val vflag = vertices.select(col("id"),
         coalesce(pred, lit(false)).as("__stop"))
-      val fr = if (hintFrontier) broadcast(active) else active
       // stepFilter(prefixWalk, newHead) prunes a walk BEFORE the append —
       // the walk-matrix hook where()/simplePath() compile to inside an
       // until loop (the path array IS the prefix those steps read); a
       // codegen'd per-row filter on the join output, no extra join.
-      val stepped = fr.join(adj, active("id") === adj("src"))
+      val stepped = active.join(adj, active("id") === adj("src"))
         .filter(stepFilter(col("path"), col("dst")))
         .select(col("dst").as("id"),
           array_append(col("path"), col("dst")).as("path"))
-      val lvl = stepped.join(vflag, "id")
-        .select(col("id"), col("path"), col("__stop"))
-        .localCheckpoint(true)
-      val total = lvl.count()
+      val (lvl, total) = Superstep.counted(stepped.join(vflag, "id")
+        .select(col("id"), col("path"), col("__stop")))
       require(total <= cap,
         s"pathsUntil: $total walks at loop $i exceed cap $cap — " +
           "raise the cap or use the path-erasing repeatUntil fold")
@@ -1146,12 +1138,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // exactly once, in one job.
     def half(scores: DataFrame, in: String, inScore: String, out: String,
         outScore: String): DataFrame = {
-      // vhint: the score frame is a cut leaf (no stats) — without the
-      // size-aware hint every half-round sort-merge-joined the EDGE list
-      // against a ~5 MB frame, shuffling the edges six times per run
-      // (r16 measured: 7.4 s warm → see OPTIMIZATION_r16.md). With it the
-      // edges never shuffle; the only exchange left per half-round is the
-      // vertex-sized partial-aggregated message shuffle.
+      // The score frame is an eager cut carrying its measured size (or the
+      // vertex projection before the first half), so the planner
+      // broadcasts it and the edges never shuffle; the only exchange per
+      // half-round is the vertex-sized partial-aggregated message shuffle.
       //
       // r17: the scalar max rides the materialization job itself via
       // observe() (CollectMetrics — an accumulator, zero extra pass), so a
@@ -1163,7 +1153,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       // to the minimal job). The max value is bit-identical to the old
       // aggregate's, so the quantized oracle replay is unchanged.
       val (raw, st) = Superstep.round(
-        e.join(vhint(scores.withColumnRenamed("id", in)), in)
+        e.join(scores.withColumnRenamed("id", in), in)
           .groupBy(out).agg(sum(inScore).as("raw"))
           .withColumnRenamed(out, "id"), max(col("raw")).as("mx"))
       // an empty half's max is null: it reads as 0 (scale 1)
@@ -1177,7 +1167,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       a = half(h, "src", "hub", "dst", "auth")   // auth ← in-edge hub mass
       h = half(a, "dst", "auth", "src", "hub")   // hub ← out-edge auth mass
     }
-    ids.join(vhint(a), Seq("id"), "left").join(vhint(h), Seq("id"), "left")
+    ids.join(a, Seq("id"), "left").join(h, Seq("id"), "left")
       .select(col("id"), coalesce(col("auth"), lit(0L)).as("auth"),
         coalesce(col("hub"), lit(0L)).as("hub"))
   }
@@ -1265,10 +1255,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     val close = ori.select(col("u").as("x"), col("v").as("z"))
     // Credit all three corners in ONE pass over the triangle stream —
     // a 3-way union of selects would re-execute the fork join per branch.
-    forks.join(close, Seq("x", "z"))
+    graft.util.cut(forks.join(close, Seq("x", "z"))
       .select(explode(array(col("u"), col("x"), col("z"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint()
+      .groupBy("id").agg(count(lit(1)).as("n_tri")))
   }
 
   /** Bounded k-core peeling (fixed `rounds` so the result is deterministic
@@ -1418,8 +1407,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * Isolated vertices keep their own label. */
   /** Stored 3-iteration label-propagation communities — shared by the
     * labelprop and modularity keys (the labeling is the expensive part;
-    * its consumers are vertex-sized folds). localCheckpoint'ed by the
-    * final iteration, freed by GC with the instance. */
+    * its consumers are vertex-sized folds). Cut eagerly after the final
+    * iteration, freed by GC with the instance. */
   lazy val lp3: DataFrame = labelPropagation(3)
 
   /** Stored one-level Louvain communities (4 parity-scheduled sweeps) —
@@ -1536,7 +1525,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // Eagerly materialize the vertex-sized result — callers get a
     // self-contained LogicalRDD. und is the stored [[undByA]] index (fixture
     // lifecycle, released by [[uncache]]), not per-call scratch.
-    lbl.select(col("id"), col("lbl").as("lp_label")).localCheckpoint()
+    graft.util.cut(lbl.select(col("id"), col("lbl").as("lp_label")))
   }
 
   /** Deterministic pseudo-random walks (the DeepWalk/node2vec corpus

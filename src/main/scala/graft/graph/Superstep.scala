@@ -1,34 +1,38 @@
 package graft.graph
 
 import graft.util.cut
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
 import org.apache.spark.sql.functions.{broadcast, count, lit}
 import org.apache.spark.sql.types.StructType
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** The four decisions every data-dependent graph loop makes, made once.
   *
   * A superstep here is a relational plan over the live set (Pregelix's
   * shape): a loop of such plans, where each round needs (1) the live set
   * materialized with the scalar that decides the next round, (2) a join
-  * strategy for frames whose size the round just measured, (3) a policy at
-  * the round cap, and (4) a way to finish a small remainder in one task.
+  * strategy for the frames it just measured, (3) a policy at the round
+  * cap, and (4) a way to finish a small remainder in one task.
   *
   *  - [[round]]: an eager [[graft.util.cut]] whose `observe()` reads the
   *    round's statistics inside the materialization job itself — one job
-  *    per measured frame, never a cut plus a separate `count()`.
-  *  - [[small]]: the broadcast bound for a cut frame (cut frames carry no
-  *    statistics, so AQE cannot see that they are small; the round's
-  *    measured row count can).
+  *    per measured frame, never a cut plus a separate `count()`. The cut
+  *    carries its measured stored size (and [[counted]]'s row count), so
+  *    Catalyst and AQE choose broadcast or shuffle for joins against it
+  *    with no hint.
+  *  - [[small]]: the broadcast bound for a LAZY frame whose row bound
+  *    another round measured (a lazy cut has no stats of its own).
   *  - [[cap]]: a loop that outruns its round budget fails loudly with
   *    context instead of returning a partial result.
   *  - [[inOneTask]]: the executor-local tail — one coalesced partition,
   *    never a collect. */
 object Superstep {
 
-  /** Rows at or under which a measured frame is broadcast. */
+  /** Measured row bound at or under which [[small]] broadcasts a frame. */
   private val broadcastRows = 4000000L
 
-  /** Materialize `df` (eager, stats-less cut) and read `stats` — aggregate
+  /** Materialize `df` (eager, measured cut) and read `stats` — aggregate
     * columns with names, e.g. `count(lit(1)).as("n")` — in the same job.
     * Returns the cut frame and the observed row (`stats` in order; an
     * aggregate over zero rows reads as SQL does: count 0, max/sum null).
@@ -36,21 +40,26 @@ object Superstep {
     * Eager on purpose: the observation completes when the action that
     * materializes the frame completes, and only the eager cut runs that
     * action before returning. */
-  def round(df: DataFrame, stats: Column*): (DataFrame, Row) = {
-    val obs = Observation()
-    val out = cut(df.observe(obs, stats.head, stats.tail: _*), eager = true)
-    (out, scala.concurrent.Await.result(obs.future,
-      scala.concurrent.duration.Duration.Inf))
-  }
+  def round(df: DataFrame, stats: Column*): (DataFrame, Row) =
+    measure(df, stats, rows = false)
 
-  /** [[round]] reading the row count alone. */
+  /** [[round]] reading the row count alone; the cut's stats carry it. */
   def counted(df: DataFrame): (DataFrame, Long) = {
-    val (out, row) = round(df, count(lit(1)).as("n"))
+    val (out, row) = measure(df, Seq(count(lit(1)).as("n")), rows = true)
     (out, row.getLong(0))
   }
 
-  /** `df` with a broadcast hint when its measured `rows` fit the bound;
-    * past it, `df` unchanged (the shuffle join is the right plan there). */
+  private def measure(df: DataFrame, stats: Seq[Column], rows: Boolean) = {
+    val obs = Observation()
+    lazy val row = Await.result(obs.future, Duration.Inf)
+    (GraftBridge.cut(df.observe(obs, stats.head, stats.tail: _*), eager = true,
+      Option.when(rows)(row.getLong(0))), row)
+  }
+
+  /** `df` with a broadcast hint when `rows`, a row bound another round
+    * measured, fits the bound; past it, `df` unchanged (the shuffle join is
+    * the right plan there). Only for LAZY frames: an eager cut carries its
+    * measured size, and the planner decides for it. */
   def small(df: DataFrame, rows: Long): DataFrame =
     if (rows <= broadcastRows) broadcast(df) else df
 

@@ -69,12 +69,10 @@ object DedupOps extends OpModule {
   /** Exact shingle-Jaccard verify of the `mh_cand` (da, db) candidates
     * over the materialized `mh_sh` candidate shingles — the tail of
     * [[minhashCtes]] with the candidate set injected; Spark dialect only.
-    * Every relation here is a stats-less cut frame, so without hints
-    * Catalyst sort-merge-joined all four joins (r17 batch-plan capture: 4
-    * SMJs per batch); all sides are candidate-bounded by construction
-    * (mh_cand is the batch's LSH/star-capped pair set, mh_sh its docs'
-    * shingles), so the broadcast hints assert what the planner cannot
-    * estimate — the same per-batch-broadcast discipline as candOn. */
+    * Every relation here is a per-batch frame, candidate-bounded by
+    * construction (mh_cand is the batch's LSH/star-capped pair set, mh_sh
+    * its docs' shingles), so the broadcast hints pin the per-batch
+    * broadcast — the same discipline as candOn. */
   private def candVerifySql: String = s"""
     WITH sizes AS (SELECT doc_id, COUNT(*) AS n FROM mh_sh GROUP BY doc_id),
     inter AS (SELECT /*+ BROADCAST(c, sb) */ c.da, c.db, COUNT(*) AS i

@@ -531,4 +531,23 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
   }
+
+  test("PairCC's edge cut is streamed, never shuffled for the hook join") {
+    // a path 0-1-...-399: many hook+jump rounds over one eager edge cut
+    // (a, b), which carries its measured size: the label side is the
+    // broadcast one and the edges stream (they used to be shuffled by
+    // the stats-less sort-merge plan before AQE broadcast the labels)
+    import org.apache.spark.sql.functions.col
+    val pairs = spark.range(0, 399, 1, 4)
+      .select(col("id").as("da"), (col("id") + 1).as("db"))
+    val plans = CutStatsSpec.executions(spark) {
+      graph.PairCC.labelsConverged(pairs).count()
+    }.filter { case (f, p) =>
+      f == "localCheckpoint" && p.analyzed.output.map(_.name) == Seq("id", "lbl")
+    }
+    assert(plans.size >= 2, plans.size)
+    plans.foreach { case (_, p) =>
+      assert(CutStatsSpec.shuffledScans(p.executedPlan, Seq("a", "b")) == 0, p.executedPlan)
+    }
+  }
 }
