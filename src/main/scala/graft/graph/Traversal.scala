@@ -27,13 +27,11 @@ import org.apache.spark.sql.functions._
   * BRANCHING (r8): `union`/`choose`/`coalesce` merge parallel sub-chains
   * under one UNION ALL; branches must extend the walk to the SAME depth
   * because the matrix needs uniform columns. Gremlin's heterogeneous-length
-  * constructs exist only under path-erasing folds by design: `repeat(b)
-  * .until(p).times(n)` and `repeat(b).emit().times(n)` (r9), plus the
-  * pre-emit `emit().repeat(b).times(n)` and combined
-  * `repeat(b).until(p).emit().times(n)` placements (r10), run the loop
-  * over per-head (h, cnt) bulk frames — graph_var_hop's flood shape with
-  * walk multiplicities — and hand the folded frame to the aggregating
-  * terminals; the walk matrix (and step labels) end at the loop.
+  * constructs exist only under the path-erasing fold by design: every
+  * until/emit placement of `repeat(b)...times(n)` runs one loop
+  * ([[repeatLoop]]) over per-head (h, cnt) bulk frames and hands the
+  * folded frame to the aggregating terminals; the walk matrix (and step
+  * labels) end at the loop.
   *
   * Two entry points on [[PropertyGraph]]:
   *  - the typed fluent API: `g.V(col("label") === "customer").out("in_nation").path()`
@@ -58,8 +56,16 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
     epred.fold(byLabel)(byLabel.filter)
   }
 
+  /** Edge directions as (from, to) endpoint columns: out walks src→dst,
+    * in walks dst→src, both is the union of the two. */
+  private val Out = Seq("src" -> "dst")
+  private val In = Seq("dst" -> "src")
+
+  /** The vertex step: one equi-join of the walk head against the edge set
+    * read in each of `dirs`, and the bulk frame folded over the same
+    * edges (cnt'(v) = Σ_{u→v} cnt(u)). */
   private def step(elabel: Option[String], epred: Option[Column],
-      from: String, to: String): Traversal = {
+      dirs: Seq[(String, String)]): Traversal = {
     require(!edgeHead,
       "vertex step on an edge traverser: resolve with inV()/outV()/otherV() first")
     val es = edgeSet(elabel, epred)
@@ -68,16 +74,18 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
     // an unconsumed _lastw from the previous step is dropped (TinkerPop:
     // an un-sacked step contributes nothing).
     val sacked = df.columns.contains("sack")
-    val e =
+    val e = dirs.map { case (from, to) =>
       if (sacked) es.select(col(from).as(head), col(to).as(next),
         org.apache.spark.sql.functions.coalesce(col("weight"), lit(0.0))
           .as("_lastw"))
       else es.select(col(from).as(head), col(to).as(next))
+    }.reduce(_ unionAll _)
     val b = bulk.map { bf =>
       // vhint (r16): the bulk frame is a vertex-bounded cut leaf — without
       // the size-aware hint every fold level sort-merge-shuffled the EDGE
       // list against a few-MB frame (the hits half-round disease).
-      val eb = es.select(col(from).as("h"), col(to).as("h2"))
+      val eb = dirs.map { case (from, to) =>
+        es.select(col(from).as("h"), col(to).as("h2")) }.reduce(_ unionAll _)
       eb.join(g.vhint(bf), "h").groupBy("h2").agg(sum("cnt").as("cnt"))
         .withColumnRenamed("h2", "h")
     }
@@ -85,10 +93,10 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
   }
 
   /** Follow out-edges labeled `elabel` (Gremlin out(label)). */
-  def out(elabel: String): Traversal = step(Some(elabel), None, "src", "dst")
+  def out(elabel: String): Traversal = step(Some(elabel), None, Out)
 
   /** Follow out-edges of ANY label (Gremlin's bare out()). */
-  def out(): Traversal = step(None, None, "src", "dst")
+  def out(): Traversal = step(None, None, Out)
 
   /** Follow out-edges labeled `elabel` that satisfy an EDGE-property
     * predicate (over `weight`, `vis`) — Gremlin's
@@ -96,45 +104,27 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
     * lands on the edge scan before the join, so a selective edge filter
     * prunes the walk fan-out at the source. */
   def out(elabel: String, epred: Column): Traversal =
-    step(Some(elabel), Some(epred), "src", "dst")
+    step(Some(elabel), Some(epred), Out)
 
   /** Follow in-edges labeled `elabel` (Gremlin in(label)). */
-  def in(elabel: String): Traversal = step(Some(elabel), None, "dst", "src")
+  def in(elabel: String): Traversal = step(Some(elabel), None, In)
 
   /** Follow in-edges of ANY label (Gremlin's bare in()). */
-  def in(): Traversal = step(None, None, "dst", "src")
+  def in(): Traversal = step(None, None, In)
 
   /** Edge-predicate in-step — Gremlin inE(label).has(...).outV(). */
   def in(elabel: String, epred: Column): Traversal =
-    step(Some(elabel), Some(epred), "dst", "src")
+    step(Some(elabel), Some(epred), In)
 
   /** Follow edges labeled `elabel` in either direction (Gremlin both). */
-  def both(elabel: String): Traversal = bothImpl(Some(elabel), None)
+  def both(elabel: String): Traversal = step(Some(elabel), None, Out ++ In)
 
   /** Follow edges of ANY label in either direction (Gremlin's bare both()). */
-  def both(): Traversal = bothImpl(None, None)
+  def both(): Traversal = step(None, None, Out ++ In)
 
   /** Edge-predicate both-step — bothE(label).has(...).otherV(). */
   def both(elabel: String, epred: Column): Traversal =
-    bothImpl(Some(elabel), Some(epred))
-
-  private def bothImpl(elabel: Option[String], epred: Option[Column]): Traversal = {
-    val e = edgeSet(elabel, epred)
-    val sacked = df.columns.contains("sack")
-    def half(f: String, t: String) =
-      if (sacked) e.select(col(f).as(head), col(t).as(next),
-        org.apache.spark.sql.functions.coalesce(col("weight"), lit(0.0))
-          .as("_lastw"))
-      else e.select(col(f).as(head), col(t).as(next))
-    val u = half("src", "dst").unionAll(half("dst", "src"))
-    val b = bulk.map { bf =>
-      val ub = e.select(col("src").as("h"), col("dst").as("h2"))
-        .unionAll(e.select(col("dst").as("h"), col("src").as("h2")))
-      ub.join(g.vhint(bf), "h").groupBy("h2").agg(sum("cnt").as("cnt"))
-        .withColumnRenamed("h2", "h")
-    }
-    Traversal(g, df.drop("_lastw").join(u, head), depth + 1, b, labels, sideSets = sideSets)
-  }
+    step(Some(elabel), Some(epred), Out ++ In)
 
   // ——— edge-granular steps (Gremlin outE/inE/bothE + inV/outV/otherV):
   // the EDGE becomes the traverser, so edge-property predicates apply
@@ -148,42 +138,33 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
   // resolving vertex step stages the traversed edge's weight as _lastw
   // exactly like out/in/both do.
 
-  private def stepEdge(elabel: Option[String], from: String): Traversal = {
+  /** The edge step: the head joins each edge read in `dirs` at its
+    * `from` endpoint, and the edge rides along as pending columns. */
+  private def edgeStep(elabel: Option[String],
+      dirs: Seq[(String, String)]): Traversal = {
     require(!edgeHead,
       "edge step on an edge traverser: resolve with inV()/outV()/otherV() first")
-    val e = g.edges.transform(es =>
-        elabel.fold(es)(l => es.filter(col("label") === l)))
-      .select(col(from).as(head), col("src").as("_esrc"),
-        col("dst").as("_edst"), col("label"), col("weight"), col("vis"))
+    val es = edgeSet(elabel, None)
+    val e = dirs.map { case (from, _) => es.select(col(from).as(head),
+      col("src").as("_esrc"), col("dst").as("_edst"),
+      col("label"), col("weight"), col("vis")) }.reduce(_ unionAll _)
     Traversal(g, df.drop("_lastw").join(e, head), depth, None, labels,
       edgeHead = true, sideSets = sideSets)
   }
 
   /** Gremlin outE(label): walk onto the out-edge itself. */
-  def outE(elabel: String): Traversal = stepEdge(Some(elabel), "src")
-  def outE(): Traversal = stepEdge(None, "src")
+  def outE(elabel: String): Traversal = edgeStep(Some(elabel), Out)
+  def outE(): Traversal = edgeStep(None, Out)
 
   /** Gremlin inE(label): walk onto the in-edge itself. */
-  def inE(elabel: String): Traversal = stepEdge(Some(elabel), "dst")
-  def inE(): Traversal = stepEdge(None, "dst")
+  def inE(elabel: String): Traversal = edgeStep(Some(elabel), In)
+  def inE(): Traversal = edgeStep(None, In)
 
   /** Gremlin bothE(label): the edge traverser from either endpoint —
     * union of the two direction halves (an edge with BOTH endpoints in
     * the walk set is traversed once from each, per TinkerPop). */
-  def bothE(elabel: String): Traversal = bothEImpl(Some(elabel))
-  def bothE(): Traversal = bothEImpl(None)
-  private def bothEImpl(elabel: Option[String]): Traversal = {
-    require(!edgeHead,
-      "edge step on an edge traverser: resolve with inV()/outV()/otherV() first")
-    val es = g.edges.transform(e =>
-      elabel.fold(e)(l => e.filter(col("label") === l)))
-    def half(from: String) = es.select(col(from).as(head),
-      col("src").as("_esrc"), col("dst").as("_edst"),
-      col("label"), col("weight"), col("vis"))
-    Traversal(g, df.drop("_lastw").join(
-      half("src").unionAll(half("dst")), head), depth, None, labels,
-      edgeHead = true, sideSets = sideSets)
-  }
+  def bothE(elabel: String): Traversal = edgeStep(Some(elabel), Out ++ In)
+  def bothE(): Traversal = edgeStep(None, Out ++ In)
 
   private def resolveEdge(pick: Column): Traversal = {
     require(edgeHead, "inV()/outV()/otherV() need an edge traverser " +
@@ -478,145 +459,93 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
       .bulk.getOrElse(throw new IllegalArgumentException(
         "repeat body must be bulk-preserving (out/in/both/has)"))
 
-  /** Gremlin repeat(body).until(pred).times(maxLoops): condition-driven
-    * loop — after each body application, walks whose HEAD satisfies `pred`
-    * exit and continue downstream; the rest loop again. `maxLoops` is the
-    * times() guard Gremlin composes with until() (loop exits on whichever
-    * fires first; walks cut off by the guard also continue downstream,
-    * matching TinkerPop). NULL-pred heads keep looping (has() semantics).
-    *
-    * PATH-ERASING by design (the class comment's rule: heterogeneous-length
-    * constructs exist only under path-erasing folds — exited walks have
-    * different depths, so there is no uniform walk matrix). The fold runs
-    * on per-head (h, cnt) frames: each level is one join against the edge
-    * set + one vertex-attribute split, all vertex-sized — the same BSP
-    * shape as graph_var_hop's flood, never walk-materializing. Terminals
-    * (count/groupCount/ids) read the folded frame with exact walk
-    * multiplicities; step labels die with the path. */
+  /** Gremlin repeat(body).until(pred).times(maxLoops): walks whose head
+    * satisfies `pred` after a body application exit the loop; `maxLoops`
+    * is the times() guard. See [[repeatLoop]]. */
   def repeatUntil(body: Traversal => Traversal, pred: Column,
-      maxLoops: Int): Traversal = {
-    require(maxLoops >= 1 && maxLoops <= 16, s"until guard out of range: $maxLoops")
-    var active = headFrame
-    var emitted: Option[DataFrame] = None
-    for (_ <- 1 to maxLoops) {
-      val nxt = foldBody(active, body)
-      // cut() per level (kCore's lesson): the frame is vertex-sized, and
-      // without lineage truncation level k's plan nests every previous
-      // level — re-planned superlinearly — while the two filters below
-      // would each re-execute the join. One materialized level, two
-      // codegen'd filters over it. LAZY (labelPropagation's lesson, r10):
-      // nothing consumes a level until the terminal fires, so an eager
-      // checkpoint per level only adds scheduling round-trips — the lazy
-      // form materializes each level exactly once at the terminal
-      // (measured ~15% off the fold family at sf0.1).
-      val withV = graft.util.cut(
-        g.vertices.withColumnRenamed("id", "h").join(g.vhint(nxt), "h"),
-        eager = false)
-      val stop = withV.filter(pred).select("h", "cnt")
-      emitted = Some(emitted.fold(stop)(_ unionAll stop))
-      active = withV.filter(!org.apache.spark.sql.functions
-        .coalesce(pred, lit(false))).select("h", "cnt")
-    }
-    val folded = (emitted.get unionAll active)
-      .groupBy("h").agg(sum("cnt").as("cnt"))
-    Traversal(g, folded.select(col("h").as("v0")), 0, Some(folded), Map.empty)
-  }
+      maxLoops: Int): Traversal =
+    repeatLoop(body, maxLoops, Some(pred), None, preEmit = false)
 
-  /** Gremlin repeat(body).emit().times(n): emit the traverser after EVERY
-    * loop iteration — per-depth reachability accumulated across levels
-    * 1..n (emit() placed after repeat(), so the start position is not
-    * emitted; [[emitRepeat]] is the pre-emit placement that includes it).
-    * Path-erasing like [[repeatUntil]] and for the same reason: emitted
-    * walks have different lengths. Each level is one edge join over a
-    * vertex-sized (h, cnt) frame; the accumulate is a UNION ALL +
-    * re-aggregate — graph_var_hop's flood shape with multiplicities. */
-  def repeatEmit(body: Traversal => Traversal, times: Int): Traversal = {
-    require(times >= 1 && times <= 16, s"times out of range: $times")
-    var active = headFrame
-    var emitted: Option[DataFrame] = None
-    for (_ <- 1 to times) {
-      // cut() per level: same lineage-truncation reason as repeatUntil —
-      // and each level is read twice (as the next fold's input and inside
-      // the emitted union).
-      active = graft.util.cut(foldBody(active, body), eager = false)
-      emitted = Some(emitted.fold(active)(_ unionAll active))
-    }
-    val folded = emitted.get.groupBy("h").agg(sum("cnt").as("cnt"))
-    Traversal(g, folded.select(col("h").as("v0")), 0, Some(folded), Map.empty)
-  }
+  /** Gremlin repeat(body).emit().times(n): every position at depths 1..n
+    * is released. See [[repeatLoop]]. */
+  def repeatEmit(body: Traversal => Traversal, times: Int): Traversal =
+    repeatLoop(body, times, None, Some(lit(true)), preEmit = false)
 
-  /** Gremlin repeat(body).emit(pred).times(n) — FILTERED emission: after
-    * each non-final iteration, only walks whose head satisfies `pred` are
-    * released (a copy; everything keeps looping). The FINAL iteration
-    * exits via the times() guard before the emit check runs, so depth n
-    * contributes ALL walks, unfiltered — exactly [[repeatEmit]]'s
-    * semantics when pred ≡ true (locked by a spec). NULL-pred heads are
-    * not emitted (has() three-valued logic). Same path-erasing (h, cnt)
-    * BSP fold; the filter adds one vertex join per non-final level. */
+  /** Gremlin repeat(body).emit(pred).times(n): depths 1..n-1 release only
+    * the walks whose head satisfies `emitPred`; depth n releases every
+    * walk (the guard exits before the emit check). See [[repeatLoop]]. */
   def repeatEmit(body: Traversal => Traversal, times: Int,
-      emitPred: Column): Traversal = {
-    require(times >= 1 && times <= 16, s"times out of range: $times")
-    var active = headFrame
-    var emitted: Option[DataFrame] = None
-    for (i <- 1 to times) {
-      active = graft.util.cut(foldBody(active, body), eager = false)
-      val release =
-        if (i == times) active
-        else g.vertices.withColumnRenamed("id", "h")
-          .join(g.vhint(active), "h")
-          .filter(emitPred).select("h", "cnt")
-      emitted = Some(emitted.fold(release)(_ unionAll release))
-    }
-    val folded = emitted.get.groupBy("h").agg(sum("cnt").as("cnt"))
-    Traversal(g, folded.select(col("h").as("v0")), 0, Some(folded), Map.empty)
-  }
+      emitPred: Column): Traversal =
+    repeatLoop(body, times, None, Some(emitPred), preEmit = false)
 
-  /** Gremlin emit().repeat(body).times(n) — the PRE-emit placement: the
-    * emit check runs at the TOP of each iteration, so the START position
-    * is released too, and the final traverser exits the loop normally —
-    * results are depths 0..n, vs [[repeatEmit]]'s 1..n (TinkerPop's
-    * RepeatStep applies emit-first before the body and until-last after
-    * it; with only times() as the guard the two placements differ by
-    * exactly the depth-0 frame). Same path-erasing (h, cnt) BSP fold. */
-  def emitRepeat(body: Traversal => Traversal, times: Int): Traversal = {
-    require(times >= 1 && times <= 16, s"times out of range: $times")
-    var active = graft.util.cut(headFrame, eager = false)
-    var emitted = active // depth 0: the pre-emit release of the start frame
-    for (_ <- 1 to times) {
-      active = graft.util.cut(foldBody(active, body), eager = false)
-      emitted = emitted unionAll active
-    }
-    val folded = emitted.groupBy("h").agg(sum("cnt").as("cnt"))
-    Traversal(g, folded.select(col("h").as("v0")), 0, Some(folded), Map.empty)
-  }
+  /** Gremlin emit().repeat(body).times(n): the pre-emit placement, depths
+    * 0..n. See [[repeatLoop]]. */
+  def emitRepeat(body: Traversal => Traversal, times: Int): Traversal =
+    repeatLoop(body, times, None, Some(lit(true)), preEmit = true)
 
-  /** Gremlin repeat(body).until(pred).emit().times(maxLoops) — the
-    * combined form: walks whose head satisfies `pred` exit the loop (as in
-    * [[repeatUntil]]), AND every position a still-looping walk passes
-    * through is released (as in [[repeatEmit]]). Since per level the
-    * exit set ∪ continue set = the whole post-body frame, the accumulate
-    * is simply EVERY level's full frame, with only the continue side fed
-    * forward — each walk contributes once per level it reached, exiting
-    * walks stop contributing past their exit level, and guard-cut walks
-    * are already represented at their final position (TinkerPop's
-    * until-fires-before-emit ordering: no double release on exit). */
+  /** Gremlin repeat(body).until(pred).emit().times(maxLoops): every level
+    * is released, and only the walks `pred` does not stop loop again.
+    * See [[repeatLoop]]. */
   def repeatUntilEmit(body: Traversal => Traversal, pred: Column,
-      maxLoops: Int): Traversal = {
-    require(maxLoops >= 1 && maxLoops <= 16, s"until guard out of range: $maxLoops")
-    var active = headFrame
-    var emitted: Option[DataFrame] = None
-    for (_ <- 1 to maxLoops) {
+      maxLoops: Int): Traversal =
+    repeatLoop(body, maxLoops, Some(pred), Some(lit(true)), preEmit = false)
+
+  /** The path-erasing repeat loop behind every until/emit form: one BSP
+    * superstep per level over per-head (h, cnt) frames — the body's edge
+    * join and combine by head, graph_var_hop's flood shape with walk
+    * multiplicities, never a walk matrix. Heterogeneous-length constructs
+    * exist only here (the class comment's rule): released walks have
+    * different depths, so the walk matrix and step labels end at the loop
+    * and the aggregating terminals read the folded frame.
+    *
+    * RELEASE RULE, at level i of n (after the i-th body application):
+    *  - release the walks where
+    *    `coalesce(until, false) || coalesce(emit, false) || i == n`
+    *  - feed forward the walks where `!coalesce(until, false)`
+    *  - under `preEmit` (emit() placed before repeat()) the start frame
+    *    is released too
+    *  - everything released regroups by head.
+    * NULL-predicate heads are neither stopped nor emitted (has()'s
+    * three-valued logic); walks cut off by the guard continue downstream
+    * (TinkerPop). `emit()` is `emit = lit(true)`. The walk route
+    * ([[PropertyGraph.pathsUntil]]) applies the same rule to walk arrays.
+    *
+    * Placement: a level joins the vertex attributes only when an until or
+    * an emit predicate other than `lit(true)` may read them, and keeps
+    * only (h, cnt) and the two rule bits. A level that is both released
+    * and fed forward is a LAZY cut: it is
+    * vertex-sized, and without lineage truncation level k's plan nests
+    * every earlier level while both readers re-execute the join; lazy
+    * because nothing reads a level before the terminal fires, so an eager
+    * checkpoint per level only adds scheduling round-trips (measured ~15%
+    * off the fold family at sf0.1). */
+  private def repeatLoop(body: Traversal => Traversal, times: Int,
+      until: Option[Column], emit: Option[Column],
+      preEmit: Boolean): Traversal = {
+    require(times >= 1 && times <= 16, s"times out of range: $times")
+    def orFalse(p: Option[Column]) =
+      p.fold(lit(false))(org.apache.spark.sql.functions.coalesce(_, lit(false)))
+    val (stop, show) = (orFalse(until), orFalse(emit))
+    val readsVertices = until.isDefined || emit.exists(_ != lit(true))
+    val start = if (preEmit) graft.util.cut(headFrame, eager = false) else headFrame
+    var active = start
+    var released = if (preEmit) List(start) else Nil
+    for (i <- 1 to times) {
       val nxt = foldBody(active, body)
-      // cut() per level — same lineage-truncation reason as repeatUntil
-      val withV = graft.util.cut(
-        g.vertices.withColumnRenamed("id", "h").join(g.vhint(nxt), "h"),
-        eager = false)
-      val all = withV.select("h", "cnt")
-      emitted = Some(emitted.fold(all)(_ unionAll all))
-      active = withV.filter(!org.apache.spark.sql.functions
-        .coalesce(pred, lit(false))).select("h", "cnt")
+      // level n: the guard releases every walk and feeds none forward
+      if (i == times) released ::= nxt
+      else {
+        val level = graft.util.cut(
+          (if (readsVertices)
+            g.vertices.withColumnRenamed("id", "h").join(g.vhint(nxt), "h")
+          else nxt).select(col("h"), col("cnt"), stop.as("_stop"),
+            (stop || show).as("_out")), eager = false)
+        released ::= level.filter(col("_out")).select("h", "cnt")
+        active = level.filter(!col("_stop")).select("h", "cnt")
+      }
     }
-    val folded = emitted.get.groupBy("h").agg(sum("cnt").as("cnt"))
+    val folded = released.reduce(_ unionAll _)
+      .groupBy("h").agg(sum("cnt").as("cnt"))
     Traversal(g, folded.select(col("h").as("v0")), 0, Some(folded), Map.empty)
   }
 
@@ -1092,6 +1021,35 @@ object Traversal {
     }
   }
 
+  /** `[emit()] repeat(b) [until(p)] [emit([p])] times(n)` at the head of
+    * a step list → (pre-emit, body, until, emit argument, n, the rest). */
+  private object RepeatSteps {
+    def unapply(steps: List[(String, String)]): Option[(Boolean, String,
+        Option[String], Option[String], Int, List[(String, String)])] = {
+      val (pre, s1) = steps match {
+        case ("emit", "") :: tl => (true, tl)
+        case tl => (false, tl)
+      }
+      s1 match {
+        case ("repeat", b) :: s2 =>
+          val (until, s3) = s2 match {
+            case ("until", p) :: tl => (Some(p), tl)
+            case tl => (None, tl)
+          }
+          val (emit, s4) = s3 match {
+            case ("emit", p) :: tl => (Some(p), tl)
+            case tl => (None, tl)
+          }
+          s4 match {
+            case ("times", n) :: tl if n.matches("\\d+") =>
+              Some((pre, b, until, emit, n.toInt, tl))
+            case _ => None
+          }
+        case _ => None
+      }
+    }
+  }
+
   private val WalkLoopPos =
     "path-tracking loops must start the chain: V(...).repeat(...)" +
       "[.until(...)][.emit()].times(n).path()"
@@ -1190,8 +1148,8 @@ object Traversal {
     * inV()/outV()/otherV()/has(<pred>)/simplePath()/dedup()/
     * as('x')/where(neq('x'))/repeat(stepChain).times(n) (unrolled on the
     * walk matrix; where() legal in the body)/
-    * repeat(body).until(<pred>).times(n)/repeat(body).emit().times(n)/
-    * emit().repeat(body).times(n)/repeat(body).until(<pred>).emit().times(n)/
+    * repeat(body).until(<pred>)/.emit([<pred>])/.until(<pred>).emit()
+    * .times(n) and emit().repeat(body).times(n) (the [[repeatLoop]] forms)/
     * union(b1, b2, ...)/choose(<pred>, b1, b2)/coalesce(b1, b2, ...)/
     * optional(b)` (branch bodies are dot-chains of the
     * traversal-extending steps), optionally terminated by `path()`
@@ -1247,57 +1205,33 @@ object Traversal {
       case ("coin", n) :: tl if n.matches("\\d+") =>
         t = t.coin(n.toInt); loop(tl)
       case ("as", a) :: tl          => t = t.as(label(a)); loop(tl)
-      // Walk-materializing variants of the emit loops (terminal path()):
-      // same pathsUntil machinery as the until().path() case below, with
-      // every post-body level released — so where()/simplePath() work in
-      // THESE loop bodies too (the emit-side half of the r12 gap).
-      case ("repeat", b) :: ("until", p) :: ("emit", "") :: ("times", n) ::
-          ("path", "") :: Nil if n.matches("\\d+") =>
-        require(t.depth == 0, WalkLoopPos)
-        val (adj, filt) = walkBody(g, t, b)
-        result = Some(g.pathsUntil(t.df.select(col("v0").as("id")),
-          adj, pred(p), n.toInt, stepFilter = filt, emitEachLevel = true))
-        loop(Nil)
-      case ("repeat", b) :: ("emit", "") :: ("times", n) ::
-          ("path", "") :: Nil if n.matches("\\d+") =>
-        require(t.depth == 0, WalkLoopPos)
-        val (adj, filt) = walkBody(g, t, b)
-        result = Some(g.pathsUntil(t.df.select(col("v0").as("id")),
-          adj, lit(false), n.toInt, stepFilter = filt, emitEachLevel = true))
-        loop(Nil)
-      case ("repeat", b) :: ("until", p) :: ("emit", "") :: ("times", n) :: tl
-          if n.matches("\\d+") =>
-        t = t.repeatUntilEmit(branchFn(b), pred(p), n.toInt); loop(tl)
-      // repeat(step).until(pred).times(n).path() — the WALK-MATERIALIZING
-      // loop (heterogeneous-length paths as one array column): routed to
-      // PropertyGraph.pathsUntil, which the path-erasing fold can't
-      // express. Only valid as the whole chain (the array walk has no
-      // prefix to splice); the body is one adjacency step (each level is
-      // one adjacency join + array_append) optionally followed by
-      // where()/simplePath() steps — the r12 gap closed: those read the
-      // walk PREFIX, which the fold erases but the path array carries, so
-      // inside an until loop they compile to a per-level codegen'd filter
-      // on the walk (pathsUntil's stepFilter hook). where() labels must
-      // point at the chain start (as('a') before the repeat — the only
-      // position the walk array holds besides loop levels).
-      case ("repeat", b) :: ("until", p) :: ("times", n) :: ("path", "") :: Nil
-          if n.matches("\\d+") =>
-        require(t.depth == 0, WalkLoopPos)
-        val (adj, filt) = walkBody(g, t, b)
-        result = Some(g.pathsUntil(t.df.select(col("v0").as("id")),
-          adj, pred(p), n.toInt, stepFilter = filt)); loop(Nil)
-      case ("repeat", b) :: ("until", p) :: ("times", n) :: tl
-          if n.matches("\\d+") =>
-        t = t.repeatUntil(branchFn(b), pred(p), n.toInt); loop(tl)
-      case ("repeat", b) :: ("emit", "") :: ("times", n) :: tl
-          if n.matches("\\d+") =>
-        t = t.repeatEmit(branchFn(b), n.toInt); loop(tl)
-      case ("repeat", b) :: ("emit", ep) :: ("times", n) :: tl
-          if n.matches("\\d+") =>
-        t = t.repeatEmit(branchFn(b), n.toInt, pred(ep)); loop(tl)
-      case ("emit", "") :: ("repeat", b) :: ("times", n) :: tl
-          if n.matches("\\d+") =>
-        t = t.emitRepeat(branchFn(b), n.toInt); loop(tl)
+      // The until/emit loops, one case for every modulator placement. A
+      // chain that ends in path() with until() and/or a bare emit() keeps
+      // its walks: PropertyGraph.pathsUntil carries each walk as an array
+      // (heterogeneous lengths), so where()/simplePath() in the body read
+      // the prefix as a per-level filter. Only valid as the whole chain
+      // (the array walk has no prefix to splice). Every other form is the
+      // path-erasing fold; a plain repeat(b).times(n) is unrolled before
+      // parsing (expandRepeats), so one that reaches here is refused.
+      case RepeatSteps(pre, b, until, emit, n, tl) =>
+        require(if (pre) until.isEmpty && emit.isEmpty
+          else (until.isDefined || emit.isDefined) &&
+            !(until.isDefined && emit.exists(_.nonEmpty)),
+          "unsupported loop: " + rest.take(rest.length - tl.length)
+            .map { case (s0, a0) => s"$s0($a0)" }.mkString("."))
+        if (!pre && emit.forall(_.isEmpty) && tl == List(("path", ""))) {
+          require(t.depth == 0, WalkLoopPos)
+          val (adj, filt) = walkBody(g, t, b)
+          result = Some(g.pathsUntil(t.df.select(col("v0").as("id")), adj,
+            until.fold(lit(false))(pred), n, stepFilter = filt,
+            emitEachLevel = emit.isDefined))
+          loop(Nil)
+        } else {
+          t = t.repeatLoop(branchFn(b), n, until.map(pred),
+            if (pre) Some(lit(true))
+            else emit.map(e => if (e.isEmpty) lit(true) else pred(e)), pre)
+          loop(tl)
+        }
       // Gremlin match() — the declarative pattern step: each clause is
       // `as('x').out|in('l').as('y')` (one labeled edge term; in() flips
       // it) or `as('x').has(<pred>)` (a property constraint on a pattern

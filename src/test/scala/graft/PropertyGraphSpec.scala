@@ -911,6 +911,88 @@ class PropertyGraphSpec extends AnyFunSuite {
         ".until(label='region').times(3).path()"))
   }
 
+  test("traversal DSL: repeat loops ≡ a plain-Scala replay of the release rule") {
+    // An independent (head → count) replay over the collected graph: at
+    // level i of n release where until || emit || i == n, feed forward
+    // where !until, pre-emit also releases the start; NULL reads false.
+    val vs = g.vertices.select("id", "label", "val").collect()
+    val label = vs.map(r => r.getLong(0) -> r.getString(1)).toMap
+    val value = vs.map(r =>
+      r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Double])).toMap
+    val es = g.edges.select("src", "dst").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val outAdj = es.groupMap(_._1)(_._2)
+    val bothAdj = (es ++ es.map(_.swap)).groupMap(_._1)(_._2)
+    def starts(l: String): Map[Long, Long] =
+      label.collect { case (h, `l`) => h -> 1L }
+    def replay(start: Map[Long, Long], adj: Map[Long, Array[Long]], n: Int,
+        until: Long => Boolean, emit: Long => Boolean,
+        pre: Boolean): Map[Long, Long] = {
+      var active = start
+      var released: Seq[(Long, Long)] = if (pre) start.toSeq else Nil
+      for (i <- 1 to n) {
+        val level = active.toSeq.flatMap { case (h, c) =>
+          adj.getOrElse(h, Array.empty[Long]).map(_ -> c) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        released ++= level.filter { case (h, _) => until(h) || emit(h) || i == n }
+        active = level.filter { case (h, _) => !until(h) }
+      }
+      released.groupMapReduce(_._1)(_._2)(_ + _)
+    }
+    def heads(df: org.apache.spark.sql.DataFrame, h: String, c: String) =
+      df.select(col(h).cast("long"), col(c).cast("long")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def bulk(t: graft.graph.Traversal) = heads(t.bulk.get, "h", "cnt")
+    val never = (_: Long) => false
+    val always = (_: Long) => true
+    val isRegion = (h: Long) => label(h) == "region"
+    val isNation = (h: Long) => label(h) == "nation"
+    val rich = (h: Long) => value(h).exists(_ > 5000.0) // NULL: false
+
+    val cases = Seq(
+      "until" -> (bulk(g.V(col("label") === "order")
+        .repeatUntil(_.out(), col("label") === "region", 4)),
+        replay(starts("order"), outAdj, 4, isRegion, never, pre = false)),
+      "emit()" -> (bulk(g.V(col("label") === "customer").repeatEmit(_.out(), 3)),
+        replay(starts("customer"), outAdj, 3, never, always, pre = false)),
+      "emit(p)" -> (bulk(g.V(col("label") === "customer")
+        .repeatEmit(_.both(), 2, col("label") === "nation")),
+        replay(starts("customer"), bothAdj, 2, never, isNation, pre = false)),
+      "pre-emit" -> (bulk(g.V(col("label") === "customer").emitRepeat(_.out(), 3)),
+        replay(starts("customer"), outAdj, 3, never, always, pre = true)),
+      "until + emit()" -> (bulk(g.V(col("label") === "order")
+        .repeatUntilEmit(_.out(), col("val") > 5000.0, 4)),
+        replay(starts("order"), outAdj, 4, rich, always, pre = false)),
+      "until().path()" -> (heads(g.traverse("V(label='order').repeat(out())" +
+          ".until(label='region').times(3).path()").groupBy("id").count(),
+          "id", "count"),
+        replay(starts("order"), outAdj, 3, isRegion, never, pre = false)),
+      "until().emit().path()" -> (heads(g.traverse("V(label='order')" +
+          ".repeat(out()).until(label='region').emit().times(3).path()")
+          .groupBy("id").count(), "id", "count"),
+        replay(starts("order"), outAdj, 3, isRegion, always, pre = false)),
+      "emit().path()" -> (heads(g.traverse("V(label='customer')" +
+          ".repeat(both()).emit().times(2).path()").groupBy("id").count(),
+          "id", "count"),
+        replay(starts("customer"), bothAdj, 2, never, always, pre = false)))
+    cases.foreach { case (form, (got, want)) =>
+      assert(want.nonEmpty, s"$form: degenerate replay")
+      if (got != want) fail(s"$form: ${(got.keySet ++ want.keySet)
+        .count(k => got.get(k) != want.get(k))} heads differ from the replay")
+    }
+    // the replays are not all one map: until, emit(p) and pre-emit bite
+    val distinct = cases.map(_._2._2).distinct.size
+    assert(distinct == cases.size, s"only $distinct distinct replays")
+    // routing: emit(p)...path() stays a fold (a depth-0 walk matrix, not
+    // walk arrays), and until() with emit(p) or after a pre-emit is refused
+    assert(g.traverse("V(label='customer').repeat(out())" +
+      ".emit(label='nation').times(2).path()").columns.toSeq == Seq("v0"))
+    intercept[IllegalArgumentException](g.traverse("V(label='order')" +
+      ".repeat(out()).until(label='region').emit(label='nation').times(3).count()"))
+    intercept[IllegalArgumentException](g.traverse("V(label='order')" +
+      ".emit().repeat(out()).until(label='region').times(3).count()"))
+  }
+
   test("traversal DSL: repeat().times() — parser unrolling ≡ fluent fold") {
     val viaParser = g.traverse(
       "V(label='customer').repeat(both('in_nation')).times(2).simplePath().count()")
@@ -1258,6 +1340,9 @@ class PropertyGraphSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] {
       g.V(col("label") === "order").outE("contains").outE("contains")
+    }
+    intercept[IllegalArgumentException] {
+      g.V(col("label") === "order").outE("by").both()
     }
   }
 
