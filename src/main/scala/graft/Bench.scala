@@ -45,7 +45,8 @@ object Bench {
     }
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // Ingest-time artifacts, built before the timing loop: the property
-    // graph (vertex/edge caches + the GraphX view) and the shared
+    // graph (staged to Parquet when the fixture is built; here its
+    // columnar caches are filled + the GraphX view) and the shared
     // normalized-embeddings view. The reference family STORES its graph —
     // queries hit stored state, they don't re-derive it — so per-query
     // numbers here measure query execution against the stored graph, not

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SortExec, SparkPlan}
@@ -20,8 +21,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * then once more with `collect()` of the key's own frame — the action the
   * benchmark runs — whose jobs are not counted. Per key and directory it
   * prints one JSON line to stdout: both count runs' seconds, jobs,
-  * stages, tasks, query executions, task CPU and shuffle bytes written,
-  * the result rows, and the operator counts (joins by strategy, shuffle
+  * stages, tasks, query executions, task CPU, task deserialization CPU,
+  * GC time, generated classes compiled and shuffle bytes written, the
+  * result rows, and the operator counts (joins by strategy, shuffle
   * exchanges, sorts) summed over every query execution of run1, of run2
   * and of the collect pass (cuts, checkpoints and streaming micro-batch
   * frames included, and the terminal plan of the key's result). The
@@ -47,9 +49,12 @@ object Probe {
 
   /** One run of a key: wall seconds, the Spark jobs started, the stages
     * completed and their tasks, the completed stages' executor CPU
-    * seconds and shuffle bytes written, and the query executions it made. */
+    * seconds, task deserialization CPU seconds (the task binary: closure
+    * and RDD lineage), JVM GC seconds and shuffle bytes written, the
+    * generated classes compiled, and the query executions it made. */
   final case class Run(sec: Double, jobs: Long, stages: Long, tasks: Long,
-      cpuSec: Double, shuffleBytes: Long, plans: Seq[Exec]) {
+      cpuSec: Double, deserCpuSec: Double, gcSec: Double, compiles: Long,
+      shuffleBytes: Long, plans: Seq[Exec]) {
     def execs: Int = plans.size
     def ops: Seq[(String, Int)] = opCounts(plans)
   }
@@ -99,7 +104,7 @@ object Probe {
     * key's micro-batches are seen too: a stream's session is cloned with
     * the listeners registered at its start. */
   def measure(spark: SparkSession, key: String, dir: String): Record = {
-    val jobs, stages, tasks, cpuNs, shuffled = new AtomicLong(0)
+    val jobs, stages, tasks, cpuNs, deserNs, gcMs, shuffled = new AtomicLong(0)
     val execs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val sched = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -111,6 +116,8 @@ object Probe {
         val m = s.stageInfo.taskMetrics
         if (m != null) {
           cpuNs.addAndGet(m.executorCpuTime)
+          deserNs.addAndGet(m.executorDeserializeCpuTime)
+          gcMs.addAndGet(m.jvmGCTime)
           shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         }
         ()
@@ -126,6 +133,9 @@ object Probe {
     }
     spark.sparkContext.addSparkListener(sched)
     spark.listenerManager.register(queries)
+    // generated classes compiled in this JVM so far (driver and executors
+    // share it in local mode)
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // the executions seen since the last call, in order
     def drained(): Vector[Exec] = {
       GraftBridge.drain(spark)
@@ -138,12 +148,14 @@ object Probe {
     }
     try {
       def run(): (Run, Long) = {
-        Seq(jobs, stages, tasks, cpuNs, shuffled).foreach(_.set(0))
+        Seq(jobs, stages, tasks, cpuNs, deserNs, gcMs, shuffled).foreach(_.set(0))
+        val c0 = compiled()
         val t0 = System.nanoTime()
         val rows = SparkEntry.queries(key)(spark, dir).count()
         val sec = (System.nanoTime() - t0) / 1e9
         val plans = drained()
         (Run(sec, jobs.get(), stages.get(), tasks.get(), cpuNs.get() / 1e9,
+          deserNs.get() / 1e9, gcMs.get() / 1e3, compiled() - c0,
           shuffled.get(), plans), rows)
       }
       val (run1, _) = run()
@@ -159,12 +171,14 @@ object Probe {
     }
   }
 
-  private def json(r: Record): String = {
+  private[graft] def json(r: Record): String = {
     def ops(o: Seq[(String, Int)]) =
       o.map { case (j, n) => s""""$j":$n""" }.mkString("{", ",", "}")
     def run(x: Run) = f"""{"s":${x.sec}%.3f,"jobs":${x.jobs},""" +
       s""""stages":${x.stages},"tasks":${x.tasks},"execs":${x.execs},""" +
-      f""""cpu_s":${x.cpuSec}%.3f,"shuffle_mb":${x.shuffleBytes / 1e6}%.3f,""" +
+      f""""cpu_s":${x.cpuSec}%.3f,"deser_cpu_s":${x.deserCpuSec}%.3f,""" +
+      f""""gc_s":${x.gcSec}%.3f,"compiles":${x.compiles},""" +
+      f""""shuffle_mb":${x.shuffleBytes / 1e6}%.3f,""" +
       s""""ops":${ops(x.ops)}}"""
     s"""{"key":"${r.key}","dir":"${r.dir}","rows":${r.rows},""" +
       s""""run1":${run(r.run1)},"run2":${run(r.run2)},"ops":${ops(r.ops)}}"""

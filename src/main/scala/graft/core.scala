@@ -100,7 +100,7 @@ object Views {
   /** Materialize `sql` once; returns the view name to reference. */
   def materialize(s: SparkSession, dir: String, name: String, sql: => String): String =
     memo.getOrElseUpdate(s, (dir, name)) {
-      val vn = s"graft_${name}_${Integer.toHexString(dir.hashCode)}"
+      val vn = s"graft_${name}_${Staging.tag(dir)}"
       s.sql(sql).persist().createOrReplaceTempView(vn)
       vn
     }
@@ -118,7 +118,7 @@ object Views {
     * threshold, like any other eager cut. */
   def checkpointed(s: SparkSession, dir: String, name: String, sql: => String): String =
     memo.getOrElseUpdate(s, (dir, name)) {
-      val vn = s"graft_${name}_${Integer.toHexString(dir.hashCode)}"
+      val vn = s"graft_${name}_${Staging.tag(dir)}"
       util.cut(s.sql(sql)).createOrReplaceTempView(vn)
       vn
     }
@@ -140,7 +140,7 @@ object TableStats {
   /** Ensure `table` is analyzed; returns the catalog table name to query. */
   def analyzed(s: SparkSession, dir: String, table: String): String =
     memo.getOrElseUpdate(s, (dir, table)) {
-      val tn = s"graft_stats_${table}_${Integer.toHexString(dir.hashCode)}"
+      val tn = s"graft_stats_${table}_${Staging.tag(dir)}"
       if (!s.catalog.tableExists(tn)) {
         s.sql(s"CREATE TABLE $tn USING parquet LOCATION '$dir/$table.parquet'")
         s.sql(s"ANALYZE TABLE $tn COMPUTE STATISTICS FOR ALL COLUMNS")
@@ -182,6 +182,15 @@ object Staging {
     java.nio.file.Files.createDirectories(d)
     d.toString
   }
+
+  /** The name tag of a fixture directory in staged-copy, temp-view and
+    * stats-table names: SHA-256 hex of the path. A 32-bit `hashCode` lets
+    * two directories ("/x/Aa" and "/x/BB") share a staged copy or replace
+    * each other's view. */
+  def tag(dir: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
 
   private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
 

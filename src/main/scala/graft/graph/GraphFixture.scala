@@ -34,11 +34,15 @@ object GraphFixture {
 
   def vid(tag: Int, key: Column): Column = lit(tag * B) + key.cast("long")
 
-  // Graph construction is shared by ~14 operator keys; memoize + persist per
-  // (session, dir) so Verify/Bench build it once (the reference family's
-  // analog: the graph is stored, not re-derived per query). SessionMemo
-  // drops entries when the SparkContext stops, so long-lived processes that
-  // cycle sessions don't pin dead sessions + cached plans.
+  // Graph construction is shared by every graph key; it runs once per
+  // (session, dir) (the reference family's analog: the graph is stored, not
+  // re-derived per query). The 8-way build is written to staged Parquet and
+  // the graph is the columnar cache of that file scan: each task ships a
+  // scan's small RDD instead of the whole build lineage, the cached plan
+  // pins no build broadcast (the 'colocated' join's hash relation), and a
+  // lost cache block recomputes from the staged files, not from the build.
+  // SessionMemo drops entries when the SparkContext stops, so long-lived
+  // processes that cycle sessions don't pin dead sessions + cached plans.
   private val memo = new graft.SessionMemo[String, PropertyGraph]
 
   def apply(s: SparkSession, dir: String): PropertyGraph =
@@ -91,7 +95,7 @@ object GraphFixture {
         concat(lit("user_"), col("user_id").cast("string")), lit("public"), nullD),
       vpart(t("events"), 8, "event_id", "event", col("event_type"),
         lit("public"), col("value"))
-    ).reduce(_ unionAll _).persist()
+    ).reduce(_ unionAll _)
 
     def epart(df: DataFrame, st: Int, sk: String, dt: Int, dk: String,
         label: String, weight: Column): DataFrame =
@@ -122,9 +126,13 @@ object GraphFixture {
     ).reduce(_ unionAll _)
       .withColumn("vis",
         when((col("src") + col("dst")) % 7 === 0, "secret").otherwise("public"))
-      .persist()
 
-    PropertyGraph(vertices, edges)
+    val stage = graft.Staging.fresh("graph")
+    def stored(df: DataFrame, name: String): DataFrame = {
+      df.write.parquet(s"$stage/$name")
+      s.read.parquet(s"$stage/$name").persist()
+    }
+    PropertyGraph(stored(vertices, "vertices"), stored(edges, "edges"))
   }
 }
 

@@ -21,6 +21,10 @@ import org.apache.spark.storage.StorageLevel
   *  - vertices/edges are plain DFs: partitioned by id/src hash at shuffle
   *    time; no driver-side materialization anywhere (sources for varHop are
   *    DFs, not collected lists).
+  *  - the fixture graph ([[GraphFixture]]) is a stored table: staged Parquet
+  *    read back under a columnar cache. A task ships the scan's small RDD,
+  *    not the build's lineage; the cached plan pins no build broadcast; a
+  *    lost cache block recomputes from the files. Column pruning holds.
   *  - traversals are equi-joins on long keys — shuffled hash / SMJ with AQE,
   *    broadcast when a frontier or dim side is small.
   *  - varHop/minHopsTo are Pregel hop-floods over the shared GraphX view:

@@ -83,7 +83,7 @@ object QualityOps extends OpModule {
     Op("stream_scd2_maintain",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        val stage = graft.Staging.dir(s"scd2-src-${dir.hashCode.toHexString}")
+        val stage = graft.Staging.dir(s"scd2-src-${graft.Staging.tag(dir)}")
         val inDir = new java.io.File(s"$stage/in")
         if (!new java.io.File(s"$stage/_STAGED").exists()) {
           val e = Tables(s, dir, "events")

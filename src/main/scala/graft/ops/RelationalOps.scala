@@ -31,7 +31,7 @@ object RelationalOps extends OpModule {
   private val bucketMemo = new graft.SessionMemo[String, (String, String)]
   private def bucketedFacts(s: SparkSession, dir: String): (String, String) =
     bucketMemo.getOrElseUpdate(s, dir) {
-      val tag = Integer.toHexString(dir.hashCode)
+      val tag = graft.Staging.tag(dir)
       val lt = s"lineitem_bkt_$tag"; val ot = s"orders_bkt_$tag"
       Tables(s, dir, "lineitem").write.mode("overwrite")
         .bucketBy(16, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
@@ -172,7 +172,7 @@ object RelationalOps extends OpModule {
       (s, dir) => {
         val src = Tables(s, dir, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_quantity")
-        val out = graft.Staging.dir(s"src-orc-${dir.hashCode.toHexString}")
+        val out = graft.Staging.dir(s"src-orc-${graft.Staging.tag(dir)}")
         if (!new java.io.File(s"$out/_SUCCESS").exists())
           src.write.mode("overwrite").orc(out)
         s.read.schema(src.schema).orc(out)
@@ -195,7 +195,7 @@ object RelationalOps extends OpModule {
     Op("source_text",
       (s, dir) => {
         val src = Tables(s, dir, "documents").select("doc_id", "text")
-        val out = graft.Staging.dir(s"src-text-${dir.hashCode.toHexString}")
+        val out = graft.Staging.dir(s"src-text-${graft.Staging.tag(dir)}")
         if (!new java.io.File(s"$out/_SUCCESS").exists())
           // this Spark build's base64 MIME-chunks (\r\n every 76 chars) —
           // strip the breaks or each record spans lines; unbase64's MIME
@@ -224,7 +224,7 @@ object RelationalOps extends OpModule {
     Op("source_sequencefile",
       (s, dir) => {
         import s.implicits._
-        val stage = graft.Staging.dir(s"src-seq-${dir.hashCode.toHexString}")
+        val stage = graft.Staging.dir(s"src-seq-${graft.Staging.tag(dir)}")
         if (!new java.io.File(s"$stage/seq/_SUCCESS").exists()) {
           val src = Tables(s, dir, "orders")
             .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -261,7 +261,7 @@ object RelationalOps extends OpModule {
     Op("source_binaryfile",
       (s, dir) => {
         import s.implicits._
-        val stage = graft.Staging.dir(s"src-binf-${dir.hashCode.toHexString}")
+        val stage = graft.Staging.dir(s"src-binf-${graft.Staging.tag(dir)}")
         if (!new java.io.File(s"$stage/_SUCCESS").exists()) {
           val hconf = new org.apache.spark.util.SerializableConfiguration(
             s.sparkContext.hadoopConfiguration)

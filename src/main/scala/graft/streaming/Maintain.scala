@@ -25,7 +25,7 @@ object Maintain {
   /** Stage `src` once for (`key`, `dir`), range-partitioned on `by` into 3
     * files; returns the directory. */
   def stage(key: String, dir: String, by: Column*)(src: => DataFrame): String = {
-    val out = graft.Staging.dir(s"$key-src-${dir.hashCode.toHexString}")
+    val out = graft.Staging.dir(s"$key-src-${graft.Staging.tag(dir)}")
     if (!new java.io.File(s"$out/_SUCCESS").exists())
       src.repartitionByRange(3, by: _*).write.mode("overwrite").parquet(out)
     out

@@ -31,7 +31,7 @@ object StreamOps extends OpModule {
     // table. Oracle-checkable because the drained stream ≡ the batch query.
     Op("source_stream_events",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"events-src-${dir.hashCode.toHexString}")
+        val stage = graft.Staging.dir(s"events-src-${graft.Staging.tag(dir)}")
         val dst = java.nio.file.Paths.get(s"$stage/events.parquet")
         if (!java.nio.file.Files.exists(dst))
           try java.nio.file.Files.copy(
@@ -120,7 +120,7 @@ object StreamOps extends OpModule {
     // StreamingSpec's file-sink test).
     Op("stream_graph_ingest",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"events-src-${dir.hashCode.toHexString}")
+        val stage = graft.Staging.dir(s"events-src-${graft.Staging.tag(dir)}")
         val src = java.nio.file.Paths.get(s"$dir/events.parquet")
         val dst = java.nio.file.Paths.get(s"$stage/events.parquet")
         if (!java.nio.file.Files.exists(dst))
@@ -193,7 +193,7 @@ object StreamOps extends OpModule {
     // shuffles its (25-row) group set.
     Op("stream_static_enrich",
       (s, dir) => {
-        val stage = graft.Staging.dir(s"events-src-${dir.hashCode.toHexString}")
+        val stage = graft.Staging.dir(s"events-src-${graft.Staging.tag(dir)}")
         val dst = java.nio.file.Paths.get(s"$stage/events.parquet")
         if (!java.nio.file.Files.exists(dst))
           try java.nio.file.Files.copy(

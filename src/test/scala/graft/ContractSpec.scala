@@ -22,6 +22,21 @@ class ContractSpec extends AnyFunSuite {
     assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 
+  test("Staging.tag: paths whose hashCodes collide get distinct tags and views") {
+    // "Aa" and "BB" share String.hashCode, and so do these two paths: a
+    // hashCode-named staged copy or temp view would be shared by both
+    val (a, b) = ("/x/Aa", "/x/BB")
+    assert(a.hashCode == b.hashCode)
+    assert(Staging.tag(a) != Staging.tag(b))
+    assert(Staging.tag(a) == Staging.tag(a))
+    val spark = TestSpark.spark
+    val va = Views.materialize(spark, a, "tag_spec", "SELECT 1 AS v")
+    val vb = Views.materialize(spark, b, "tag_spec", "SELECT 2 AS v")
+    assert(va != vb)
+    assert(spark.table(va).collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(spark.table(vb).collect().map(_.getInt(0)).toSeq == Seq(2))
+  }
+
   test("sink_parquet writes one key-sorted file per partition directory") {
     // The layout claims behind the sink_parquet key that its oracle CAN'T
     // see: (a) clustering by the partition column yields exactly one file

@@ -550,4 +550,42 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(CutStatsSpec.shuffledScans(p.executedPlan, Seq("a", "b")) == 0, p.executedPlan)
     }
   }
+
+  test("the fixture graph is a columnar cache over staged Parquet: small task binaries, no pinned broadcast, recompute from files") {
+    import org.apache.spark.SparkEnv
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val g = graph.GraphFixture(spark, TestSpark.sf)
+    val edgeCount = g.edges.count()
+    g.vertices.count()
+    // the RDD each task of a scan ships and deserializes. When the graph
+    // was a cache over the 8-way build itself, it carried the whole build
+    // lineage: 139,535 bytes (edges) and 100,093 (vertices) here.
+    def taskBytes(df: DataFrame): Int = SparkEnv.get.closureSerializer
+      .newInstance().serialize(df.queryExecution.toRdd).limit()
+    val bytes = Seq(g.edges.select("src", "dst"), g.vertices.select("id"))
+      .map(taskBytes)
+    assert(bytes.forall(_ < 64 * 1024), s"edges, vertices task RDD bytes: $bytes")
+    def cached(df: DataFrame): InMemoryRelation =
+      df.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r
+      }.getOrElse(fail(s"not cached: ${df.queryExecution.withCachedData}"))
+    def broadcasts(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => broadcasts(a.executedPlan)
+      case q: QueryStageExec => broadcasts(q.plan)
+      case b: BroadcastExchangeExec => Seq(b)
+      case _ => (p.children ++ p.subqueries).flatMap(broadcasts)
+    }
+    for (df <- Seq(g.edges, g.vertices)) {
+      val plan = cached(df).cacheBuilder.cachedPlan
+      assert(broadcasts(plan).isEmpty, plan)
+    }
+    // a lost cache block recomputes from the stored graph
+    val id = cached(g.edges).cacheBuilder.cachedColumnBuffers.id
+    SparkEnv.get.blockManager.master.removeRdd(id, blocking = true)
+    assert(g.edges.count() == edgeCount)
+  }
 }

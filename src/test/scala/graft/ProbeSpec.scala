@@ -54,6 +54,21 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(probeListeners.isEmpty, probeListeners)
   }
 
+  test("each run records task deserialization CPU, GC time and compiled classes") {
+    val r = Probe.measure(spark, "graph_pagerank", sf)
+    for (x <- Seq(r.run1, r.run2)) {
+      val seen = (x.sec, x.deserCpuSec, x.gcSec, x.compiles)
+      assert(x.deserCpuSec >= 0 && x.gcSec >= 0 && x.compiles >= 0, seen)
+      assert(x.deserCpuSec <= x.sec * spark.sparkContext.defaultParallelism, seen)
+    }
+    val line = Probe.json(r)
+    for (run <- Seq("run1", "run2"); f <- Seq("deser_cpu_s", "gc_s", "compiles")) {
+      val v = raw"""("$run":\{[^{]*"$f":)(-?[0-9.]+)""".r
+        .findFirstMatchIn(line).map(_.group(2).toDouble)
+      assert(v.exists(_ >= 0), s"$run.$f in $line")
+    }
+  }
+
   private val copies = scala.collection.mutable.ArrayBuffer.empty[Path]
 
   /** A fresh copy of the fixture directory: the memoized graph and its
