@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -19,18 +20,20 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Runs under [[Bench.session]] WITHOUT [[Bench.warmup]]. Each key runs
   * twice with `count()`, the action the recorded job tables counted, and
   * then once more with `collect()` of the key's own frame — the action the
-  * benchmark runs — whose jobs are not counted. Per key and directory it
-  * prints one JSON line to stdout: both count runs' seconds, jobs,
-  * stages, tasks, query executions, task CPU, task deserialization CPU,
-  * GC time, generated classes compiled and shuffle bytes written, the
-  * result rows, and the operator counts (joins by strategy, shuffle
-  * exchanges, sorts) summed over every query execution of run1, of run2
-  * and of the collect pass (cuts, checkpoints and streaming micro-batch
-  * frames included, and the terminal plan of the key's result). The
-  * executed plans of run1 and of the collect pass go to stderr in
-  * formatted mode, one header per execution: run1's are the only ones
-  * that show a lazily built artifact's plans (by the collect pass it is
-  * cached), the collect pass's are the plans the benchmark runs.
+  * benchmark runs. `count()` may prune a key's work away (a left join
+  * whose right side is unique and unread is dropped), so the collect pass
+  * is measured too. Per key and directory it prints one JSON line to
+  * stdout: each pass's seconds, jobs, stages, tasks, query executions,
+  * task CPU, task deserialization CPU, JVM GC time, generated classes
+  * compiled, shuffle bytes written and read and bytes spilled, the result
+  * rows, and the operator counts (joins by strategy, shuffle exchanges,
+  * sorts) summed over every query execution of the pass (cuts,
+  * checkpoints and streaming micro-batch frames included, and the
+  * terminal plan of the key's result). The executed plans of run1 and of
+  * the collect pass go to stderr in formatted mode, one header per
+  * execution: run1's are the only ones that show a lazily built
+  * artifact's plans (by the collect pass it is cached), the collect
+  * pass's are the plans the benchmark runs.
   * With K it also writes the K× blow-up ([[ScaleBench.build]]) and repeats
   * the lines for it.
   *
@@ -50,21 +53,22 @@ object Probe {
   /** One run of a key: wall seconds, the Spark jobs started, the stages
     * completed and their tasks, the completed stages' executor CPU
     * seconds, task deserialization CPU seconds (the task binary: closure
-    * and RDD lineage), JVM GC seconds and shuffle bytes written, the
-    * generated classes compiled, and the query executions it made. */
+    * and RDD lineage), shuffle bytes written and read and bytes spilled
+    * (memory plus disk), the JVM's GC seconds over the run (read from its
+    * collector beans: in local mode the tasks share one JVM, so the tasks'
+    * own GC times count one pause once per running task), the generated
+    * classes compiled, and the query executions it made. */
   final case class Run(sec: Double, jobs: Long, stages: Long, tasks: Long,
       cpuSec: Double, deserCpuSec: Double, gcSec: Double, compiles: Long,
-      shuffleBytes: Long, plans: Seq[Exec]) {
+      shuffleBytes: Long, shuffleReadBytes: Long, spillBytes: Long, plans: Seq[Exec]) {
     def execs: Int = plans.size
     def ops: Seq[(String, Int)] = opCounts(plans)
   }
 
   /** One measured key: both count runs, run2's result rows, and the
-    * executions of the collect pass. */
+    * collect pass. */
   final case class Record(key: String, dir: String, run1: Run, run2: Run,
-      rows: Long, plans: Seq[Exec]) {
-    def ops: Seq[(String, Int)] = opCounts(plans)
-  }
+      rows: Long, collect: Run)
 
   /** Counted operators: joins by strategy, shuffle exchanges (broadcast
     * exchanges are not counted) and sorts. */
@@ -104,7 +108,7 @@ object Probe {
     * key's micro-batches are seen too: a stream's session is cloned with
     * the listeners registered at its start. */
   def measure(spark: SparkSession, key: String, dir: String): Record = {
-    val jobs, stages, tasks, cpuNs, deserNs, gcMs, shuffled = new AtomicLong(0)
+    val jobs, stages, tasks, cpuNs, deserNs, shuffled, read, spilled = new AtomicLong(0)
     val execs = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val sched = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -117,8 +121,9 @@ object Probe {
         if (m != null) {
           cpuNs.addAndGet(m.executorCpuTime)
           deserNs.addAndGet(m.executorDeserializeCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
           shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
         }
         ()
       }
@@ -136,6 +141,9 @@ object Probe {
     // generated classes compiled in this JVM so far (driver and executors
     // share it in local mode)
     def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // collection milliseconds of the JVM's collectors so far
+    def gcMs(): Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(b => math.max(b.getCollectionTime, 0L)).sum
     // the executions seen since the last call, in order
     def drained(): Vector[Exec] = {
       GraftBridge.drain(spark)
@@ -147,24 +155,24 @@ object Probe {
       out
     }
     try {
-      def run(): (Run, Long) = {
-        Seq(jobs, stages, tasks, cpuNs, deserNs, gcMs, shuffled).foreach(_.set(0))
-        val c0 = compiled()
+      def run(action: org.apache.spark.sql.DataFrame => Long): (Run, Long) = {
+        Seq(jobs, stages, tasks, cpuNs, deserNs, shuffled, read, spilled).foreach(_.set(0))
+        val (c0, g0) = (compiled(), gcMs())
         val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(key)(spark, dir).count()
+        val rows = action(SparkEntry.queries(key)(spark, dir))
         val sec = (System.nanoTime() - t0) / 1e9
         val plans = drained()
         (Run(sec, jobs.get(), stages.get(), tasks.get(), cpuNs.get() / 1e9,
-          deserNs.get() / 1e9, gcMs.get() / 1e3, compiled() - c0,
-          shuffled.get(), plans), rows)
+          deserNs.get() / 1e9, (gcMs() - g0) / 1e3, compiled() - c0,
+          shuffled.get(), read.get(), spilled.get(), plans), rows)
       }
-      val (run1, _) = run()
-      val (run2, rows) = run()
+      val (run1, _) = run(_.count())
+      val (run2, rows) = run(_.count())
       // count() plans a pruned aggregate over the key's frame (empty scan
       // schemas, no final sort, other join sizes); the plans of its result
       // are those of collect()
-      SparkEntry.queries(key)(spark, dir).collect()
-      Record(key, dir, run1, run2, rows, drained())
+      val (collect, _) = run(_.collect().length.toLong)
+      Record(key, dir, run1, run2, rows, collect)
     } finally {
       spark.sparkContext.removeSparkListener(sched)
       spark.listenerManager.unregister(queries)
@@ -179,9 +187,11 @@ object Probe {
       f""""cpu_s":${x.cpuSec}%.3f,"deser_cpu_s":${x.deserCpuSec}%.3f,""" +
       f""""gc_s":${x.gcSec}%.3f,"compiles":${x.compiles},""" +
       f""""shuffle_mb":${x.shuffleBytes / 1e6}%.3f,""" +
+      f""""shuffle_read_mb":${x.shuffleReadBytes / 1e6}%.3f,""" +
+      f""""spill_mb":${x.spillBytes / 1e6}%.3f,""" +
       s""""ops":${ops(x.ops)}}"""
     s"""{"key":"${r.key}","dir":"${r.dir}","rows":${r.rows},""" +
-      s""""run1":${run(r.run1)},"run2":${run(r.run2)},"ops":${ops(r.ops)}}"""
+      s""""run1":${run(r.run1)},"run2":${run(r.run2)},"collect":${run(r.collect)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -195,7 +205,7 @@ object Probe {
     }
     for (key <- keys; dir <- dirs) {
       val r = measure(spark, key, dir)
-      for ((pass, plans) <- Seq("run1" -> r.run1.plans, "collect" -> r.plans);
+      for ((pass, plans) <- Seq("run1" -> r.run1.plans, "collect" -> r.collect.plans);
            (e, i) <- plans.zipWithIndex)
         System.err.println(s"==== $key $dir $pass execution ${i + 1}/" +
           s"${plans.size}: ${e.action} [${e.columns.mkString(", ")}] ====\n${e.plan}")

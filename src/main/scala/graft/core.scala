@@ -248,7 +248,8 @@ object util {
     * stays flat, and Catalyst/AQE pick broadcast or shuffle at the
     * session's autoBroadcastJoinThreshold with no hint. Never hint an eager
     * cut. A LAZY cut has stored nothing yet and stays stats-less: a join
-    * against it plans as a shuffle unless the caller hints it. */
+    * against it plans as a shuffle unless the caller hints it, or gives
+    * `GraftBridge.cut` a row bound (`graph.Superstep.propagate`). */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     org.apache.spark.sql.GraftBridge.cut(df, eager)
 

@@ -683,12 +683,13 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   }
   @volatile private var nbrBuilt = false
 
-  /** Release this instance's cached artifacts ([[undirectedEdges]] and
-    * [[orientedEdges]]; the GraphX view's RDD caches are dropped by GC once
-    * unreferenced). Safe whether or not an artifact was ever computed —
-    * unpersisting the registered-but-unmaterialized undirected view is a
-    * cheap catalog removal, and the oriented index (whose build is eager)
-    * is only touched if it was actually built. */
+  /** Release this instance's cached artifacts: [[undirectedEdges]],
+    * [[orientedEdges]], [[undDegrees]], [[undByA]], [[neighborLists]],
+    * [[connectedComponents]] and [[stronglyConnectedComponents]] (the
+    * GraphX view's RDD caches are dropped by GC once unreferenced). Safe
+    * whether or not an artifact was ever computed — unpersisting the
+    * registered-but-unmaterialized undirected view is a cheap catalog
+    * removal, and every other artifact is only touched if it was built. */
   def uncache(): Unit = {
     undirectedEdges.unpersist()
     if (oriBuilt) { orientedEdges.unpersist(); () }
@@ -1068,22 +1069,17 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * so the per-row multiply only shifts the exponent), β = 1.0, and the
     * per-destination sum goes through graft.num.dsum's decimal accumulation —
     * after `iters` rounds every score is an integer multiple of 4^-iters,
-    * which DECIMAL(38,10) holds exactly for iters ≤ 5. Per-iteration cost is
-    * one shuffle on dst (the message aggregation); the vertex set joins back
-    * by id — the same scale shape as [[pageRank]]. */
+    * which DECIMAL(38,10) holds exactly for iters ≤ 5. A round is one
+    * [[Superstep.propagate]] step: one shuffle on dst (the message
+    * aggregation); a vertex no in-edge reaches keeps β. */
   def katz(iters: Int, alpha: Double = 0.25): DataFrame = {
     require(alpha == 0.25, "exactness argument is specific to α=2^-2")
-    val ids = vertices.select("id")
-    var x = ids.withColumn("katz", lit(1.0))
-    for (_ <- 1 to iters) {
-      val contribs = edges.select("src", "dst")
-        .join(x.withColumnRenamed("id", "src"), "src")
-        .select(col("dst"), (col("katz") * lit(alpha)).as("contrib"))
-        .groupBy("dst").agg(graft.num.dsum(col("contrib")).as("s"))
-      x = ids.join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"), (lit(1.0) + coalesce(col("s"), lit(0.0))).as("katz"))
+    Superstep.propagate(vertices.select(col("id"), lit(1.0).as("katz")), edges,
+        numVertices, iters, Seq("katz"), unreached = Some(identity)) {
+      _.groupBy(col("dst").as("id"))
+        .agg(graft.num.dsum(col("katz") * lit(alpha)).as("s"))
+        .select(col("id"), (lit(1.0) + col("s")).as("katz"))
     }
-    x
   }
 
   /** HITS (Kleinberg hubs & authorities), fixed rounds, in integer
@@ -1098,9 +1094,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     *
     * Overflow headroom at 100 TB: scores are ≤ ~2·10^6 after each
     * half-round, so a raw sum is ≤ 2·10^6·indeg — BIGINT-safe to in-degrees
-    * of ~4·10^12, far past any real hub. Per half-round cost is one shuffle
-    * on the message key plus a vertex-sized join back (the [[katz]] shape);
-    * the scalar max joins back as a broadcast, never a driver action. */
+    * of ~4·10^12, far past any real hub. A half-round is one measured
+    * [[Superstep.round]] over the SPARSE scores (only vertices with nonzero
+    * mass have a row): one shuffle on the message key, and the half's max
+    * observed in the same job; the dense zero-fill is one join at the end.
+    * (Not a [[Superstep.propagate]] loop: each half needs its observed max
+    * before the next half is planned.) */
   def hits(iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8, s"hits iters out of range: $iters")
     val U = 1000000L
@@ -1166,22 +1165,18 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * over the vertices, not a join. */
   def personalizedPageRank(seedPred: org.apache.spark.sql.Column, iters: Int): DataFrame = {
     val ns = vertices.filter(seedPred).count().toDouble // metadata-scale driver value
-    val odeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ids = vertices.select(col("id"),
+    val odeg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("outdeg"))
+    val pr0 = vertices.select(col("id"),
       when(seedPred, lit(0.15) / lit(ns)).otherwise(lit(0.0)).as("base"),
-      when(seedPred, lit(1.0) / lit(ns)).otherwise(lit(0.0)).as("p0"))
-    var pr = ids.select(col("id"), col("base"), col("p0").as("pr"))
-    for (_ <- 1 to iters) {
-      val contribs = edges.select("src", "dst")
-        .join(pr.select(col("id").as("src"), col("pr")), "src")
-        .join(odeg, "src")
-        .select(col("dst"), (col("pr") / col("outdeg").cast("double")).as("contrib"))
-        .groupBy("dst").agg(graft.num.dsum(col("contrib")).as("s"))
-      pr = ids.join(contribs.withColumnRenamed("dst", "id"), Seq("id"), "left")
-        .select(col("id"), col("base"),
-          (col("base") + lit(0.85) * coalesce(col("s"), lit(0.0))).as("pr"))
-    }
-    pr.select("id", "pr")
+      when(seedPred, lit(1.0) / lit(ns)).otherwise(lit(0.0)).as("pr"))
+      .join(odeg, Seq("id"), "left")
+    // a vertex no edge reaches gets base + 0.85·0, which is base (base ≥ 0)
+    Superstep.propagate(pr0, edges, numVertices, iters, Seq("pr", "outdeg"),
+        Seq("base", "outdeg"), Some(_.withColumn("pr", col("base")))) {
+      _.groupBy(col("dst").as("id"), col("dst_base").as("base"), col("dst_outdeg").as("outdeg"))
+        .agg(graft.num.dsum(col("pr") / col("outdeg").cast("double")).as("s"))
+        .withColumn("pr", col("base") + lit(0.85) * col("s")).drop("s")
+    }.select("id", "pr")
   }
 
   /** Per-vertex triangle count via DEGREE-ordered edge orientation (orient
@@ -1245,47 +1240,27 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   /** Bounded k-core peeling (fixed `rounds` so the result is deterministic
     * and oracle-checkable even if not yet converged — the oracle runs the
     * SAME rounds): repeatedly drop vertices with undirected degree < k,
-    * returning the survivors with their final-round degree. Each round is
-    * two semi-joins (edge set restricted to live endpoints) + one count —
-    * the edge set shrinks monotonically, so at 100 TB the expensive first
-    * rounds are plain shuffles on the edge list and later rounds ride on
-    * broadcast-size survivor sets. */
-  def kCore(k: Int, rounds: Int): DataFrame = {
-    // Per-round EAGER localCheckpoint: without lineage truncation each
-    // round's plan nests every previous round's relation and driver-side
-    // re-planning grows superlinearly (measured: rounds 1-3 ≈ 2.5 s, round
-    // 4 ≈ 9 s, final materialize ≈ 5.5 s). The checkpointed survivor set
-    // loses size stats, so the semi-joins carry an explicit broadcast hint
-    // — the survivor set is vertex-sized (a cluster deployment whose
-    // survivors outgrow broadcast drops the hint and takes the shuffle).
-    // Round 1 needs no restriction (the live set still contains every
-    // endpoint): it is a filter over the stored [[undDegrees]] index.
-    // r16: cuts are LAZY — cut() truncates the PLAN immediately either
-    // way (the checkpoint leaf replaces the round lineage at build time,
-    // so the re-planning blowup this comment describes never depends on
-    // eagerness); lazy materialization lets the terminal action run the
-    // whole peel in one job tree instead of one scheduling round-trip per
-    // round.
-    var live = graft.util.cut(undDegrees.select(col("id"), col("d").as("deg"))
-      .filter(col("deg") >= k), eager = false)
-    for (_ <- 2 to rounds)
-      live = graft.util.cut(kCoreRound(live, k), eager = false)
-    live
-  }
+    * returning the survivors with their final-round degree. Round 1 is a
+    * filter over the stored [[undDegrees]] index; every later round is a
+    * [[Superstep.propagate]] peel ([[kCoreRound]]) over the undirected
+    * edges in both directions, whose survivor set shrinks monotonically. */
+  def kCore(k: Int, rounds: Int): DataFrame =
+    Superstep.propagate(undDegrees.select(col("id"), col("d").as("deg"))
+      .filter(col("deg") >= k), undirectedHalves, numVertices, rounds - 1, Nil)(peel(k))
 
-  /** One peel round: restrict the undirected edges to `live` survivors
-    * (broadcast semi-joins — see [[kCore]]) and recount degrees. Exposed
-    * package-private so PlanQualitySpec can assert the REAL round's join
-    * shape, not a reconstruction. */
-  private[graft] def kCoreRound(live: DataFrame, k: Int): DataFrame = {
-    val keep = live.select("id")
-    val e = undirectedEdges
-      .join(broadcast(keep.withColumnRenamed("id", "a")), Seq("a"), "left_semi")
-      .join(broadcast(keep.select(col("id").as("b"))), Seq("b"), "left_semi")
-    e.select(col("a").as("id")).unionAll(e.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+  /** One peel round over the `live` survivors, not cut: each survivor's
+    * degree among survivors, kept at ≥ k. Exposed package-private so
+    * PlanQualitySpec can assert the REAL round's join shape. */
+  private[graft] def kCoreRound(live: DataFrame, k: Int): DataFrame =
+    peel(k)(Superstep.messages(live, undirectedHalves, Nil))
+
+  private def peel(k: Int)(m: DataFrame): DataFrame =
+    m.groupBy(col("dst").as("id")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k)
-  }
+
+  /** [[undirectedEdges]] in both directions, as (src, dst). */
+  private def undirectedHalves: DataFrame = undirectedEdges.select(col("a").as("src"),
+    col("b").as("dst")).unionAll(undirectedEdges.select(col("b"), col("a")))
 
   /** Bounded k-truss peeling (fixed `rounds`, deterministic and
     * oracle-checkable exactly like [[kCore]] — the oracle unrolls the SAME
@@ -1382,11 +1357,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       .groupBy("a", "b").agg(count(lit(1)).as("support"))
   }
 
-  /** DataFrame label propagation, fixed iterations, DETERMINISTIC tie-break
-    * (max neighbor-label count, then min label) — unlike GraphX's
-    * implementation-defined ties, this is oracle-checkable and avoids the
-    * per-vertex label-histogram map messages that make GraphX LP slow.
-    * Isolated vertices keep their own label. */
   /** Stored 3-iteration label-propagation communities — shared by the
     * labelprop and modularity keys (the labeling is the expensive part;
     * its consumers are vertex-sized folds). Cut eagerly after the final
@@ -1468,46 +1438,29 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     vertices.filter(col("label") === "customer" && col("id") % 100 === 0),
     4, wRet = 500000L, wOne = 1000000L, wFar = 2000000L))
 
+  /** DataFrame label propagation, fixed iterations, DETERMINISTIC tie-break
+    * (max neighbor-label count, then min label) — unlike GraphX's
+    * implementation-defined ties, this is oracle-checkable and avoids the
+    * per-vertex label-histogram map messages that make GraphX LP slow.
+    * A vertex no edge reaches keeps its own label.
+    *
+    * Each round is a [[Superstep.propagate]] step over the stored
+    * [[undByA]] index, hash-partitioned by the receiving vertex `a`: the
+    * label state joins it from its |V| bound (broadcast while that fits
+    * the session threshold), the joins keep und's partitioning, and
+    * HashPartitioning(a) satisfies both groupBys' clustered distributions,
+    * so a round aggregates its messages with zero edge-sized shuffles.
+    * (und must be persist()-ed, not localCheckpoint-ed: a checkpoint's
+    * LogicalRDD reports UnknownPartitioning.) The result is cut eagerly:
+    * callers get a self-contained, measured LogicalRDD. */
   def labelPropagation(iters: Int): DataFrame = {
-    // und is the stored [[undByA]] index — pre-hash-partitioned by the
-    // receiving vertex `a` (explicit partition count so AQE doesn't
-    // coalesce it down and starve the agg): the per-iteration label join
-    // broadcasts the vertex-sized label map (planner/AQE choice from cache
-    // stats — at 100 TB it degrades to a shuffle join of the label side
-    // only; the edge side never moves), the join preserves und's
-    // partitioning, and HashPartitioning(a) satisfies BOTH downstream
-    // groupBys' clustered distributions — so an iteration's message
-    // aggregation runs with zero edge-sized shuffles (round-2 measurement:
-    // ~1.5× over the unpartitioned form at sf0.1).
-    // NOTE und must be persist()-ed, not localCheckpoint-ed: a checkpoint's
-    // LogicalRDD reports UnknownPartitioning (verified round 2 — both
-    // groupBys grew real Exchanges and the query doubled in time), while
-    // InMemoryRelation preserves the repartition's HashPartitioning.
-    val und = undByA
-    // The label map is vertex-sized; broadcast it so the edge side never
-    // moves and the join preserves und's partitioning (checkpointed
-    // generations are LogicalRDDs with unknown stats, so WITHOUT the hint
-    // the planner assumes huge and sort-merge-joins — shuffling the edge
-    // list AND losing the partitioning, measured ~1.5× the whole query).
-    // The hint is unconditional: where |V| outgrows broadcast, any
-    // replacement must be measured against this plan first (ROADMAP).
-    var lbl = vertices.select(col("id"), col("id").as("lbl"))
-    for (_ <- 1 to iters) {
-      val pick = und.join(broadcast(lbl.select(col("id").as("b"), col("lbl").as("l"))), "b")
-        .groupBy(col("a").as("id"), col("l")).agg(count(lit(1)).as("n"))
+    graft.util.cut(Superstep.propagate(vertices.select(col("id"), col("id").as("lp_label")),
+        undByA.select(col("b").as("src"), col("a").as("dst")), numVertices, iters,
+        Seq("lp_label"), unreached = Some(identity)) {
+      _.groupBy(col("dst").as("id"), col("lp_label").as("l")).agg(count(lit(1)).as("n"))
         .groupBy("id").agg(max(struct(col("n"), (-col("l")).as("negl"))).as("m"))
-        .select(col("id"), (-col("m.negl")).as("l"))
-      // lbl is referenced twice per iteration (message join + carry-over);
-      // a lazy localCheckpoint keeps lineage linear AND the plan constant-
-      // size (persist alone leaves a plan that doubles per generation).
-      lbl = graft.util.cut(lbl.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("l"), col("lbl")).as("lbl")),
-        eager = false)
-    }
-    // Eagerly materialize the vertex-sized result — callers get a
-    // self-contained LogicalRDD. und is the stored [[undByA]] index (fixture
-    // lifecycle, released by [[uncache]]), not per-call scratch.
-    graft.util.cut(lbl.select(col("id"), col("lbl").as("lp_label")))
+        .select(col("id"), (-col("m.negl")).as("lp_label"))
+    })
   }
 
   /** Deterministic pseudo-random walks (the DeepWalk/node2vec corpus

@@ -2,18 +2,20 @@ package graft.graph
 
 import graft.util.cut
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
-import org.apache.spark.sql.functions.{broadcast, count, lit}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 import org.apache.spark.sql.types.StructType
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
-/** The four decisions every data-dependent graph loop makes, made once.
+/** The decisions every graph loop makes, made once.
   *
   * A superstep here is a relational plan over the live set (Pregelix's
   * shape): a loop of such plans, where each round needs (1) the live set
   * materialized with the scalar that decides the next round, (2) a join
   * strategy for the frames it just measured, (3) a policy at the round
-  * cap, and (4) a way to finish a small remainder in one task.
+  * cap, and (4) a way to finish a small remainder in one task. A loop with
+  * a fixed round count needs none of the scalars, only (5) the
+  * message-passing round itself.
   *
   *  - [[round]]: an eager [[graft.util.cut]] whose `observe()` reads the
   *    round's statistics inside the materialization job itself — one job
@@ -26,7 +28,10 @@ import scala.concurrent.duration.Duration
   *  - [[cap]]: a loop that outruns its round budget fails loudly with
   *    context instead of returning a partial result.
   *  - [[inOneTask]]: the executor-local tail — one coalesced partition,
-  *    never a collect. */
+  *    never a collect.
+  *  - [[propagate]]: a fixed count of message-passing rounds,
+  *    `state ⋈ edges → combine by receiver`, with the cut, the state joins
+  *    and the carry-over of unreached vertices decided in one place. */
 object Superstep {
 
   /** Measured row bound at or under which [[small]] broadcasts a frame. */
@@ -62,6 +67,58 @@ object Superstep {
     * measured size, and the planner decides for it. */
   def small(df: DataFrame, rows: Long): DataFrame =
     if (rows <= broadcastRows) broadcast(df) else df
+
+  /** `iters` fixed-count message-passing rounds from `state`: one row per
+    * vertex keyed `id`, never more than `rows` rows (|V|, measured once per
+    * graph, for a per-vertex state). A round sends along `edges` (`src` →
+    * `dst`) — see [[messages]] — and `combine` folds the messages into the
+    * next row of each receiver `id`, with the state's columns. It decides,
+    * for every such loop:
+    *
+    *  - the cut: the state and each round's rows but the last are a LAZY
+    *    cut carrying the bound `rows` (`GraftBridge.cut`), so the plan
+    *    stays one round deep, and the joins against the state plan from the
+    *    bound (broadcast under the session threshold, shuffle past it) with
+    *    no hint. The last round is returned uncut: the caller's action runs
+    *    it;
+    *  - the state joins: sender and receiver are kept to the state, each
+    *    by one join on the state that brings the columns the round reads
+    *    (`send`, `recv`), or by a semi join where it reads none;
+    *  - no join back to the vertex set. With `unreached`, every vertex
+    *    stays in the state, so the senders, and with them the vertices no
+    *    edge reaches, are the same every round: those are cut once after
+    *    round 1, as `unreached` of their current row, and every later state
+    *    is the round's receivers plus that fixed carry. Without it a vertex
+    *    no edge reaches drops out of the state (a peel). */
+  def propagate(state: DataFrame, edges: DataFrame, rows: Long, iters: Int,
+      send: Seq[String], recv: Seq[String] = Nil,
+      unreached: Option[DataFrame => DataFrame] = None)(
+      combine: DataFrame => DataFrame): DataFrame = {
+    def bounded(df: DataFrame) = GraftBridge.cut(df, eager = false, Some(rows))
+    var (s, carry) = (bounded(state), Option.empty[DataFrame])
+    for (i <- 1 to iters) {
+      val next = combine(messages(s, edges, send, recv))
+      // round 1 is cut when it fixes the carry; else the last round is not
+      val got = if (i < iters || (i == 1 && unreached.nonEmpty)) bounded(next) else next
+      carry = carry.orElse(unreached.map(f =>
+        bounded(f(s.join(got.select("id"), Seq("id"), "left_anti")))))
+      s = carry.fold(got)(got.unionByName(_))
+    }
+    s
+  }
+
+  /** One round's messages, not cut: the `edges` (`src`, `dst`) whose sender
+    * and receiver are both in `state`, with the sender's `send` columns and
+    * the receiver's `recv` columns as `dst_<c>`. An end that brings no
+    * column is a semi join, which Catalyst can push below a union. */
+  def messages(state: DataFrame, edges: DataFrame, send: Seq[String],
+      recv: Seq[String] = Nil): DataFrame = {
+    def end(m: DataFrame, key: String, cols: Seq[Column]) =
+      m.join(state.select(col("id").as(key) +: cols: _*), Seq(key),
+        if (cols.isEmpty) "left_semi" else "inner")
+    end(end(edges.select("src", "dst"), "src", send.map(col)), "dst",
+      recv.map(c => col(c).as(s"dst_$c")))
+  }
 
   /** Fail loop `what` when `round` exceeds `max`, naming the round and the
     * `live` rows still left. Same exception type as `require`. */

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.storage.RDDBlockId
 
 /** Bridge into the one private[sql] entry point a planner extension needs:
@@ -22,7 +23,11 @@ object GraftBridge {
     * checkpointed blocks)`, at least 1, plus `rowCount` when the caller
     * observed it in the same job — a constant per round that never
     * compounds, and that lets Catalyst and AQE choose broadcast or shuffle
-    * at the session's threshold. A lazy cut has nothing stored yet and
+    * at the session's threshold. A lazy cut has nothing stored yet: with a
+    * `rowCount` — a row bound the caller knows by construction, e.g. |V|
+    * for a per-vertex state — it carries `rows × the output's per-row size
+    * estimate` (Catalyst's own `getSizePerRow`), so the planner and AQE
+    * broadcast it under the threshold and shuffle past it; without one it
     * stays stats-less (Catalyst's default size: never broadcast by size).
     * The leaf wraps the checkpointed INTERNAL rows (no external-row
     * round-trip); LogicalRDD is a MultiInstanceRelation, so self-joins of a
@@ -31,8 +36,10 @@ object GraftBridge {
       rowCount: => Option[Long] = None): DataFrame = {
     val ck = df.localCheckpoint(eager).asInstanceOf[classic.Dataset[Row]]
     val qe = ck.queryExecution
-    val stats = Option.when(eager)(Statistics(
-      BigInt(math.max(storedBytes(qe.analyzed), 1L)), rowCount.map(BigInt(_))))
+    val stats = Option.when(eager || rowCount.isDefined)(Statistics(
+      if (eager) BigInt(math.max(storedBytes(qe.analyzed), 1L))
+      else EstimationUtils.getSizePerRow(qe.analyzed.output) * math.max(rowCount.get, 1L),
+      rowCount.map(BigInt(_))))
     classic.Dataset.ofRows(ck.sparkSession, execution.LogicalRDD(
       qe.analyzed.output, qe.toRdd)(ck.sparkSession, stats))
   }

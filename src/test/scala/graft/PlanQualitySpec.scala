@@ -551,6 +551,26 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("the lp3 build plans no SortMergeJoin") {
+    // lp3 is labelPropagation(3): every round joins the label state from
+    // its |V| bound, and a vertex no edge reaches is carried, not joined
+    // back (the carry-over left join used to plan a vertex-sized
+    // sort-merge join per round)
+    val g = graph.GraphFixture(spark, TestSpark.sf)
+    val ops = CutStatsSpec.executions(spark) { g.labelPropagation(3).count() }
+      .flatMap { case (_, qe) => Probe.opsOf(qe.executedPlan) }
+    assert(ops.count(_ == "bhj") >= 3, ops)
+    assert(!ops.contains("smj"), ops)
+  }
+
+  test("katz's analyzed plan does not grow with iters") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val g = graph.GraphFixture(spark, TestSpark.sf)
+    def joins(iters: Int): Int = g.katz(iters).queryExecution.analyzed
+      .collect { case j: Join => j }.size
+    assert(joins(2) == joins(5), s"${joins(2)} vs ${joins(5)} joins")
+  }
+
   test("the fixture graph is a columnar cache over staged Parquet: small task binaries, no pinned broadcast, recompute from files") {
     import org.apache.spark.SparkEnv
     import org.apache.spark.sql.DataFrame

@@ -37,20 +37,20 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val frame = SparkEntry.queries("graph_hits")(spark, sf)
     assert(a.rows == frame.count())
     // HITS runs >= 6 half-rounds through Superstep.round (an eager cut)
-    val checkpoints = a.plans.count(_.action == "localCheckpoint")
+    val checkpoints = a.collect.plans.count(_.action == "localCheckpoint")
     assert(checkpoints >= 6, s"$checkpoints checkpoint executions")
     // the last execution is the key's own result, collected, not count()'s
     // pruned aggregate
-    assert(a.plans.last.action == "collect")
-    assert(a.plans.last.columns == frame.columns.toSeq)
-    assert(a.plans.forall(_.plan.contains("Physical Plan")))
+    assert(a.collect.plans.last.action == "collect")
+    assert(a.collect.plans.last.columns == frame.columns.toSeq)
+    assert(a.collect.plans.forall(_.plan.contains("Physical Plan")))
     // run1's executions are kept and counted too: its half-round cuts,
     // each an aggregate behind a shuffle exchange
     assert(a.run1.plans.count(_.action == "localCheckpoint") >= 6)
     val ops1 = a.run1.ops.toMap
     assert(ops1("exchange") >= 6, ops1)
-    assert(a.ops.map(_._1) == a.run1.ops.map(_._1))
-    assert(a.ops.map(_._1).containsSlice(Seq("exchange", "sort")))
+    assert(a.collect.ops.map(_._1) == a.run1.ops.map(_._1))
+    assert(a.collect.ops.map(_._1).containsSlice(Seq("exchange", "sort")))
     assert(probeListeners.isEmpty, probeListeners)
   }
 
@@ -63,6 +63,23 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val line = Probe.json(r)
     for (run <- Seq("run1", "run2"); f <- Seq("deser_cpu_s", "gc_s", "compiles")) {
+      val v = raw"""("$run":\{[^{]*"$f":)(-?[0-9.]+)""".r
+        .findFirstMatchIn(line).map(_.group(2).toDouble)
+      assert(v.exists(_ >= 0), s"$run.$f in $line")
+    }
+  }
+
+  test("each pass records the JVM's GC seconds within the run, shuffle bytes read and bytes spilled") {
+    val r = Probe.measure(spark, "graph_katz", sf)
+    for (x <- Seq(r.run1, r.run2, r.collect)) {
+      val seen = (x.sec, x.gcSec, x.shuffleReadBytes, x.spillBytes)
+      assert(x.gcSec >= 0 && x.gcSec <= x.sec, seen)
+      assert(x.shuffleReadBytes >= 0 && x.spillBytes >= 0, seen)
+    }
+    assert(r.collect.jobs > 0 && r.collect.plans.last.action == "collect")
+    val line = Probe.json(r)
+    for (run <- Seq("run1", "run2", "collect");
+         f <- Seq("gc_s", "shuffle_read_mb", "spill_mb")) {
       val v = raw"""("$run":\{[^{]*"$f":)(-?[0-9.]+)""".r
         .findFirstMatchIn(line).map(_.group(2).toDouble)
       assert(v.exists(_ >= 0), s"$run.$f in $line")
@@ -99,7 +116,7 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     def sweeps(plans: Seq[Probe.Exec]) = plans.count(e =>
       e.action == "localCheckpoint" && e.columns == Seq("id", "comm", "deg"))
     assert(sweeps(r.run1.plans) == 4, r.run1.plans.map(_.action))
-    assert(sweeps(r.plans) == 0 && sweeps(r.run2.plans) == 0)
+    assert(sweeps(r.collect.plans) == 0 && sweeps(r.run2.plans) == 0)
     val ops1 = r.run1.ops.toMap
     assert(ops1("exchange") >= 12 && ops1("smj") == 0, ops1)
     assert(r.run1.jobs > r.run2.jobs)
@@ -125,7 +142,7 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = Probe.measure(spark, key, sf)
     // the verified delta each batch cuts (the frame the old per-batch
     // plan dump tagged mhm_verify)
-    val verify = r.plans.count(e => e.action == "localCheckpoint" &&
+    val verify = r.collect.plans.count(e => e.action == "localCheckpoint" &&
       e.columns == Seq("da", "db", "n_common", "jaccard"))
     assert(verify == perRun, s"$verify verify cuts for $perRun batches")
     assert(r.rows == rows)

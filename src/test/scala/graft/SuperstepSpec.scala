@@ -4,9 +4,10 @@ import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** graph.Superstep's four loop decisions: a measured round is one job and
+/** graph.Superstep's loop decisions: a measured round is one job and
   * reads what separate actions would, the broadcast bound sits exactly at
-  * 4M rows, and the round cap fails loudly with context. */
+  * 4M rows, a fixed-count propagation plans its state joins from its row
+  * bound, and the round cap fails loudly with context. */
 class SuperstepSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import graph.Superstep
@@ -54,6 +55,36 @@ class SuperstepSpec extends AnyFunSuite {
       }.nonEmpty
     assert(hinted(4000000L))
     assert(!hinted(4000001L))
+  }
+
+  test("propagate: the state join broadcasts from the cut's row bound with no hint, and shuffles past the threshold") {
+    val n = 20000L
+    val state = spark.range(0, n, 1, 4).select(col("id"), col("id").as("x"))
+    // the edge side: a lazy cut with no bound, never broadcast by size
+    val edges = util.cut(spark.range(0, 4 * n, 1, 4)
+      .select((col("id") % n).as("src"), (col("id") * 7 % n).as("dst")),
+      eager = false)
+    def run() = CutStatsSpec.executions(spark) {
+      Superstep.propagate(state, edges, n, 2, Seq("x"), unreached = Some(identity)) {
+        _.groupBy(col("dst").as("id")).agg(min("x").as("x"))
+      }.collect()
+    }
+    def hints(qe: org.apache.spark.sql.execution.QueryExecution) =
+      qe.analyzed.collect { case h: ResolvedHint => h }
+    val small = run()
+    assert(small.forall { case (_, qe) => hints(qe).isEmpty })
+    val ops = small.flatMap { case (_, qe) => Probe.opsOf(qe.executedPlan) }
+    assert(ops.count(_ == "bhj") >= 4 && !ops.contains("smj"), ops)
+
+    // the bound reads as n × 24 bytes ((id, x) rows); 1 KB is far below it,
+    // and below any shuffled side AQE could still convert at run time
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try {
+      val ops = run().flatMap { case (_, qe) => Probe.opsOf(qe.executedPlan) }
+      assert(ops.contains("smj") && !ops.contains("bhj"), ops)
+    } finally spark.conf.set(key, old)
   }
 
   test("cap: throws IllegalArgumentException naming the loop, round and live rows") {
