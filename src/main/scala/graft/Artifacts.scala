@@ -1,0 +1,259 @@
+package graft
+
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.graph.{GraphFixture, PropertyGraph}
+
+/** The stored-artifact catalog: the one place that decides what is stored,
+  * when it is built and how it is released. The paper's graph service
+  * stores its graph and its indexes, and queries read that stored state;
+  * here every such artifact is an entry with a name, a scope, a build and a
+  * release.
+  *
+  * Two scopes:
+  *  - (session, dir): a [[Session]] entry below, built once per
+  *    SparkSession and data directory (and `part`, for a family such as the
+  *    tables or the views) and dropped when the session's SparkContext
+  *    stops. [[release]] releases and drops a directory's entries.
+  *  - one owner: an [[Instance]] registry that lives on its owner (each
+  *    [[PropertyGraph]] has one, and its artifact `lazy val`s register
+  *    through it), so an owner nobody references is collected with what it
+  *    stored. `PropertyGraph.uncache()` releases what the instance built.
+  *
+  * A build's release covers what the build made, not just its value: each
+  * cut ([[org.apache.spark.sql.GraftBridge.cut]]) and each GraphX RDD
+  * ([[graphX]]) made while the build runs registers itself through
+  * [[onRelease]] with the innermost build in progress on the thread. Loop rounds, which nothing
+  * references once the result is cut, are then released with the artifact
+  * instead of waiting for the garbage collector.
+  *
+  * [[ingest]] is the prebuild policy: the entries [[Bench.warmup]] builds
+  * for a directory before any query runs, in order. Every build, ingest or
+  * not, is timed, and [[observe]] reports (name, seconds) of each build. */
+object Artifacts {
+
+  /** A stored value and the release of it and of what its build made. */
+  private final class Stored(val value: Any, made: Seq[() => Unit]) {
+    def release(): Unit = { free(value); made.foreach(_()) }
+  }
+
+  /** Releases a stored value: a persisted frame is unpersisted, a graph
+    * releases its own artifacts ([[PropertyGraph.uncache]]); a pair
+    * releases both sides. */
+  private def free(v: Any): Unit = v match {
+    case df: org.apache.spark.sql.Dataset[_] => df.unpersist(blocking = false); ()
+    case g: PropertyGraph => g.uncache()
+    case (a, b) => free(a); free(b)
+    case _ => ()
+  }
+
+  // ---- builds in progress, their timing and their observers
+
+  /** The builds in progress on this thread, innermost first, each with the
+    * releases registered with it so far. */
+  private val open = ThreadLocal.withInitial[List[mutable.ArrayBuffer[() => Unit]]](() => Nil)
+  private val observers =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Double) => Unit]()
+
+  /** Registers `release` with the build in progress on this thread (the
+    * innermost one); outside a build it is never run. */
+  def onRelease(release: => Unit): Unit =
+    open.get.headOption.foreach(_ += (() => release))
+
+  /** Runs GraphX `body` and registers for release ([[onRelease]]) the
+    * vertex and edge RDDs it left persisted: a GraphX graph caches them
+    * when it is built, and its loops (Pregel, SCC) keep their last rounds
+    * cached. GraphX names them VertexRDD and EdgeRDD. */
+  def graphX[V](sc: SparkContext)(body: => V): V = {
+    val before = sc.getPersistentRDDs.keySet
+    val v = body
+    for ((id, r) <- sc.getPersistentRDDs if !before(id) &&
+        Option(r.name).exists(n => n.contains("VertexRDD") || n.contains("EdgeRDD")))
+      onRelease(sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    v
+  }
+
+  /** Runs `body` while `f` is told (name, seconds) of every build that
+    * completes meanwhile, on any thread. Nested builds are each reported;
+    * an outer build's seconds include its inner ones. */
+  def observe[A](f: (String, Double) => Unit)(body: => A): A =
+    try { observers.add(f); body } finally observers.remove(f)
+
+  /** Builds `name`: returns the value, the seconds the build took and the
+    * releases registered while it ran. */
+  private def build[V](name: String)(body: => V): (V, Double, Seq[() => Unit]) = {
+    val made = mutable.ArrayBuffer.empty[() => Unit]
+    open.set(made :: open.get)
+    val t0 = System.nanoTime()
+    val v = try body finally open.set(open.get.tail)
+    val sec = (System.nanoTime() - t0) / 1e9
+    observers.forEach(_(name, sec))
+    (v, sec, made.toSeq)
+  }
+
+  /** Seconds `body` took, timed and reported as the build of `name`; what
+    * it made outside a stored entry is left to the garbage collector. */
+  def timed(name: String)(body: => Any): Double = build(name)(body)._2
+
+  // ---- one owner's entries
+
+  /** The entries one owner built, by name, in build order. */
+  final class Instance {
+    private val built = mutable.LinkedHashMap.empty[String, Stored]
+
+    /** The entry `name`, built by `body` on first use. */
+    def apply[V](name: String)(body: => V): V =
+      built.synchronized(built.get(name)).getOrElse {
+        val (v, _, made) = build(name)(body)
+        built.synchronized(built.getOrElseUpdate(name, new Stored(v, made)))
+      }.value.asInstanceOf[V]
+
+    def names: Seq[String] = built.synchronized(built.keys.toSeq)
+
+    /** Releases every entry, the latest built first, and forgets them. */
+    def release(): Unit =
+      built.synchronized { val all = built.values.toSeq; built.clear(); all }
+        .reverseIterator.foreach(_.release())
+  }
+
+  // ---- (session, dir) entries
+
+  private val stored = TrieMap.empty[(SparkSession, String, String, String), Stored]
+  private val hooked = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkContext]()
+
+  /** An artifact stored once per (session, dir, part); `release` runs when
+    * [[Artifacts.release]] drops it. */
+  final class Session[V] private[Artifacts] (val name: String)(
+      release: (SparkSession, V) => Unit = (_: SparkSession, _: V) => ()) {
+    def apply(s: SparkSession, dir: String, part: String = "")(body: => V): V =
+      stored.getOrElseUpdate((s, name, dir, part), {
+        val sc = s.sparkContext
+        if (hooked.add(sc)) sc.addSparkListener(new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+            stored.filterInPlace { case ((sess, _, _, _), _) => sess.sparkContext ne sc }
+            hooked.remove(sc); ()
+          }
+        })
+        val (v, _, made) = build(if (part.isEmpty) name else s"$name/$part")(body)
+        new Stored(v, (() => release(s, v)) +: made)
+      }).value.asInstanceOf[V]
+  }
+
+  /** Releases and drops every (session, dir) entry of `s` for `dir`. */
+  def release(s: SparkSession, dir: String): Unit =
+    for ((k @ (`s`, _, `dir`, _), v) <- stored) { stored.remove(k); v.release() }
+
+  /** The fixture property graph and its staged Parquet directory
+    * ([[GraphFixture]]); released with the graph's own artifacts. */
+  val graph = new Session[(PropertyGraph, String)]("graph")({ case (_, (g, stage)) =>
+    g.vertices.unpersist(); g.edges.unpersist(); Staging.delete(stage)
+  })
+  /** The symmetrized directed view SCC analytics run on. */
+  val sccView = new Session[PropertyGraph]("scc_view")()
+  /** The fixture tables, one per `part` ([[Tables]]). */
+  val tables = new Session[DataFrame]("table")()
+  /** The persisted or checkpointed shared views, one per `part` ([[Views]]). */
+  val views = new Session[String]("view")((s, vn) => s.catalog.dropTempView(vn))
+  /** The analyzed catalog table of each fixture table ([[TableStats]]);
+    * the table stays in the catalog, and a rebuild reuses it. */
+  val tableStats = new Session[String]("table_stats")()
+  /** Whether the events files store `ts` as long nanos (streaming reads). */
+  val tsVintage = new Session[Boolean]("ts_vintage")()
+  /** The bucketed, sorted lineitem and orders tables (join_bucketed); the
+    * tables stay in the session warehouse, and a rebuild overwrites them. */
+  val bucketed = new Session[(String, String)]("bucketed_facts")()
+  /** The one-region and all-regions biconnectivity passes. */
+  val biconn = new Session[(DataFrame, DataFrame)]("biconn")()
+  val biconnAll = new Session[(DataFrame, DataFrame)]("biconn_all")()
+  /** The trained BPE merge table and retokenized stream. */
+  val bpe = new Session[(Seq[(Int, String, String, String, Long)], DataFrame)]("bpe")()
+
+  // ---- the prebuild policy
+
+  /** One ingest entry: `build` stores what its name says for a directory.
+    * Changing this list changes which builds land on a first query. */
+  final case class Ingest(name: String)(val build: (SparkSession, String) => Unit)
+
+  /** An entry that stores its artifacts by running `keys` once. */
+  private def runs(name: String, keys: String*) =
+    Ingest(name)((s, d) => keys.foreach(k => SparkEntry.queries(k)(s, d).count()))
+
+  private def onGraph(name: String)(f: PropertyGraph => Any) =
+    Ingest(name)((s, d) => f(GraphFixture(s, d)))
+
+  /** What [[Bench.warmup]] builds, in order, before any query runs: the
+    * stored graph and its indexes, then the artifacts keys build as a side
+    * effect of running. Each was a cold outlier on whichever consumer key
+    * ran first in map order while it was left out. */
+  val ingest: Seq[Ingest] = Seq(
+    // the staged graph, its columnar caches, the GraphX view and the
+    // label-cardinality catalog (motif join ordering)
+    onGraph("graph_build") { g =>
+      g.vertices.count(); g.edges.count(); g.toGraphX.edges.count(); g.edgeLabelStats
+    },
+    // edges.count() materializes the edge RDD but not the vertex routing
+    // tables GraphX builds on the first message exchange; without one tiny
+    // Pregel round the first Pregel-backed key paid routing tables plus
+    // Pregel JIT (graph_pregel 37.6 s first vs 2.5 s steady-state)
+    onGraph("pregel_routing")(g => g.varHop(g.vertices.limit(1), 1).count()),
+    // shared by triangles and k-core; the stored triangle/wedge index
+    onGraph("und_oriented_edges") { g => g.undirectedEdges.count(); g.orientedEdges.count() },
+    // stored corner counts (triangles/clustering)
+    onGraph("triangle_counts")(_.triangleCounts.count()),
+    // stored message-passing index (labelprop)
+    onGraph("und_by_a")(_.undByA.count()),
+    // stored adjacency-list index (delta triangles)
+    onGraph("neighbor_lists")(_.neighborLists.count()),
+    onGraph("truss3")(_.truss3.count()),
+    // labelprop and modularity consume it; unwarmed, its build met the
+    // suite's worst GC/broadcast variance (5 s typical, 43-93 s when a G1
+    // storm hit the checkpoint chain)
+    onGraph("lp3")(_.lp3.count()),
+    // JIT-warms the GraphX ConnectedComponents path on a 2-edge toy graph
+    // (~3 s of first-touch class loading on the first CC-backed key), then
+    // stores the CC labelings of the graph and of its visible view (driver
+    // r7: 4.8 s on the first CC key)
+    onGraph("cc_labeling") { g =>
+      val sc = g.vertices.sparkSession.sparkContext
+      Graph(sc.parallelize(Seq((1L, 1.0), (2L, 1.0), (3L, 1.0))),
+        sc.parallelize(Seq(Edge(1L, 2L, 1L), Edge(2L, 3L, 1L)))).connectedComponents().vertices.count()
+      g.connectedComponents.count(); g.visibleView.connectedComponents.count()
+    },
+    // the SCC labeling on the symmetrized directed view: its own GraphX
+    // build and peel loop, the condensation index next to the CC labeling
+    Ingest("scc_labeling")((s, d) => GraphFixture.sccView(s, d).stronglyConnectedComponents.count()),
+    // ShortestPaths' first run JIT-loads the Pregel/VertexRDD machinery
+    // (~20 s once on graph_sssp), and the weighted variant's Double-attr
+    // Pregel is another code path (~24 s on graph_wsssp)
+    runs("pregel_first_touch", "graph_sssp", "graph_wsssp"),
+    // the embeddings views
+    runs("ann_views", "sim_topk"),
+    // sim_recall reads all four ANN result views, the trained k-means IVF
+    // included (sim_recall 6.3 s first / 1.4 s steady)
+    runs("ann_recall_views", "sim_recall"),
+    // the betweenness and eccentricity BSP level chains (Views.checkpointed)
+    runs("betweenness_levels", "graph_betweenness"),
+    runs("eccentricity_levels", "graph_eccentricity"),
+    // the documents scan and the nested higher-order-function codegen
+    // (text_repetition 21.5 s first / 2.0 s steady)
+    runs("text_repetition_codegen", "text_repetition"),
+    // the bucketed fact tables, and a JIT-warm zero-exchange join
+    runs("bucketed_layout", "join_bucketed"),
+    // the LSH pair index (dedup_minhash/cluster/lsh_curve/stats) and the
+    // incremental-triangles counts (3.1-3.2 s each on the first consumer)
+    runs("lsh_pair_index", "dedup_cluster"),
+    runs("delta_triangle_memo", "graph_triangles_incremental"),
+    // the Tarjan-Vishkin biconnectivity passes (6.2 s on graph_articulation)
+    runs("biconn", "graph_articulation", "graph_articulation_forest"),
+    // staged stream sources plus structured streaming's first-touch JIT;
+    // the maintain queries still run in full on every timed run
+    runs("stream_staging", "stream_minhash_maintain", "stream_cc_maintain"),
+    // the BPE merge table and retokenized stream both bpe keys read
+    runs("bpe_train", "text_bpe_train"))
+}

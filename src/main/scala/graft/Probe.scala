@@ -15,7 +15,8 @@ import org.apache.spark.sql.execution.joins._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev runner: how many jobs, which joins and which plans a registered key
-  * runs. Usage: `runMain graft.Probe <sfDir> <key>[,key...] [K]`.
+  * runs. Usage: `runMain graft.Probe <sfDir> <key>[,key...]|all [K]`
+  * (`all`: every registered key, in registration order).
   *
   * Runs under [[Bench.session]] WITHOUT [[Bench.warmup]]. Each key runs
   * twice with `count()`, the action the recorded job tables counted, and
@@ -25,23 +26,24 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * is measured too. Per key and directory it prints one JSON line to
   * stdout: each pass's seconds, jobs, stages, tasks, query executions,
   * task CPU, task deserialization CPU, JVM GC time, generated classes
-  * compiled, shuffle bytes written and read and bytes spilled, the result
+  * compiled, shuffle bytes written and read and bytes spilled, the
+  * artifacts it built (`built`: catalog entry to build seconds), the result
   * rows, and the operator counts (joins by strategy, shuffle exchanges,
   * sorts) summed over every query execution of the pass (cuts,
   * checkpoints and streaming micro-batch frames included, and the
   * terminal plan of the key's result). The executed plans of run1 and of
   * the collect pass go to stderr in formatted mode, one header per
-  * execution: run1's are the only ones that show a lazily built
-  * artifact's plans (by the collect pass it is cached), the collect
-  * pass's are the plans the benchmark runs.
+  * execution: a lazily built artifact's plans show in the pass that
+  * built it (its `built` entry; usually run1), the collect pass's are the
+  * plans the benchmark runs.
   * With K it also writes the K× blow-up ([[ScaleBench.build]]) and repeats
   * the lines for it.
   *
   * run1 is the cold cost, lazy artifact builds included, only for the
   * first key on the base directory: later keys and the K× pass reuse the
-  * artifacts and cached frames built before them in the session, so run2
-  * can depend on the keys listed before it. To compare counts across
-  * commits, probe one key per JVM. */
+  * artifacts and cached frames built before them in the session (their
+  * `built` leaves those out), so run2 can depend on the keys listed
+  * before it. To compare counts across commits, probe one key per JVM. */
 object Probe {
 
   /** One query execution: its action (`count`, `collect`,
@@ -57,10 +59,12 @@ object Probe {
     * (memory plus disk), the JVM's GC seconds over the run (read from its
     * collector beans: in local mode the tasks share one JVM, so the tasks'
     * own GC times count one pause once per running task), the generated
-    * classes compiled, and the query executions it made. */
+    * classes compiled, the query executions it made, and the catalog
+    * entries ([[Artifacts]]) it built with each build's seconds. */
   final case class Run(sec: Double, jobs: Long, stages: Long, tasks: Long,
       cpuSec: Double, deserCpuSec: Double, gcSec: Double, compiles: Long,
-      shuffleBytes: Long, shuffleReadBytes: Long, spillBytes: Long, plans: Seq[Exec]) {
+      shuffleBytes: Long, shuffleReadBytes: Long, spillBytes: Long, plans: Seq[Exec],
+      built: Seq[(String, Double)]) {
     def execs: Int = plans.size
     def ops: Seq[(String, Int)] = opCounts(plans)
   }
@@ -158,13 +162,15 @@ object Probe {
       def run(action: org.apache.spark.sql.DataFrame => Long): (Run, Long) = {
         Seq(jobs, stages, tasks, cpuNs, deserNs, shuffled, read, spilled).foreach(_.set(0))
         val (c0, g0) = (compiled(), gcMs())
+        val built = new ConcurrentLinkedQueue[(String, Double)]()
         val t0 = System.nanoTime()
-        val rows = action(SparkEntry.queries(key)(spark, dir))
+        val rows = Artifacts.observe((n, s) => built.add(n -> s))(
+          action(SparkEntry.queries(key)(spark, dir)))
         val sec = (System.nanoTime() - t0) / 1e9
         val plans = drained()
         (Run(sec, jobs.get(), stages.get(), tasks.get(), cpuNs.get() / 1e9,
           deserNs.get() / 1e9, (gcMs() - g0) / 1e3, compiled() - c0,
-          shuffled.get(), read.get(), spilled.get(), plans), rows)
+          shuffled.get(), read.get(), spilled.get(), plans, built.asScala.toSeq), rows)
       }
       val (run1, _) = run(_.count())
       val (run2, rows) = run(_.count())
@@ -189,14 +195,16 @@ object Probe {
       f""""shuffle_mb":${x.shuffleBytes / 1e6}%.3f,""" +
       f""""shuffle_read_mb":${x.shuffleReadBytes / 1e6}%.3f,""" +
       f""""spill_mb":${x.spillBytes / 1e6}%.3f,""" +
-      s""""ops":${ops(x.ops)}}"""
+      s""""ops":${ops(x.ops)},"built":${x.built.map { case (n, t) =>
+        f""""${n.replaceAll("[\"\\\\]", "'")}":$t%.3f""" }.mkString("{", ",", "}")}}"""
     s"""{"key":"${r.key}","dir":"${r.dir}","rows":${r.rows},""" +
       s""""run1":${run(r.run1)},"run2":${run(r.run2)},"collect":${run(r.collect)}}"""
   }
 
   def main(args: Array[String]): Unit = {
     val base = args(0)
-    val keys = args(1).split(",").toSeq
+    val keys =
+      if (args(1) == "all") SparkEntry.allOps.map(_.key) else args(1).split(",").toSeq
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val dirs = base +: args.lift(2).map(_.toInt).toSeq.map { k =>
       val out = Staging.dir(s"scale-x$k")

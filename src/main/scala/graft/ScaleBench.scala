@@ -275,6 +275,13 @@ object ScaleBench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** [[Bench.warmup]] on `dir`: its seconds and each entry's. */
+  private def warm(spark: SparkSession, dir: String): (Double, Seq[(String, Double)]) = {
+    val t0 = System.nanoTime()
+    val stages = Bench.warmup(spark, dir)
+    ((System.nanoTime() - t0) / 1e9, stages)
+  }
+
   /** min-of-2 per key (same protocol as Bench's >1.0 s re-measure rule,
     * applied unconditionally here — the paired ratio is the signal and a
     * single GC pause would poison it). */
@@ -331,14 +338,8 @@ object ScaleBench {
     // per-artifact breakdown. The first run of this mode proved the
     // point: the skew-side warmup ground silently for ~12 minutes while
     // every per-key ratio came out under 1.
-    def timedWarm(dir: String): (Double, Seq[(String, Double)]) = {
-      val stages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      val t0 = System.nanoTime()
-      Bench.warmup(spark, dir, (n, s) => stages += ((n, s)))
-      ((System.nanoTime() - t0) / 1e9, stages.toSeq)
-    }
-    val (ingestU, stagesU) = timedWarm(outU)
-    val (ingestS, stagesS) = timedWarm(outS)
+    val (ingestU, stagesU) = warm(spark, outU)
+    val (ingestS, stagesS) = warm(spark, outS)
     // Kill phase-order bias before timing: the first run of this mode
     // timed ALL uniform keys before ALL skew keys and global JVM warmth
     // made most skew ratios come out < 1 on identical volume. One untimed
@@ -384,17 +385,12 @@ object ScaleBench {
 
     val tBuild = build(spark, base, out, k)
 
-    def warmTimed(dir: String): Double = {
-      val t0 = System.nanoTime()
-      Bench.warmup(spark, dir)
-      (System.nanoTime() - t0) / 1e9
-    }
     // base first: its artifacts are small, and JVM-global JIT warmth then
     // benefits BOTH sides equally (biasing, if anything, toward the base
     // looking slower — the conservative direction for a scaling ratio).
-    val warmBase = warmTimed(base)
+    val warmBase = warm(spark, base)._1
     val tBase = time(spark, base, keys)
-    val warmScaled = warmTimed(out)
+    val warmScaled = warm(spark, out)._1
     val tScaled = time(spark, out, keys)
     val checks = planChecks(spark, out)
 

@@ -20,33 +20,6 @@ final case class Op(
 
 trait OpModule { def ops: Seq[Op] }
 
-/** A memo whose entries live exactly as long as their SparkContext: one
-  * listener per context drops every entry for that context at application
-  * end, so long-lived processes that cycle sessions don't pin dead sessions
-  * or their cached state. One implementation shared by [[Tables]] /
-  * [[Views]] / [[graph.GraphFixture]] (they all need the same lifecycle
-  * dance). */
-final class SessionMemo[K, V] {
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, K), V]
-  private val hooked = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext, java.lang.Boolean]())
-
-  def getOrElseUpdate(s: SparkSession, k: K)(build: => V): V =
-    memo.getOrElseUpdate((s, k), {
-      val sc = s.sparkContext
-      if (hooked.add(sc))
-        sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            memo.filterInPlace { case ((sess, _), _) => sess.sparkContext ne sc }
-            hooked.remove(sc); ()
-          }
-        })
-      build
-    })
-}
-
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
   * Memoized per (session, dir, table): `spark.read.parquet` pays driver-side
   * file listing + footer schema inference on EVERY call, and the operator
@@ -56,10 +29,8 @@ object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  private val memo = new SessionMemo[(String, String), DataFrame]
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo.getOrElseUpdate(spark, (dir, name))(load(spark, dir, name))
+    Artifacts.tables(spark, dir, name)(load(spark, dir, name))
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -95,11 +66,9 @@ object Tables {
   * re-derived per query.) These caches are intentional session-scoped state,
   * like GraphFixture's; entries drop when their SparkContext stops. */
 object Views {
-  private val memo = new SessionMemo[(String, String), String]
-
   /** Materialize `sql` once; returns the view name to reference. */
   def materialize(s: SparkSession, dir: String, name: String, sql: => String): String =
-    memo.getOrElseUpdate(s, (dir, name)) {
+    Artifacts.views(s, dir, name) {
       val vn = s"graft_${name}_${Staging.tag(dir)}"
       s.sql(sql).persist().createOrReplaceTempView(vn)
       vn
@@ -117,7 +86,7 @@ object Views {
     * measured stored size and broadcast it when it fits the session's
     * threshold, like any other eager cut. */
   def checkpointed(s: SparkSession, dir: String, name: String, sql: => String): String =
-    memo.getOrElseUpdate(s, (dir, name)) {
+    Artifacts.views(s, dir, name) {
       val vn = s"graft_${name}_${Staging.tag(dir)}"
       util.cut(s.sql(sql)).createOrReplaceTempView(vn)
       vn
@@ -135,11 +104,9 @@ object Views {
   * (session, dir, table). PlanQualitySpec asserts the resulting stats flip
   * a 3-way join order that file-size estimates alone get wrong. */
 object TableStats {
-  private val memo = new SessionMemo[(String, String), String]
-
   /** Ensure `table` is analyzed; returns the catalog table name to query. */
   def analyzed(s: SparkSession, dir: String, table: String): String =
-    memo.getOrElseUpdate(s, (dir, table)) {
+    Artifacts.tableStats(s, dir, table) {
       val tn = s"graft_stats_${table}_${Staging.tag(dir)}"
       if (!s.catalog.tableExists(tn)) {
         s.sql(s"CREATE TABLE $tn USING parquet LOCATION '$dir/$table.parquet'")
@@ -171,6 +138,8 @@ object Staging {
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(p.toFile)))
     p
   }
+  /** Deletes a staged directory and everything under it. */
+  def delete(path: String): Unit = deleteTree(new java.io.File(path))
   private def deleteTree(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(deleteTree))
     f.delete(); ()

@@ -41,14 +41,11 @@ object GraphFixture {
   // scan's small RDD instead of the whole build lineage, the cached plan
   // pins no build broadcast (the 'colocated' join's hash relation), and a
   // lost cache block recomputes from the staged files, not from the build.
-  // SessionMemo drops entries when the SparkContext stops, so long-lived
-  // processes that cycle sessions don't pin dead sessions + cached plans.
-  private val memo = new graft.SessionMemo[String, PropertyGraph]
-
+  // The catalog entry (graft.Artifacts.graph) drops when the SparkContext
+  // stops, so long-lived processes that cycle sessions don't pin dead
+  // sessions + cached plans; its release deletes the staged files.
   def apply(s: SparkSession, dir: String): PropertyGraph =
-    memo.getOrElseUpdate(s, dir)(build(s, dir))
-
-  private val sccMemo = new graft.SessionMemo[String, PropertyGraph]
+    graft.Artifacts.graph(s, dir)(build(s, dir))._1
 
   /** Directed view for SCC analytics: 'colocated' edges expanded to BOTH
     * directions — the label encodes "customer and supplier share a nation
@@ -62,7 +59,7 @@ object GraphFixture {
     * (session, dir) like the base graph so the GraphX view is shared
     * across keys. */
   def sccView(s: SparkSession, dir: String): PropertyGraph =
-    sccMemo.getOrElseUpdate(s, dir) {
+    graft.Artifacts.sccView(s, dir) {
       val g = apply(s, dir)
       val sym = g.edges.filter(col("label") === "colocated")
         .select(col("dst").as("src"), col("src").as("dst"), col("label"),
@@ -70,7 +67,7 @@ object GraphFixture {
       PropertyGraph(g.vertices, g.edges.unionByName(sym))
     }
 
-  private def build(s: SparkSession, dir: String): PropertyGraph = {
+  private def build(s: SparkSession, dir: String): (PropertyGraph, String) = {
     def t(n: String) = Tables(s, dir, n)
     val nullD = lit(null).cast("double")
     def vpart(df: DataFrame, tag: Int, key: String, label: String,
@@ -132,7 +129,7 @@ object GraphFixture {
       df.write.parquet(s"$stage/$name")
       s.read.parquet(s"$stage/$name").persist()
     }
-    PropertyGraph(stored(vertices, "vertices"), stored(edges, "edges"))
+    (PropertyGraph(stored(vertices, "vertices"), stored(edges, "edges")), stage)
   }
 }
 

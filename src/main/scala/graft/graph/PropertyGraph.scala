@@ -47,10 +47,20 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
   private def spark = vertices.sparkSession
 
+  /** What this instance stored: every artifact `lazy val` below registers
+    * through it, and [[uncache]] releases it. It lives on the instance, so
+    * a throwaway graph nobody references is collected with its entries. */
+  private[graft] val artifacts = new graft.Artifacts.Instance
+
+  /** An artifact built with GraphX: its release also drops the vertex and
+    * edge RDDs the build left cached ([[graft.Artifacts.graphX]]). */
+  private def graphX[V](name: String)(build: => V): V =
+    artifacts(name)(graft.Artifacts.graphX(spark.sparkContext)(build))
+
   /** |V|, computed once per graph instance (the fixture memoizes the
     * PropertyGraph per (session, dir), so this is an ingest-time stat — the
     * table-level rowCount a deployment's ANALYZE records). */
-  lazy val numVertices: Long = vertices.count()
+  lazy val numVertices: Long = artifacts("numVertices")(vertices.count())
 
   /** Size-aware broadcast hint for VERTEX-BOUNDED LAZY loop frames
     * (per-vertex scores/labels/frontiers behind a lazy `graft.util.cut`):
@@ -193,7 +203,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   /** Stored visible-subgraph instance: analytics over the security-trimmed
     * graph ([[visible]] builds a fresh wrapper per call; the stored one
     * shares its lazy artifacts — CC labeling, GraphX view — across keys). */
-  lazy val visibleView: PropertyGraph = visible
+  lazy val visibleView: PropertyGraph = artifacts("visibleView")(visible)
 
   /** Variable-length reachability ≤ maxHops from `sources` (a DF with an
     * `id` column): Pregel hop-flood on the shared GraphX view — each vertex
@@ -467,7 +477,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * — a big-but-flat relation (colocated: 4 edges per customer) is a
     * far better next join than a smaller hub-keyed one (in_nation: 640
     * edges per nation at 10×). */
-  lazy val edgeLabelStats: Map[Option[String], (Long, Long, Long)] = {
+  lazy val edgeLabelStats: Map[Option[String], (Long, Long, Long)] = artifacts("edgeLabelStats") {
     val per = edges.groupBy("label").agg(
         count(lit(1)).as("n"),
         countDistinct(col("src")).as("ds"),
@@ -578,11 +588,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * used. Long-lived sessions that construct throwaway instances (e.g.
     * `g.visible.triangleCounts` per query, instead of the memoized
     * GraphFixture graph) should call [[uncache]] when done with one. */
-  lazy val undirectedEdges: DataFrame = edges
+  lazy val undirectedEdges: DataFrame = artifacts("undirectedEdges")(edges
     .filter(col("src") =!= col("dst"))
     .select(least(col("src"), col("dst")).as("a"),
       greatest(col("src"), col("dst")).as("b")).distinct()
-    .persist()
+    .persist())
 
   /** Degree-ordered oriented adjacency — the stored INDEX for triangle /
     * wedge workloads: each undirected edge oriented from its lower-(degree,
@@ -593,7 +603,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * graph (two degree joins over [[undirectedEdges]]), stored like the
     * other session artifacts; at 100 TB this is a materialized table
     * bucketed by `u`. */
-  lazy val orientedEdges: DataFrame = {
+  lazy val orientedEdges: DataFrame = artifacts("orientedEdges") {
     val und = undirectedEdges
     val deg = undDegrees // stored index: joined twice below, reused by kCore
     val withDeg = und
@@ -607,22 +617,18 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       when(aFirst, col("db")).otherwise(col("da")).as("dv"))
       .persist()
     ori.count() // materialize while the degree index is hot
-    oriBuilt = true
     ori
   }
-  @volatile private var oriBuilt = false
 
   /** Undirected simple-graph degrees — vertex-sized stored index shared by
     * the oriented-adjacency build (two joins) and k-core's first peel round
     * (which is exactly a filter over it). */
-  lazy val undDegrees: DataFrame = {
-    degBuilt = true
+  lazy val undDegrees: DataFrame = artifacts("undDegrees") {
     val und = undirectedEdges
     und.select(col("a").as("id")).unionAll(und.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
       .persist()
   }
-  @volatile private var degBuilt = false
 
   /** Undirected MULTI-edge adjacency hash-clustered on the receiving vertex
     * `a` — the stored message-passing index: HashPartitioning(a) satisfies
@@ -634,15 +640,13 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * LP's neighbor-label counts weight parallel edges. Stored per graph
     * like the other ingest artifacts; at 100 TB this is the edge table
     * bucketed by `a`. */
-  lazy val undByA: DataFrame = {
+  lazy val undByA: DataFrame = artifacts("undByA") {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    undBuilt = true
     edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .repartition(parts, col("a"))
       .persist()
   }
-  @volatile private var undBuilt = false
 
   /** Per-list shard cap for [[neighborLists]]: no stored adjacency row
     * holds more than this many neighbor ids, whatever the hub degree.
@@ -665,9 +669,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * Schema: (u, shard, deg, nbrs ARRAY). At 100 TB this is the
     * adjacency-list table every graph store maintains, bucketed by vertex
     * and sharded by rank — the standard hub-cap layout. */
-  lazy val neighborLists: DataFrame = {
+  lazy val neighborLists: DataFrame = artifacts("neighborLists") {
     import org.apache.spark.sql.expressions.Window
-    nbrBuilt = true
     val cap = nbrShardCap
     val byRank = Window.partitionBy("a").orderBy("b")
     val byVertex = Window.partitionBy("a")
@@ -681,31 +684,20 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         sort_array(collect_list(col("b"))).as("nbrs"))
       .persist()
   }
-  @volatile private var nbrBuilt = false
 
-  /** Release this instance's cached artifacts: [[undirectedEdges]],
-    * [[orientedEdges]], [[undDegrees]], [[undByA]], [[neighborLists]],
-    * [[connectedComponents]] and [[stronglyConnectedComponents]] (the
-    * GraphX view's RDD caches are dropped by GC once unreferenced). Safe
-    * whether or not an artifact was ever computed — unpersisting the
-    * registered-but-unmaterialized undirected view is a cheap catalog
-    * removal, and every other artifact is only touched if it was built. */
-  def uncache(): Unit = {
-    undirectedEdges.unpersist()
-    if (oriBuilt) { orientedEdges.unpersist(); () }
-    if (degBuilt) { undDegrees.unpersist(); () }
-    if (undBuilt) { undByA.unpersist(); () }
-    if (nbrBuilt) { neighborLists.unpersist(); () }
-    if (ccBuilt) { connectedComponents.unpersist(); () }
-    if (sccBuilt) { stronglyConnectedComponents.unpersist(); () }
-    ()
-  }
+  /** Release everything this instance built, the latest first: the
+    * persisted indexes, the checkpoint blocks of every cut its builds made
+    * (the stored labelings and their loop rounds), the GraphX view's and
+    * the CC/SCC labelings' graphs, and [[visibleView]]'s own artifacts.
+    * Only what was built is touched. The instance is not for further use:
+    * its stored labelings read released blocks. */
+  def uncache(): Unit = artifacts.release()
 
   /** GraphX view: vertex attr = val (nulls → 0.0), unit edge attr.
     * MEMORY_AND_DISK so 100 TB-scale graphs spill instead of OOM.
     * Built once per PropertyGraph instance (GraphX's internal routing-table
     * build is the expensive part; CC and Pregel reuse it). */
-  lazy val toGraphX: Graph[Double, Long] = {
+  lazy val toGraphX: Graph[Double, Long] = graphX("toGraphX") {
     val vrdd = vertices.select(col("id"), coalesce(col("val"), lit(0.0))).rdd
       .map(r => (r.getLong(0), r.getDouble(1))).coalesce(pregelParts)
     val erdd = edges.select("src", "dst").rdd
@@ -722,13 +714,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * oracle-able. Persisted: the component labeling is a stored index in the
     * reference family's sense — component-scoped analytics ([[maxFlood]])
     * reuse it instead of re-running a second full-graph fixed point. */
-  lazy val connectedComponents: DataFrame = {
+  lazy val connectedComponents: DataFrame = graphX("connectedComponents") {
     val sp = spark; import sp.implicits._
-    ccBuilt = true
     toGraphX.connectedComponents().vertices.toDF("id", "component")
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
-  @volatile private var ccBuilt = false
 
   /** Directed strongly-connected components: each vertex labeled with the
     * LOWEST vertex id in its SCC. Deterministic: labels are integer
@@ -767,9 +757,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * [[connectedComponents]] the labeling is a stored analytics artifact
     * (persisted lazy val): condensation-scoped queries reuse it instead
     * of re-running the peel. */
-  lazy val stronglyConnectedComponents: DataFrame = {
+  lazy val stronglyConnectedComponents: DataFrame = graphX("stronglyConnectedComponents") {
     val sp = spark; import sp.implicits._
-    sccBuilt = true
     var (e, n) = Superstep.counted(
       edges.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
     var rounds = 0
@@ -810,7 +799,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         coalesce(col("core_component"), col("id")).as("component"))
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
-  @volatile private var sccBuilt = false
 
   /** INCREMENTAL connected-components maintenance: treat the edges matching
     * `deltaPred` as a freshly-ingested batch and fold them into the stored
@@ -841,12 +829,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * scaladoc there); also the seed state for streaming maintenance
     * ([[foldBatchCC]] per micro-batch). */
   def storedBaseCC(deltaPred: org.apache.spark.sql.Column): DataFrame =
-    baseCCMemo.getOrElseUpdate(deltaPred.toString, {
+    artifacts(s"storedBaseCC/$deltaPred") {
       val base = PropertyGraph(vertices, edges.filter(!deltaPred))
       val cc = graft.util.cut(base.connectedComponents)
       base.uncache()
       cc
-    })
+    }
 
   /** Fold ONE batch of delta edges (`src`, `dst` columns) into labeling
     * `lbl` (id, component — component = min vertex id). Because the merged
@@ -910,8 +898,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     lbl.join(broadcast(merged), Seq("component"), "left")
       .select(col("id"), coalesce(col("mergedc"), col("component")).as("component"))
   }
-  private val baseCCMemo =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]
 
   /** INCREMENTAL triangle-count maintenance: fold the edge batch matching
     * `deltaPred` into the stored triangle count without EVER re-counting
@@ -937,7 +923,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * against a full recount. */
   def incrementalTriangles(deltaPred: org.apache.spark.sql.Column): DataFrame = {
     val sp = spark; import sp.implicits._
-    val (nBase, nDelta) = triMemo.getOrElseUpdate(deltaPred.toString, {
+    val (nBase, nDelta) = artifacts(s"incrementalTriangles/$deltaPred") {
       // The landed delta batch, canonicalized and de-paralleled (a delta
       // edge that parallels an existing base edge closes no NEW triangle —
       // the simple undirected graph already had the pair).
@@ -995,11 +981,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         .head.getLong(0) / 3
       deltaUnd.unpersist()
       (nTotal - nD, nD)
-    })
+    }
     Seq((nBase, nDelta, nBase + nDelta)).toDF("n_base", "n_delta", "n_total")
   }
-  private val triMemo =
-    new scala.collection.concurrent.TrieMap[String, (Long, Long)]
 
   /** Min hop count from each vertex TO any vertex satisfying `targetPred`,
     * following edge direction: Pregel hop-flood from the targets with
@@ -1204,8 +1188,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * graph (lazy val, like the other ingest artifacts): triangle counts
     * feed multiple keys (graph_triangles, graph_clustering) and the wedge
     * join is the dominant cost — the checkpointed result is vertex-sized
-    * and its RDD is freed by GC with the instance. */
-  lazy val triangleCounts: DataFrame = {
+    * and [[uncache]] releases its blocks. */
+  lazy val triangleCounts: DataFrame = artifacts("triangleCounts") {
     // The fork orders each candidate pair by the SAME (degree, id) total
     // order the stored orientation uses, so a closing edge can only be
     // (lower → higher) — one equi-join against the index, no OR-key.
@@ -1308,8 +1292,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * [[triangleCounts]], an ingest-time analytics artifact the reference
     * family stores next to the graph (built once per graph version, read
     * by the truss key; the kTruss result is already a localCheckpoint, so
-    * memoizing is a reference, not a second copy). */
-  lazy val truss3: DataFrame = kTruss(3, 3)
+    * memoizing is a reference, not a second copy; [[uncache]] releases
+    * its blocks and its peel rounds'). */
+  lazy val truss3: DataFrame = artifacts("truss3")(kTruss(3, 3))
 
   /** Per-edge triangle support over a value-oriented (a<b) simple edge
     * set, enumerated DEGREE-ORDERED (the [[orientedEdges]] trick, applied
@@ -1360,20 +1345,21 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   /** Stored 3-iteration label-propagation communities — shared by the
     * labelprop and modularity keys (the labeling is the expensive part;
     * its consumers are vertex-sized folds). Cut eagerly after the final
-    * iteration, freed by GC with the instance. */
-  lazy val lp3: DataFrame = labelPropagation(3)
+    * iteration; [[uncache]] releases it with its rounds' cuts. */
+  lazy val lp3: DataFrame = artifacts("lp3")(labelPropagation(3))
 
   /** Stored one-level Louvain communities (4 parity-scheduled sweeps) —
     * the same stored-labeling discipline as [[lp3]]: the sweep loop is
     * the expensive part, its consumers (the graded key, conductance/
-    * modularity-style scoring) are vertex-sized folds. */
-  lazy val lu4: DataFrame = Louvain.oneLevel(undirectedEdges, 4)
+    * modularity-style scoring) are vertex-sized folds. The result reads
+    * the last sweep's cut; [[uncache]] releases every sweep's. */
+  lazy val lu4: DataFrame = artifacts("lu4")(Louvain.oneLevel(undirectedEdges, 4))
 
   /** Stored Leiden-style refinement of [[lu4]] (id, comm, refined):
     * connected pieces within each louvain community via one PairCC
     * fixpoint pass over the intra-community edges — the third stored
     * labeling (lp3, lu4, this); consumers are vertex-sized folds. */
-  lazy val leidenRefined: DataFrame = {
+  lazy val leidenRefined: DataFrame = artifacts("leidenRefined") {
     val lbl = lu4
     val intra = undirectedEdges
       .join(lbl.select(col("id").as("a"), col("comm").as("ca")), "a")
@@ -1398,7 +1384,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * community-sized aggregates; the sweep loop then runs on the
     * SUPER-graph (pieces, not vertices — the size collapse that makes
     * multi-level Louvain tractable at any scale). */
-  lazy val louvain2: DataFrame = {
+  lazy val louvain2: DataFrame = artifacts("louvain2") {
     val l1 = leidenRefined // (id, comm, refined)
     val lbl = l1.select(col("id"), col("refined"))
     val e = undirectedEdges
@@ -1434,9 +1420,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * is the expensive part and TWO keys consume the same matrix
     * (graph_node2vec_walk emits it; graph_walk_skipgrams explodes it
     * into (center, context) training pairs). */
-  lazy val n2v4: DataFrame = graft.util.cut(biasedWalks(
+  lazy val n2v4: DataFrame = artifacts("n2v4")(graft.util.cut(biasedWalks(
     vertices.filter(col("label") === "customer" && col("id") % 100 === 0),
-    4, wRet = 500000L, wOne = 1000000L, wFar = 2000000L))
+    4, wRet = 500000L, wOne = 1000000L, wFar = 2000000L)))
 
   /** DataFrame label propagation, fixed iterations, DETERMINISTIC tie-break
     * (max neighbor-label count, then min label) — unlike GraphX's

@@ -48,11 +48,9 @@ object GraphOps extends OpModule {
   private val RobustRoot = GraphFixture.B + 3
 
   // Biconnectivity runs once per (session, dir): both keys read the same
-  // Tarjan–Vishkin pass (graph/Biconnect.scala), so memoize the pair.
-  private val biconnMemo = new graft.SessionMemo[String,
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+  // Tarjan–Vishkin pass (graph/Biconnect.scala), so the pair is one stored artifact.
   private def biconn(s: org.apache.spark.sql.SparkSession, dir: String) =
-    biconnMemo.getOrElseUpdate(s, dir) {
+    graft.Artifacts.biconn(s, dir) {
       graft.graph.Biconnect(robustPairs(s, dir), RobustRoot)
     }
 
@@ -72,11 +70,9 @@ object GraphOps extends OpModule {
   // refuses to fake (Biconnect's loud connectivity require) — component
   // roots come from the CC machinery (converged hook+jump labels are each
   // component's min id), then ALL components' BFS trees and sweeps run
-  // batched in one forest pass. Memoized like the one-region pair.
-  private val biconnAllMemo = new graft.SessionMemo[String,
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+  // batched in one forest pass. Stored like the one-region pair.
   private def biconnAll(s: org.apache.spark.sql.SparkSession, dir: String) =
-    biconnAllMemo.getOrElseUpdate(s, dir) {
+    graft.Artifacts.biconnAll(s, dir) {
       val pairs = robustPairsAll(s, dir)
       val roots = graft.graph.PairCC.labelsConverged(
         pairs.select(col("a").as("da"), col("b").as("db")))

@@ -24,13 +24,13 @@ object RelationalOps extends OpModule {
 
   /** lineitem/orders saved as bucketed+sorted tables on the order key —
     * the ingest-time layout that lets fact-fact joins run shuffle-free.
-    * Memoized per (session, dir): the write happens once per session (the
-    * stored-table analog of GraphFixture's cached graph); table names are
+    * Stored per (session, dir) (graft.Artifacts.bucketed): the write
+    * happens once per session (the stored-table analog of GraphFixture's
+    * cached graph); table names are
     * dir-scoped so SFs don't collide in a shared JVM. 16 buckets suits the
     * bench SFs; a cluster sizes buckets to ~executor-count × small factor. */
-  private val bucketMemo = new graft.SessionMemo[String, (String, String)]
   private def bucketedFacts(s: SparkSession, dir: String): (String, String) =
-    bucketMemo.getOrElseUpdate(s, dir) {
+    graft.Artifacts.bucketed(s, dir) {
       val tag = graft.Staging.tag(dir)
       val lt = s"lineitem_bkt_$tag"; val ot = s"orders_bkt_$tag"
       Tables(s, dir, "lineitem").write.mode("overwrite")

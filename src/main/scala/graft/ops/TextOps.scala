@@ -19,28 +19,6 @@ object TextOps extends OpModule {
     "es" -> Seq("el", "los", "y", "una"),
     "fr" -> Seq("le", "la", "et", "les"))
 
-  /** Shared BPE trainer (see text_bpe_train's registration comment for the
-    * algorithm and scale shape): returns the 3 learned merges and the
-    * DISTINCT-stream (s, m) DataFrame AFTER applying them — text_bpe_train
-    * grades the merge table, text_bpe_apply the (multiplicity-weighted)
-    * retokenized vocabulary. Memoized per (session, dir): the trainer
-    * collects one argmax row per round, and its consumers would otherwise
-    * re-run the 3 counting rounds each.
-    *
-    * Multiplicity weighting (r12, VERDICT ask #3): identical symbol
-    * streams collapse to ONE row carrying their duplicate count `m`
-    * (dedup_exact's hash-groupBy shape, applied to the stream), and every
-    * pair count is SUM(m) instead of COUNT(*). Arithmetic is identical —
-    * Σ multiplicities over distinct streams ≡ plain count over all docs,
-    * integer-exact, so the unweighted DuckDB oracle retrains bit-for-bit
-    * unchanged — but the per-round merge `replace` now runs once per
-    * DISTINCT stream: the r11 10× skew overlay's 2%-identical-doc clique
-    * put an 8.5× ingest blowup into exactly this replace (SCALE.md), and
-    * under weighting the clique costs one row's replace per round. */
-  private val bpeMemo =
-    new graft.SessionMemo[String, (Seq[(Int, String, String, String, Long)],
-      org.apache.spark.sql.DataFrame)]
-
   /** Greedy left-to-right non-overlapping merge of pair (l, r) on a
     * single-space-delimited symbol stream. A naive replace(" l r "→" lr ")
     * SKIPS back-to-back occurrences ("… l r l r …"): the first match
@@ -60,10 +38,28 @@ object TextOps extends OpModule {
       lit(s" $l  $r "), lit(s" $l$r ")), lit("  "), lit(" "))
   }
 
+  /** Shared BPE trainer (see text_bpe_train's registration comment for the
+    * algorithm and scale shape): returns the 3 learned merges and the
+    * DISTINCT-stream (s, m) DataFrame AFTER applying them — text_bpe_train
+    * grades the merge table, text_bpe_apply the (multiplicity-weighted)
+    * retokenized vocabulary. Stored per (session, dir) (graft.Artifacts.bpe): the trainer
+    * collects one argmax row per round, and its consumers would otherwise
+    * re-run the 3 counting rounds each.
+    *
+    * Multiplicity weighting (r12, VERDICT ask #3): identical symbol
+    * streams collapse to ONE row carrying their duplicate count `m`
+    * (dedup_exact's hash-groupBy shape, applied to the stream), and every
+    * pair count is SUM(m) instead of COUNT(*). Arithmetic is identical —
+    * Σ multiplicities over distinct streams ≡ plain count over all docs,
+    * integer-exact, so the unweighted DuckDB oracle retrains bit-for-bit
+    * unchanged — but the per-round merge `replace` now runs once per
+    * DISTINCT stream: the r11 10× skew overlay's 2%-identical-doc clique
+    * put an 8.5× ingest blowup into exactly this replace (SCALE.md), and
+    * under weighting the clique costs one row's replace per round. */
   private def bpeChain(s: org.apache.spark.sql.SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long)],
          org.apache.spark.sql.DataFrame) =
-    bpeMemo.getOrElseUpdate(s, dir) {
+    graft.Artifacts.bpe(s, dir) {
       import org.apache.spark.sql.functions._
       var cur = Tables(s, dir, "documents")
         .select(translate(substring(lower(col("text")), 1, 64), " ", "_").as("c"))

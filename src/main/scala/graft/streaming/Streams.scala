@@ -37,12 +37,6 @@ object Streams {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
   }
 
-  /** Cached per-(session, dir) answer to "is ts physically LONG nanos?" —
-    * one footer-schema read per directory instead of a full batch
-    * `spark.read.parquet` (file listing + schema merge) on every stream
-    * construction. */
-  private val tsVintage = new graft.SessionMemo[String, Boolean]
-
   /** Streaming read of an events parquet directory. The declared schema
     * adapts to the file's ts vintage (see [[graft.Tables]]): TIMESTAMP
     * (MICROS) files stream with a timestamp schema directly; TIMESTAMP
@@ -52,7 +46,9 @@ object Streams {
     * have preset it, and memoizes the vintage sniff per (session, dir). */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     configureStateStore(spark)
-    val tsIsLong = tsVintage.getOrElseUpdate(spark, dir) {
+    // stored per (session, dir): one footer-schema read per directory
+    // instead of a full batch read on every stream construction
+    val tsIsLong = graft.Artifacts.tsVintage(spark, dir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       spark.read.parquet(dir).schema("ts").dataType == LongType
     }

@@ -104,7 +104,7 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     copies.foreach { d =>
-      graph.GraphFixture(spark, d.toString).uncache()
+      Artifacts.release(spark, d.toString)
       Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
     super.afterAll()
@@ -121,6 +121,18 @@ class ProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ops1("exchange") >= 12 && ops1("smj") == 0, ops1)
     assert(r.run1.jobs > r.run2.jobs)
     assert(r.run1.cpuSec > 0 && r.run1.shuffleBytes > 0)
+  }
+
+  test("graph_louvain: each pass lists the artifacts it built, lu4 in run1 only") {
+    val r = Probe.measure(spark, "graph_louvain", freshCopy())
+    val built = r.run1.built.toMap
+    assert(built.contains("lu4") && built.contains("graph"), r.run1.built)
+    assert(built.values.forall(_ >= 0))
+    assert(r.run2.built.isEmpty && r.collect.built.isEmpty, (r.run2.built, r.collect.built))
+    val line = Probe.json(r)
+    assert(raw""""run1":\{[^{]*"ops":\{[^}]*\},"built":\{[^}]*"lu4":[0-9.]+""".r
+      .findFirstIn(line).nonEmpty, line)
+    assert(line.contains(""""built":{}}"""), line)
   }
 
   test("graph_densest: run2 counts do not depend on a prior undDegrees build") {

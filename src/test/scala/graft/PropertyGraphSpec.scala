@@ -1410,18 +1410,41 @@ class PropertyGraphSpec extends AnyFunSuite {
     }
   }
 
-  test("throwaway graph instances release artifact caches via uncache()") {
-    // Library pattern: a per-query derived graph (here the visibility view)
-    // builds its own undirected/oriented artifacts; uncache() must return
-    // the CacheManager census to (near) where it started — only the live
-    // result's transient checkpoint RDD may remain.
-    val before = spark.sparkContext.getPersistentRDDs.size
+  /** Ids of the RDDs the context holds persisted, and their descriptions. */
+  private def persisted: Map[Int, String] =
+    spark.sparkContext.getPersistentRDDs.map { case (id, r) => id -> s"$id ${r.name} $r" }.toMap
+
+  /** Builds artifacts on a throwaway instance (the visibility view), calls
+    * its uncache(), and returns every RDD persisted meanwhile that is left.
+    * The census compares ids, not counts: RDDs earlier tests left
+    * unreferenced may be collected meanwhile and would hide one left
+    * behind. The fixture's own caches are filled first; they stay. */
+  private def leftByUncache(build: graph.PropertyGraph => Unit): Iterable[String] = {
+    g.vertices.count(); g.edges.count()
+    val before = persisted
     val sub = g.visible
-    assert(sub.triangleCounts.count() >= 0)
+    build(sub)
     sub.uncache()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 2,
-      s"uncache left caches pinned: $before -> $after")
+    persisted.filter { case (id, _) => !before.contains(id) }.values
+  }
+
+  test("throwaway graph instances release artifact caches via uncache()") {
+    // Library pattern: a per-query derived graph builds its own undirected,
+    // degree and oriented indexes plus the cut triangle counts; uncache()
+    // must release all of them.
+    val left = leftByUncache(sub => assert(sub.triangleCounts.count() >= 0))
+    assert(left.isEmpty, s"uncache left caches pinned: ${left.mkString("; ")}")
+  }
+
+  test("uncache() releases a labeling's round cuts and the CC labeling's GraphX graphs") {
+    // lp3's rounds are cuts nothing references once the labeling is cut,
+    // and the CC labeling reads the GraphX view and the Pregel result
+    // graph: uncache() releases them without waiting for the collector.
+    val left = leftByUncache { sub =>
+      assert(sub.lp3.count() > 0)
+      assert(sub.connectedComponents.count() > 0)
+    }
+    assert(left.isEmpty, s"uncache left caches pinned: ${left.mkString("; ")}")
   }
 
   test("iterative analytics do not accumulate pinned caches across runs") {
