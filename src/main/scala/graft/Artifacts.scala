@@ -85,16 +85,32 @@ object Artifacts {
   def observe[A](f: (String, Double) => Unit)(body: => A): A =
     try { observers.add(f); body } finally observers.remove(f)
 
+  /** Runs `body` as the innermost build on this thread: returns its value
+    * and the releases registered while it ran. */
+  private def making[V](body: => V): (V, Seq[() => Unit]) = {
+    val made = mutable.ArrayBuffer.empty[() => Unit]
+    open.set(made :: open.get)
+    try (body, made.toSeq) finally open.set(open.get.tail)
+  }
+
   /** Builds `name`: returns the value, the seconds the build took and the
     * releases registered while it ran. */
   private def build[V](name: String)(body: => V): (V, Double, Seq[() => Unit]) = {
-    val made = mutable.ArrayBuffer.empty[() => Unit]
-    open.set(made :: open.get)
     val t0 = System.nanoTime()
-    val v = try body finally open.set(open.get.tail)
+    val (v, made) = making(body)
     val sec = (System.nanoTime() - t0) / 1e9
     observers.forEach(_(name, sec))
-    (v, sec, made.toSeq)
+    (v, sec, made)
+  }
+
+  /** Runs `body`, stores its value with `store` (which must leave nothing
+    * reading what `body` made: an eager cut, say), then releases what `body`
+    * made — its cuts and GraphX RDDs ([[onRelease]]) — at once. For a build
+    * whose rounds nothing reads once the result is stored; `store` runs
+    * in the enclosing build, so the stored result is released with it. */
+  def scratch[V, W](body: => V)(store: V => W): W = {
+    val (v, made) = making(body)
+    try store(v) finally made.foreach(_())
   }
 
   /** Seconds `body` took, timed and reported as the build of `name`; what

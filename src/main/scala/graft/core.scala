@@ -215,12 +215,15 @@ object util {
     * an EAGER cut carries the bytes its checkpointed blocks store, measured
     * after the job — a constant that never compounds, so per-round planning
     * stays flat, and Catalyst/AQE pick broadcast or shuffle at the
-    * session's autoBroadcastJoinThreshold with no hint. Never hint an eager
-    * cut. A LAZY cut has stored nothing yet and stays stats-less: a join
-    * against it plans as a shuffle unless the caller hints it, or gives
-    * `GraftBridge.cut` a row bound (`graph.Superstep.propagate`). */
-  def cut(df: DataFrame, eager: Boolean = true): DataFrame =
-    org.apache.spark.sql.GraftBridge.cut(df, eager)
+    * session's autoBroadcastJoinThreshold with no hint. A LAZY cut has
+    * stored nothing yet: with `rows`, a bound on its row count the loop
+    * already measured (|V| for a per-vertex frame, a round's count), it
+    * carries `rows` × Catalyst's per-row size, so the planner decides for it
+    * at the same threshold; without `rows` it stays stats-less and a join
+    * against it plans as a shuffle. This is the one rule for a loop frame's
+    * join: never hint a cut, bound the lazy ones. */
+  def cut(df: DataFrame, eager: Boolean = true, rows: => Option[Long] = None): DataFrame =
+    org.apache.spark.sql.GraftBridge.cut(df, eager, rows)
 
   /** Spread a CPU-heavy per-row stage across the cores (r17, guide §2.5's
     * "unsplittable input → repartition immediately after the read").

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round (E = surviving cross-edges, C = components):
   *  - cross-edge detection: two hash joins of the edge list against the
-  *    C-sized labeling (broadcast once C collapses below the threshold —
-  *    after round 1 in most graphs, AQE decides);
+  *    labeling (broadcast while its |support| row bound fits the session
+  *    threshold, shuffled past it);
   *  - min-edge pick: one E→C aggregate with partial aggregation below the
   *    shuffle (MIN of a struct);
   *  - contraction: pointer jumping on the C-sized hook forest — O(log C)
@@ -89,27 +89,22 @@ object Boruvka {
     var (comp, nV) = Superstep.counted(edges.select(col("a").as("id"))
       .unionAll(edges.select(col("b").as("id")))
       .distinct().withColumn("comp", col("id")))
-    // comp and par are LAZY cuts from round 2 on and carry no stats, so
-    // hint the bounded sides with counts measured elsewhere. TWO guards (r17 — the
-    // round-0 pin kept every component-sized join off broadcast forever on
-    // a >4M-vertex graph, even after the hook forest collapsed to
-    // thousands of components): `h` guards the |support|-row labeling
-    // (comp's ROW count never shrinks — only its distinct labels do), and
-    // `hc` guards the component-sized frames (sel/hook/jump/relabel),
-    // whose bound is the previous round's hooked-component count — already
-    // measured by that round's hook forest, so the tighter guard costs
-    // zero extra jobs. Locally (|V| ≪ 4M) every plan is unchanged.
-    def h(df: DataFrame): DataFrame = Superstep.small(df, nV)
+    // The loop's LAZY cuts carry the tightest row bound already measured,
+    // so every join against them is planned at the session threshold with
+    // no hint: the labeling comp by |support| nV (its ROW count never
+    // shrinks, only its distinct labels do), and the component-sized
+    // frames (sel, the jumps) by cBound, the previous round's
+    // hooked-component count — measured by that round's hook forest, so
+    // the tighter bound costs no extra job.
     var cBound = nV
-    def hc(df: DataFrame): DataFrame = Superstep.small(df, cBound)
     val forest = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var rounds = 0
     while (nE > 0) {
       rounds += 1
       // label both endpoints; drop intra-component edges for good
       val cross = edges
-        .join(h(comp.select(col("id").as("a"), col("comp").as("ca"))), "a")
-        .join(h(comp.select(col("id").as("b"), col("comp").as("cb"))), "b")
+        .join(comp.select(col("id").as("a"), col("comp").as("ca")), "a")
+        .join(comp.select(col("id").as("b"), col("comp").as("cb")), "b")
         .filter(col("ca") =!= col("cb"))
       val live = Superstep.counted(cross.select("a", "b", "w"))
       edges = live._1; nE = live._2
@@ -128,12 +123,12 @@ object Boruvka {
         val sel = cut(halves.groupBy("c")
           .agg(min(struct(col("w"), col("a"), col("b"), col("tgt"))).as("m"))
           .select(col("c"), col("m.w").as("w"), col("m.a").as("a"),
-            col("m.b").as("b"), col("m.tgt").as("tgt")), eager = false)
+            col("m.b").as("b"), col("m.tgt").as("tgt")), eager = false, Some(cBound))
         forest += sel.select("a", "b", "w").distinct()
         // hook; break each mutual pair toward the smaller id (tree root)
         val x = sel.select(col("c"), col("tgt"))
         val y = x.select(col("c").as("tc"), col("tgt").as("ttgt"))
-        val (hooked, n) = Superstep.counted(x.join(hc(y), col("tgt") === col("tc"))
+        val (hooked, n) = Superstep.counted(x.join(y, col("tgt") === col("tc"))
           .select(col("c"),
             when(col("ttgt") === col("c") && col("c") < col("tgt"), col("c"))
               .otherwise(col("tgt")).as("p")))
@@ -151,16 +146,16 @@ object Boruvka {
         var j = 0
         while (j < jumps) {
           val q = par.select(col("c").as("qc"), col("p").as("qp"))
-          par = cut(par.join(hc(q), col("p") === col("qc"))
-            .select(col("c"), col("qp").as("p")), eager = false)
+          par = cut(par.join(q, col("p") === col("qc"))
+            .select(col("c"), col("qp").as("p")), eager = false, Some(n))
           j += 1
         }
         // relabel: hooked components take their root; untouched ones keep
         // their label (left join + coalesce)
         comp = cut(comp
-          .join(hc(par.withColumnRenamed("c", "comp")), Seq("comp"), "left")
+          .join(par.withColumnRenamed("c", "comp"), Seq("comp"), "left")
           .select(col("id"), coalesce(col("p"), col("comp")).as("comp")),
-          eager = false)
+          eager = false, Some(nV))
       }
     }
     forest.reduceOption(_ unionAll _)

@@ -60,7 +60,7 @@ object Matching {
     // every round, so cnt strictly decreases.
     val oneTaskCap = 16000000L
     while (cnt > 0 && cnt > localThreshold && (r <= 64 || cnt > oneTaskCap)) {
-      val (m, next, n) = mutualBest(e)
+      val (m, next, n) = mutualBest(e, cnt)
       out = out.unionByName(m.select(lit(r).as("r"), col("a"), col("b"), col("w")))
       e = next; cnt = n
       r += 1
@@ -86,7 +86,7 @@ object Matching {
     var out = graft.util.empty(spark, "a BIGINT, b BIGINT, w DOUBLE")
     var r = 1
     while (r <= 64 && cnt > 0 && cnt > localThreshold) {
-      val (m, next, n) = mutualBest(e)
+      val (m, next, n) = mutualBest(e, cnt)
       out = out.unionByName(m.select("a", "b", "w"))
       e = next; cnt = n
       r += 1
@@ -107,9 +107,9 @@ object Matching {
     cut(out)
   }
 
-  /** One mutual-best round over the live edges `e` (a, b, w). Returns the
-    * matched edges, the edge list left once matched vertices leave, and
-    * its row count.
+  /** One mutual-best round over the live edges `e` (a, b, w), `cnt` rows
+    * (measured by the round before). Returns the matched edges, the edge
+    * list left once matched vertices leave, and its row count.
     *
     * TWO actions per round — the cut of the nomination frame and the
     * measured cut of the shrunken edge list, whose count rides its own
@@ -118,7 +118,7 @@ object Matching {
     * per-round fixed action latency, not data volume, dominates a
     * many-round BSP on a shrinking relation, so the loop's job count is
     * the thing to engineer down. */
-  private def mutualBest(e: DataFrame): (DataFrame, DataFrame, Long) = {
+  private def mutualBest(e: DataFrame, cnt: Long): (DataFrame, DataFrame, Long) = {
     val half = e.select(col("a").as("v"), col("a"), col("b"), col("w"))
       .unionAll(e.select(col("b").as("v"), col("a"), col("b"), col("w")))
     // CUT the nomination frame before the handshake: both join sides
@@ -129,14 +129,13 @@ object Matching {
       .agg(min(struct((-col("w")).as("nw"), col("a"), col("b"))).as("s"))
       .select(col("v"), col("s.a").as("a"), col("s.b").as("b"),
         (-col("s.nw")).as("w")), eager = false)
+    // the matched edges are live edges: the cut carries the round's
+    // measured cnt as its row bound, and the matched-vertex set (two rows
+    // per matched edge) joins from it at the session threshold, no hint
     val m = cut(best.filter(col("v") === col("a")).drop("v")
       .join(best.filter(col("v") === col("b")).select("a", "b"),
-        Seq("a", "b"), "left_semi"), eager = false)
-    // ≤ 2·matched rows, V/2-bounded — broadcast by construction (a cut
-    // frame has no stats, AQE can't see it; deployments with larger
-    // matches per round swap the hint for a stats-aware choice).
-    val mv = broadcast(m.select(col("a").as("mid"))
-      .unionAll(m.select(col("b").as("mid"))))
+        Seq("a", "b"), "left_semi"), eager = false, Some(cnt))
+    val mv = m.select(col("a").as("mid")).unionAll(m.select(col("b").as("mid")))
     // LAZY cuts throughout the round (the hits half-round lesson):
     // nothing consumes best/m until the shrunken list is measured, so the
     // whole round materializes in one job tree instead of one job per cut.

@@ -62,23 +62,12 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * table-level rowCount a deployment's ANALYZE records). */
   lazy val numVertices: Long = artifacts("numVertices")(vertices.count())
 
-  /** Size-aware broadcast hint for VERTEX-BOUNDED LAZY loop frames
-    * (per-vertex scores/labels/frontiers behind a lazy `graft.util.cut`):
-    * a lazy cut is a stats-less LogicalRDD leaf, so Catalyst plans every
-    * join against it as a full shuffle of BOTH sides even when the frame
-    * is a few MB. Never use it on an eager cut, which carries its measured
-    * size and needs no hint. The hint re-attaches
-    * the one statistic known by construction — row count ≤ |V| — and fires
-    * only when |V| × rowBytes fits the session's autoBroadcastJoinThreshold,
-    * so a billion-vertex deployment degrades to exactly the shuffle join
-    * Catalyst would otherwise pick (scale-adaptive, not a local-mode
-    * constant). rowBytes defaults to a conservative unsafe-row estimate for
-    * the (id, value) frames the iterative algorithms carry. */
-  def vhint(df: DataFrame, rowBytes: Long = 48L): DataFrame = {
-    val thr =
-      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    if (thr > 0 && numVertices * rowBytes <= thr) broadcast(df) else df
-  }
+  /** Whether every edge endpoint is a vertex id, checked once per graph: a
+    * message-passing loop whose state holds every vertex then needs no
+    * receiver join ([[Superstep.propagate]]'s `closed`). */
+  lazy val endpointsAreVertices: Boolean = artifacts("endpointsAreVertices")(
+    edges.select(explode(array(col("src"), col("dst"))).as("id"))
+      .join(vertices.select("id"), Seq("id"), "left_anti").limit(1).count() == 0)
 
   /** Partition count for GraphX RDD views. Pregel pays per-partition
     * scheduling every superstep, so fewer/fatter partitions win at local
@@ -754,10 +743,14 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     *
     * The round cap bounds driver-side looping only — past it the core is
     * merely larger, never wrong (stage 2 handles any residual). Like
-    * [[connectedComponents]] the labeling is a stored analytics artifact
-    * (persisted lazy val): condensation-scoped queries reuse it instead
-    * of re-running the peel. */
-  lazy val stronglyConnectedComponents: DataFrame = graphX("stronglyConnectedComponents") {
+    * [[connectedComponents]] the labeling is a stored analytics artifact:
+    * condensation-scoped queries reuse it instead of re-running the peel.
+    * It is stored as an eager cut, so it reads neither the peel's rounds
+    * nor GraphX's graphs, and the build releases those at once
+    * ([[graft.Artifacts.scratch]]): GraphX's SCC leaves every round's
+    * vertex and edge RDDs cached. */
+  lazy val stronglyConnectedComponents: DataFrame = artifacts("stronglyConnectedComponents")(
+      graft.Artifacts.scratch(graft.Artifacts.graphX(spark.sparkContext) {
     val sp = spark; import sp.implicits._
     var (e, n) = Superstep.counted(
       edges.select("src", "dst").filter(col("src") =!= col("dst")).distinct())
@@ -797,8 +790,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     vertices.select("id").join(coreLbl, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("core_component"), col("id")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
+  })(graft.util.cut(_)))
 
   /** INCREMENTAL connected-components maintenance: treat the edges matching
     * `deltaPred` as a freshly-ingested batch and fold them into the stored
@@ -895,7 +887,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         // checks the fixpoint, not a round count, so this is the
         // strictly-safer form.
         .select(col("id").as("component"), col("lbl").as("mergedc"))
-    lbl.join(broadcast(merged), Seq("component"), "left")
+    // merged carries its real size on both paths (a local relation, or
+    // PairCC's measured cut): the planner broadcasts it with no hint
+    lbl.join(merged, Seq("component"), "left")
       .select(col("id"), coalesce(col("mergedc"), col("component")).as("component"))
   }
 
@@ -1059,7 +1053,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def katz(iters: Int, alpha: Double = 0.25): DataFrame = {
     require(alpha == 0.25, "exactness argument is specific to α=2^-2")
     Superstep.propagate(vertices.select(col("id"), lit(1.0).as("katz")), edges,
-        numVertices, iters, Seq("katz"), unreached = Some(identity)) {
+        numVertices, iters, Seq("katz"), Nil, Some(identity), endpointsAreVertices) {
       _.groupBy(col("dst").as("id"))
         .agg(graft.num.dsum(col("katz") * lit(alpha)).as("s"))
         .select(col("id"), (lit(1.0) + col("s")).as("katz"))
@@ -1227,10 +1221,15 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * returning the survivors with their final-round degree. Round 1 is a
     * filter over the stored [[undDegrees]] index; every later round is a
     * [[Superstep.propagate]] peel ([[kCoreRound]]) over the undirected
-    * edges in both directions, whose survivor set shrinks monotonically. */
+    * edges in both directions, whose survivor set shrinks monotonically.
+    * The last round is cut too (lazily, |V|-bounded): a consumer's
+    * `orderBy` samples its input for the range partitioner and then
+    * shuffles it, and the cut runs the last round's aggregation once for
+    * both. */
   def kCore(k: Int, rounds: Int): DataFrame =
-    Superstep.propagate(undDegrees.select(col("id"), col("d").as("deg"))
-      .filter(col("deg") >= k), undirectedHalves, numVertices, rounds - 1, Nil)(peel(k))
+    graft.util.cut(Superstep.propagate(undDegrees.select(col("id"), col("d").as("deg"))
+      .filter(col("deg") >= k), undirectedHalves, numVertices, rounds - 1, Nil)(peel(k)),
+      eager = false, Some(numVertices))
 
   /** One peel round over the `live` survivors, not cut: each survivor's
     * degree among survivors, kept at ≥ k. Exposed package-private so
@@ -1442,7 +1441,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def labelPropagation(iters: Int): DataFrame = {
     graft.util.cut(Superstep.propagate(vertices.select(col("id"), col("id").as("lp_label")),
         undByA.select(col("b").as("src"), col("a").as("dst")), numVertices, iters,
-        Seq("lp_label"), unreached = Some(identity)) {
+        Seq("lp_label"), unreached = Some(identity), closed = endpointsAreVertices) {
       _.groupBy(col("dst").as("id"), col("lp_label").as("l")).agg(count(lit(1)).as("n"))
         .groupBy("id").agg(max(struct(col("n"), (-col("l")).as("negl"))).as("m"))
         .select(col("id"), (-col("m.negl")).as("lp_label"))

@@ -1,8 +1,8 @@
 package graft.graph
 
 import graft.util.cut
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row}
-import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.StructType
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
@@ -12,19 +12,20 @@ import scala.concurrent.duration.Duration
   * A superstep here is a relational plan over the live set (Pregelix's
   * shape): a loop of such plans, where each round needs (1) the live set
   * materialized with the scalar that decides the next round, (2) a join
-  * strategy for the frames it just measured, (3) a policy at the round
-  * cap, and (4) a way to finish a small remainder in one task. A loop with
-  * a fixed round count needs none of the scalars, only (5) the
-  * message-passing round itself.
+  * strategy for its frames, (3) a policy at the round cap, and (4) a way
+  * to finish a small remainder in one task. A loop with a fixed round
+  * count needs none of the scalars, only (5) the message-passing round
+  * itself.
   *
   *  - [[round]]: an eager [[graft.util.cut]] whose `observe()` reads the
   *    round's statistics inside the materialization job itself — one job
   *    per measured frame, never a cut plus a separate `count()`. The cut
-  *    carries its measured stored size (and [[counted]]'s row count), so
-  *    Catalyst and AQE choose broadcast or shuffle for joins against it
-  *    with no hint.
-  *  - [[small]]: the broadcast bound for a LAZY frame whose row bound
-  *    another round measured (a lazy cut has no stats of its own).
+  *    carries its measured stored size (and [[counted]]'s row count).
+  *  - the join strategy has one rule: no hint. A measured cut carries its
+  *    size, and a LAZY cut carries the tightest row bound the loop already
+  *    measured (`graft.util.cut(df, eager = false, Some(rows))`), so
+  *    Catalyst and AQE broadcast under the session's
+  *    autoBroadcastJoinThreshold and shuffle past it.
   *  - [[cap]]: a loop that outruns its round budget fails loudly with
   *    context instead of returning a partial result.
   *  - [[inOneTask]]: the executor-local tail — one coalesced partition,
@@ -33,9 +34,6 @@ import scala.concurrent.duration.Duration
   *    `state ⋈ edges → combine by receiver`, with the cut, the state joins
   *    and the carry-over of unreached vertices decided in one place. */
 object Superstep {
-
-  /** Measured row bound at or under which [[small]] broadcasts a frame. */
-  private val broadcastRows = 4000000L
 
   /** Materialize `df` (eager, measured cut) and read `stats` — aggregate
     * columns with names, e.g. `count(lit(1)).as("n")` — in the same job.
@@ -57,16 +55,9 @@ object Superstep {
   private def measure(df: DataFrame, stats: Seq[Column], rows: Boolean) = {
     val obs = Observation()
     lazy val row = Await.result(obs.future, Duration.Inf)
-    (GraftBridge.cut(df.observe(obs, stats.head, stats.tail: _*), eager = true,
+    (cut(df.observe(obs, stats.head, stats.tail: _*), eager = true,
       Option.when(rows)(row.getLong(0))), row)
   }
-
-  /** `df` with a broadcast hint when `rows`, a row bound another round
-    * measured, fits the bound; past it, `df` unchanged (the shuffle join is
-    * the right plan there). Only for LAZY frames: an eager cut carries its
-    * measured size, and the planner decides for it. */
-  def small(df: DataFrame, rows: Long): DataFrame =
-    if (rows <= broadcastRows) broadcast(df) else df
 
   /** `iters` fixed-count message-passing rounds from `state`: one row per
     * vertex keyed `id`, never more than `rows` rows (|V|, measured once per
@@ -76,14 +67,20 @@ object Superstep {
     * for every such loop:
     *
     *  - the cut: the state and each round's rows but the last are a LAZY
-    *    cut carrying the bound `rows` (`GraftBridge.cut`), so the plan
+    *    cut carrying the bound `rows` ([[graft.util.cut]]), so the plan
     *    stays one round deep, and the joins against the state plan from the
     *    bound (broadcast under the session threshold, shuffle past it) with
     *    no hint. The last round is returned uncut: the caller's action runs
     *    it;
     *  - the state joins: sender and receiver are kept to the state, each
     *    by one join on the state that brings the columns the round reads
-    *    (`send`, `recv`), or by a semi join where it reads none;
+    *    (`send`, `recv`), or by a semi join where it reads none. With
+    *    `closed` (only with `unreached`, which keeps every id of `state` in
+    *    it: every `dst` of `edges` is such an id) a receiver that brings no column is
+    *    in the state by construction, and a round joins the state once: one
+    *    broadcast of it, not two. (Two ends that read different columns
+    *    never share one broadcast: Catalyst narrows a shared projection of
+    *    the state to the columns each end reads.);
     *  - no join back to the vertex set. With `unreached`, every vertex
     *    stays in the state, so the senders, and with them the vertices no
     *    edge reaches, are the same every round: those are cut once after
@@ -92,12 +89,12 @@ object Superstep {
     *    no edge reaches drops out of the state (a peel). */
   def propagate(state: DataFrame, edges: DataFrame, rows: Long, iters: Int,
       send: Seq[String], recv: Seq[String] = Nil,
-      unreached: Option[DataFrame => DataFrame] = None)(
+      unreached: Option[DataFrame => DataFrame] = None, closed: Boolean = false)(
       combine: DataFrame => DataFrame): DataFrame = {
-    def bounded(df: DataFrame) = GraftBridge.cut(df, eager = false, Some(rows))
+    def bounded(df: DataFrame) = cut(df, eager = false, Some(rows))
     var (s, carry) = (bounded(state), Option.empty[DataFrame])
     for (i <- 1 to iters) {
-      val next = combine(messages(s, edges, send, recv))
+      val next = combine(messages(s, edges, send, recv, closed))
       // round 1 is cut when it fixes the carry; else the last round is not
       val got = if (i < iters || (i == 1 && unreached.nonEmpty)) bounded(next) else next
       carry = carry.orElse(unreached.map(f =>
@@ -110,14 +107,16 @@ object Superstep {
   /** One round's messages, not cut: the `edges` (`src`, `dst`) whose sender
     * and receiver are both in `state`, with the sender's `send` columns and
     * the receiver's `recv` columns as `dst_<c>`. An end that brings no
-    * column is a semi join, which Catalyst can push below a union. */
+    * column is a semi join, which Catalyst can push below a union; with
+    * `closed` (every `dst` is in `state`) a receiver end that brings no
+    * column is not joined at all. */
   def messages(state: DataFrame, edges: DataFrame, send: Seq[String],
-      recv: Seq[String] = Nil): DataFrame = {
+      recv: Seq[String] = Nil, closed: Boolean = false): DataFrame = {
     def end(m: DataFrame, key: String, cols: Seq[Column]) =
       m.join(state.select(col("id").as(key) +: cols: _*), Seq(key),
         if (cols.isEmpty) "left_semi" else "inner")
-    end(end(edges.select("src", "dst"), "src", send.map(col)), "dst",
-      recv.map(c => col(c).as(s"dst_$c")))
+    val sent = end(edges.select("src", "dst"), "src", send.map(col))
+    if (closed && recv.isEmpty) sent else end(sent, "dst", recv.map(c => col(c).as(s"dst_$c")))
   }
 
   /** Fail loop `what` when `round` exceeds `max`, naming the round and the

@@ -81,12 +81,14 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
       else es.select(col(from).as(head), col(to).as(next))
     }.reduce(_ unionAll _)
     val b = bulk.map { bf =>
-      // vhint (r16): the bulk frame is a vertex-bounded cut leaf — without
-      // the size-aware hint every fold level sort-merge-shuffled the EDGE
-      // list against a few-MB frame (the hits half-round disease).
+      // the bulk frame has at most one row per vertex: a lazy cut bounded
+      // by |V| joins the EDGE list by broadcast while |V| rows fit the
+      // session threshold (a plan estimate would read the fold's join as
+      // edge-sized and shuffle the edge list against a few-MB frame)
       val eb = dirs.map { case (from, to) =>
         es.select(col(from).as("h"), col(to).as("h2")) }.reduce(_ unionAll _)
-      eb.join(g.vhint(bf), "h").groupBy("h2").agg(sum("cnt").as("cnt"))
+      eb.join(graft.util.cut(bf, eager = false, Some(g.numVertices)), "h")
+        .groupBy("h2").agg(sum("cnt").as("cnt"))
         .withColumnRenamed("h2", "h")
     }
     Traversal(g, df.drop("_lastw").join(e, head), depth + 1, b, labels, sideSets = sideSets)
@@ -513,7 +515,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
     * Placement: a level joins the vertex attributes only when an until or
     * an emit predicate other than `lit(true)` may read them, and keeps
     * only (h, cnt) and the two rule bits. A level that is both released
-    * and fed forward is a LAZY cut: it is
+    * and fed forward is a LAZY cut bounded by |V|: it is
     * vertex-sized, and without lineage truncation level k's plan nests
     * every earlier level while both readers re-execute the join; lazy
     * because nothing reads a level before the terminal fires, so an eager
@@ -536,10 +538,9 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
       if (i == times) released ::= nxt
       else {
         val level = graft.util.cut(
-          (if (readsVertices)
-            g.vertices.withColumnRenamed("id", "h").join(g.vhint(nxt), "h")
+          (if (readsVertices) g.vertices.withColumnRenamed("id", "h").join(nxt, "h")
           else nxt).select(col("h"), col("cnt"), stop.as("_stop"),
-            (stop || show).as("_out")), eager = false)
+            (stop || show).as("_out")), eager = false, Some(g.numVertices))
         released ::= level.filter(col("_out")).select("h", "cnt")
         active = level.filter(!col("_stop")).select("h", "cnt")
       }

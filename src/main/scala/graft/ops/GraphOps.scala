@@ -471,18 +471,18 @@ object GraphOps extends OpModule {
         // replaces any per-round edge-set materialization (the first cut
         // of this key checkpointed the surviving edges every round: 7
         // edge-sized writes for a vertex-sized answer, 8.9 s at sf0.1).
-        // todo and blocked are vertex-sized and broadcast-hinted; a graph
-        // whose unlayered set outgrows broadcast drops the hints and takes
-        // the shuffle. The survivor set is a LAZY cut; each layer's ready
-        // set is derived as todo \ todo_next, so the final union evaluates
-        // K cheap anti-joins (broadcast-hinted too — both sides are
-        // stats-less checkpoints) without re-materializing any layer.
+        // The survivor set is a LAZY cut bounded by the measured n
+        // unlayered vertices, so joins against it broadcast while n rows fit
+        // the session threshold and shuffle past it, with no hint; each
+        // layer's ready set is derived as todo \ todo_next, so the final
+        // union evaluates K cheap anti-joins without re-materializing any
+        // layer.
         def peel(t: org.apache.spark.sql.DataFrame) = {
-          val blocked = e.join(g.vhint(t.withColumnRenamed("id", "src")),
+          val blocked = e.join(t.withColumnRenamed("id", "src"),
               Seq("src"), "left_semi")
             .select(col("dst").as("id")).distinct()
-          graft.util.cut(
-            t.join(g.vhint(blocked), Seq("id"), "left_semi"), eager = false)
+          graft.util.cut(t.join(blocked, Seq("id"), "left_semi"),
+            eager = false, Some(n))
         }
         while (n > 0) {
           // depth cap (a cycle is caught by the no-progress check below)
@@ -496,10 +496,10 @@ object GraphOps extends OpModule {
           // granularity: once a peel makes no progress it never will
           // (blocked is a function of the surviving set alone).
           val t1 = peel(todo)
-          out = out :+ todo.join(g.vhint(t1), Seq("id"), "left_anti")
+          out = out :+ todo.join(t1, Seq("id"), "left_anti")
             .withColumn("layer", lit(layer))
           val t2 = peel(t1)
-          out = out :+ t1.join(g.vhint(t2), Seq("id"), "left_anti")
+          out = out :+ t1.join(t2, Seq("id"), "left_anti")
             .withColumn("layer", lit(layer + 1))
           val left = t2.count()
           require(left < n, "cycle detected: topo peel made no progress")

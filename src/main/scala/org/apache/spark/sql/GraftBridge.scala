@@ -24,11 +24,12 @@ object GraftBridge {
     * observed it in the same job — a constant per round that never
     * compounds, and that lets Catalyst and AQE choose broadcast or shuffle
     * at the session's threshold. A lazy cut has nothing stored yet: with a
-    * `rowCount` — a row bound the caller knows by construction, e.g. |V|
-    * for a per-vertex state — it carries `rows × the output's per-row size
-    * estimate` (Catalyst's own `getSizePerRow`), so the planner and AQE
-    * broadcast it under the threshold and shuffle past it; without one it
-    * stays stats-less (Catalyst's default size: never broadcast by size).
+    * `rowCount` — a row bound the loop already measured, e.g. |V| for a
+    * per-vertex state or a round's count for a frame drawn from that round
+    * (`graft.util.cut`'s `rows`) — it carries `rows × the output's per-row
+    * size estimate` (Catalyst's own `getSizePerRow`), so the planner and AQE
+    * broadcast it under the same threshold and shuffle past it; without one
+    * it stays stats-less (Catalyst's default size: never broadcast by size).
     * The leaf wraps the checkpointed INTERNAL rows (no external-row
     * round-trip); LogicalRDD is a MultiInstanceRelation, so self-joins of a
     * cut frame deduplicate attribute ids and keep the stats.

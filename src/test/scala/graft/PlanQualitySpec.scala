@@ -253,8 +253,8 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("graph_kcore semi-joins stay on the broadcast path") {
-    // the survivor set is vertex-sized and explicitly hinted — the edge
-    // set must never re-shuffle during peeling. Assert on the REAL round
+    // the survivor set carries its |V| row bound — the edge set must never
+    // re-shuffle during peeling. Assert on the REAL round
     // function kCore's loop uses (kCoreRound), fed a checkpointed survivor
     // set exactly as in the loop.
     val g = graph.GraphFixture(spark, TestSpark.sf)
@@ -561,6 +561,30 @@ class PlanQualitySpec extends AnyFunSuite {
       .flatMap { case (_, qe) => Probe.opsOf(qe.executedPlan) }
     assert(ops.count(_ == "bhj") >= 3, ops)
     assert(!ops.contains("smj"), ops)
+  }
+
+  test("each lp_label round builds one broadcast of the label state") {
+    // every edge endpoint of the fixture is a vertex, so a round's receivers
+    // are in the state by construction: the state is joined (and broadcast)
+    // once per round, on the sender end, not a second time for the receiver
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    def broadcasts(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => broadcasts(a.executedPlan)
+      case q: QueryStageExec => broadcasts(q.plan)
+      case _: ReusedExchangeExec => 0
+      case b: BroadcastExchangeExec => 1 + broadcasts(b.child)
+      case _ => (p.children ++ p.subqueries).map(broadcasts).sum
+    }
+    val g = graph.GraphFixture(spark, TestSpark.sf)
+    assert(g.endpointsAreVertices)
+    val rounds = CutStatsSpec.executions(spark) { g.labelPropagation(3).count() }
+      .collect { case ("localCheckpoint", qe)
+          if qe.analyzed.output.map(_.name) == Seq("id", "lp_label") =>
+        broadcasts(qe.executedPlan) }
+    // three rounds plus the carry of the vertices no edge reaches
+    assert(rounds.count(_ == 1) >= 4 && rounds.forall(_ <= 1), rounds)
   }
 
   test("katz's analyzed plan does not grow with iters") {

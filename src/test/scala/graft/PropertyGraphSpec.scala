@@ -1447,6 +1447,21 @@ class PropertyGraphSpec extends AnyFunSuite {
     assert(left.isEmpty, s"uncache left caches pinned: ${left.mkString("; ")}")
   }
 
+  test("the SCC build leaves only the stored labeling's RDD persisted") {
+    // GraphX's SCC keeps every round's vertex and edge RDDs cached and the
+    // trim peel's rounds are cuts: the build stores the labeling as an
+    // eager cut and releases the rest, so one RDD is new after it
+    val view = GraphFixture.sccView(spark, TestSpark.sf)
+    view.vertices.count(); view.edges.count()
+    val sub = graph.PropertyGraph(view.vertices, view.edges)
+    val before = persisted.keySet
+    assert(sub.stronglyConnectedComponents.count() > 0)
+    val made = persisted.filter { case (id, _) => !before(id) }
+    assert(made.size == 1, made.values.mkString("; "))
+    sub.uncache()
+    assert(persisted.keySet.forall(before), "uncache left the labeling persisted")
+  }
+
   test("iterative analytics do not accumulate pinned caches across runs") {
     // Round-1 regression: triangle/labelprop scratch persists were never
     // unpersisted, so every invocation grew the CacheManager. Now scratch

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graph.Superstep's loop decisions: a measured round is one job and
-  * reads what separate actions would, the broadcast bound sits exactly at
-  * 4M rows, a fixed-count propagation plans its state joins from its row
-  * bound, and the round cap fails loudly with context. */
+  * reads what separate actions would, the loops' lazy frames join by their
+  * row bounds at the session threshold with no hint, a fixed-count
+  * propagation plans its state joins from its row bound, and the round cap
+  * fails loudly with context. */
 class SuperstepSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import graph.Superstep
@@ -47,14 +48,25 @@ class SuperstepSpec extends AnyFunSuite {
     assert(empty.getLong(0) == 0L && empty.isNullAt(1))
   }
 
-  test("small: broadcast hint at 4000000 rows, none at 4000001") {
-    val df = spark.range(10).toDF("id")
-    def hinted(rows: Long): Boolean =
-      Superstep.small(df, rows).queryExecution.analyzed.collectFirst {
-        case h: ResolvedHint if h.hints.strategy.nonEmpty => h
-      }.nonEmpty
-    assert(hinted(4000000L))
-    assert(!hinted(4000001L))
+  test("no hint on the bounded loop frames: with no broadcast by size every join shuffles, same rows") {
+    // the loops' lazy frames carry row bounds, not hints: with the session
+    // threshold at -1 nothing may broadcast (a BroadcastHashJoin left
+    // would be a hint), and every key still returns what it returns at the
+    // default threshold
+    val keys = Seq("graph_topo_layers", "graph_mst", "graph_matching",
+      "graph_traversal_until")
+    def rows(k: String) = SparkEntry.queries(k)(spark, TestSpark.sf).collect().toSeq
+    val want = keys.map(k => k -> rows(k)).toMap
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try keys.foreach { k =>
+      var got = Seq.empty[org.apache.spark.sql.Row]
+      val ops = CutStatsSpec.executions(spark) { got = rows(k) }
+        .flatMap { case (_, qe) => Probe.opsOf(qe.executedPlan) }
+      assert(got == want(k), k)
+      assert(ops.contains("smj") && !ops.contains("bhj"), s"$k: $ops")
+    } finally spark.conf.set(key, old)
   }
 
   test("propagate: the state join broadcasts from the cut's row bound with no hint, and shuffles past the threshold") {
