@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /** Gremlin-style traversal-chain front end — the query language the
@@ -81,13 +82,17 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
       else es.select(col(from).as(head), col(to).as(next))
     }.reduce(_ unionAll _)
     val b = bulk.map { bf =>
-      // the bulk frame has at most one row per vertex: a lazy cut bounded
-      // by |V| joins the EDGE list by broadcast while |V| rows fit the
-      // session threshold (a plan estimate would read the fold's join as
-      // edge-sized and shuffle the edge list against a few-MB frame)
+      // the bulk frame has at most one row per vertex, and the fold joins
+      // the EDGE list against it by broadcast while |V| rows fit the
+      // session threshold. A frame the planner already sizes within |V|
+      // rows (V()'s start, a filter of repeatLoop's bounded level) joins as
+      // it is; one it sizes larger (a previous step's fold, estimated
+      // edge-sized) is cut lazily with the |V| bound
+      val plan = bf.queryExecution.optimizedPlan
+      val sized = plan.stats.sizeInBytes <= EstimationUtils.getSizePerRow(plan.output) * g.numVertices
       val eb = dirs.map { case (from, to) =>
         es.select(col(from).as("h"), col(to).as("h2")) }.reduce(_ unionAll _)
-      eb.join(graft.util.cut(bf, eager = false, Some(g.numVertices)), "h")
+      eb.join(if (sized) bf else graft.util.cut(bf, eager = false, Some(g.numVertices)), "h")
         .groupBy("h2").agg(sum("cnt").as("cnt"))
         .withColumnRenamed("h2", "h")
     }
@@ -515,7 +520,8 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
     * Placement: a level joins the vertex attributes only when an until or
     * an emit predicate other than `lit(true)` may read them, and keeps
     * only (h, cnt) and the two rule bits. A level that is both released
-    * and fed forward is a LAZY cut bounded by |V|: it is
+    * and fed forward is a LAZY cut bounded by |V| (so the body's first
+    * step joins its filter as it is, with no second cut): it is
     * vertex-sized, and without lineage truncation level k's plan nests
     * every earlier level while both readers re-execute the join; lazy
     * because nothing reads a level before the terminal fires, so an eager
@@ -529,7 +535,7 @@ final case class Traversal(g: PropertyGraph, df: DataFrame, depth: Int,
       p.fold(lit(false))(org.apache.spark.sql.functions.coalesce(_, lit(false)))
     val (stop, show) = (orFalse(until), orFalse(emit))
     val readsVertices = until.isDefined || emit.exists(_ != lit(true))
-    val start = if (preEmit) graft.util.cut(headFrame, eager = false) else headFrame
+    val start = if (preEmit) graft.util.cut(headFrame, eager = false, Some(g.numVertices)) else headFrame
     var active = start
     var released = if (preEmit) List(start) else Nil
     for (i <- 1 to times) {

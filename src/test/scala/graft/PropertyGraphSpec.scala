@@ -1375,6 +1375,29 @@ class PropertyGraphSpec extends AnyFunSuite {
     }
   }
 
+  test("katz and label propagation drop an edge endpoint that is not a vertex") {
+    // the fixture's edges all end at vertices, so its loops skip the
+    // receiver join; here 99 is no vertex, and the edges that reach it or
+    // leave it must carry no message and add no state row
+    import spark.implicits._
+    def pg(edges: Seq[(Long, Long)]) = graft.graph.PropertyGraph(
+      (1L to 6L).toDF("id").select(col("id"), lit("v").as("label"),
+        lit("n").as("name"), lit("public").as("vis"),
+        lit(null).cast("double").as("val")),
+      edges.toDF("src", "dst").select(col("src"), col("dst"),
+        lit("e").as("label"), lit(1.0).as("weight"), lit("public").as("vis")))
+    val kept = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 5L -> 4L)
+    val clean = pg(kept)
+    val dangling = pg(kept ++ Seq(4L -> 99L, 99L -> 5L, 99L -> 6L))
+    assert(clean.endpointsAreVertices && !dangling.endpointsAreVertices)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").collect().map(r => r.getLong(0) -> r.get(1)).toSeq
+    assert(rows(dangling.katz(3)) == rows(clean.katz(3)))
+    assert(rows(dangling.labelPropagation(3)) == rows(clean.labelPropagation(3)))
+    assert(rows(dangling.katz(3)).map(_._1) == (1L to 6L))
+    clean.uncache(); dangling.uncache()
+  }
+
   test("point traversals cut over to the distributed form on a hub vertex") {
     // Synthetic hub: vertex 1 fans out to 60 spokes (plus one in-edge), so
     // the level-1 frontier blows any small cap — exactly the power-law-hub
