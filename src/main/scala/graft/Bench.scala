@@ -37,7 +37,7 @@ object Bench {
     * ingest to the first consumer key. */
   def warmup(spark: SparkSession, sfDir: String,
       entries: Seq[Artifacts.Ingest] = Artifacts.ingest): Seq[(String, Double)] = {
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    util.parquet(spark, s"$sfDir/region.parquet").count()
     entries.flatMap { e =>
       try Some(e.name -> Artifacts.timed(e.name)(e.build(spark, sfDir)))
       catch { case scala.util.control.NonFatal(x) =>

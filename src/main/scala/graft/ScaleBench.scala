@@ -210,7 +210,7 @@ object ScaleBench {
       val big = xform(
         (0 until k).map(replica(b, t, _)).reduce(_ unionByName _), t)
       big.write.mode("overwrite").parquet(s"$out/$t.parquet")
-      val (nb, ns) = (b.count(), spark.read.parquet(s"$out/$t.parquet").count())
+      val (nb, ns) = (b.count(), util.parquet(spark, s"$out/$t.parquet").count())
       require(ns == k * nb, s"$t: scaled rows $ns != $k x $nb")
     }
     (System.nanoTime() - t0) / 1e9
@@ -244,8 +244,8 @@ object ScaleBench {
       // downstream stage wants the join's partitioning unless forced
       conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      val o = spark.read.parquet(s"$dir/orders.parquet")
-      val c = spark.read.parquet(s"$dir/customer.parquet")
+      val o = util.parquet(spark, s"$dir/orders.parquet")
+      val c = util.parquet(spark, s"$dir/customer.parquet")
       // Two probe-shape lessons baked in: (a) carry PAYLOAD columns — a
       // hot partition holding 18k copies of one pruned join key
       // lz4-compresses to almost nothing, and AQE's skew detection reads

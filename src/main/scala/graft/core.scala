@@ -21,10 +21,13 @@ final case class Op(
 trait OpModule { def ops: Seq[Op] }
 
 /** Loaders for the driver-generated parquet fixtures (TESTDATA.md).
-  * Memoized per (session, dir, table): `spark.read.parquet` pays driver-side
-  * file listing + footer schema inference on EVERY call, and the operator
+  * Memoized per (session, dir, table): a read pays a driver-side file
+  * listing and a footer schema read on EVERY call, and the operator
   * registry calls these loaders hundreds of times per harness run — reusing
-  * the (immutable) DataFrame eliminates that fixed cost suite-wide. */
+  * the (immutable) DataFrame eliminates that fixed cost suite-wide. The
+  * read is [[util.parquet]]: `spark.read.parquet` would infer each schema
+  * in a Spark job, ten jobs per session set-up; the footer read on the
+  * driver runs none. */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
@@ -40,7 +43,7 @@ object Tables {
       // does natively, so the oracle sees identical values). Adapt to the
       // file's actual physical type instead of assuming one vintage.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = util.parquet(spark, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -52,7 +55,7 @@ object Tables {
             col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else util.parquet(spark, s"$dir/$name.parquet")
 }
 
 /** Shared derived relations, materialized once per (session, dir, name) as
@@ -198,6 +201,37 @@ object util {
   def empty(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       StructType.fromDDL(ddl))
+
+  /** Batch read of one Parquet file, or of a directory one batch write
+    * filled (no partition subdirectories): `spark.read.parquet(path)` with
+    * the schema read from a footer on the driver.
+    *
+    * `spark.read.parquet` infers the schema inside a Spark job, even when
+    * it reads the one footer of a single file; registering the ten fixture
+    * tables cost ten jobs and most of the session set-up. Here the footer
+    * Spark's non-merging inference would pick is read in this thread and
+    * converted by Spark's own code
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquet]]),
+    * so the frame, its schema (nullability, the stored Spark row schema of
+    * a Spark-written file, the `nanosAsLong` reading of NANOS timestamps)
+    * and its plan are what `spark.read.parquet` gives, and it fails with
+    * the same error on a path with no data file.
+    *
+    * Used by the fixture tables and their `ts` vintage checks
+    * (`Tables.load`, `Streams.readEvents`), the fixture graph's staged
+    * read-back, `Bench.warmup`'s region read, ScaleBench's reads, PairCC's
+    * reliable checkpoint, and the batch read-backs of sink_compact,
+    * sink_upsert, sink_sorted_stats and stream_drift_maintain's stage.
+    * Reads that keep Spark's inference, on purpose: a partitioned
+    * directory (sink_parquet, sink_partitioned, graph_export), whose
+    * partition columns come from the path listing; the `mergeSchema` read
+    * (scan_merge_schema), which must see every file's footer; and the
+    * streaming sink's directory (stream_graph_ingest), whose files are the
+    * ones its `_spark_metadata` log names, not the ones a listing finds. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(
+      org.apache.spark.sql.execution.datasources.parquet.GraftParquet.schema(spark, path))
+      .parquet(path)
 
   /** Lineage cut: the one way this codebase checkpoints a frame (loop
     * rounds, stored artifacts, checkpointed views).

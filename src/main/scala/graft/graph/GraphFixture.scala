@@ -127,7 +127,7 @@ object GraphFixture {
     val stage = graft.Staging.fresh("graph")
     def stored(df: DataFrame, name: String): DataFrame = {
       df.write.parquet(s"$stage/$name")
-      s.read.parquet(s"$stage/$name").persist()
+      graft.util.parquet(s, s"$stage/$name").persist()
     }
     (PropertyGraph(stored(vertices, "vertices"), stored(edges, "edges")), stage)
   }

@@ -59,7 +59,7 @@ object PairCC {
       if (reliable) {
         val p = graft.Staging.fresh("paircc-ckpt")
         df.write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
+        graft.util.parquet(s, p)
       } else graft.util.cut(df, eager)
     // Pairs once (eager checkpoint: the iteration loop below would
     // otherwise re-plan the whole upstream pipeline per reference).

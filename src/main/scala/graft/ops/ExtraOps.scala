@@ -180,10 +180,10 @@ object ExtraOps extends OpModule {
         val small = s"$base/small"
         val compact = s"$base/compact"
         Tables(s, dir, "events").repartition(64).write.mode("overwrite").parquet(small)
-        s.read.parquet(small).repartition(4).write.mode("overwrite").parquet(compact)
+        graft.util.parquet(s, small).repartition(4).write.mode("overwrite").parquet(compact)
         def nFiles(p: String): Long =
           Option(new java.io.File(p).listFiles).map(_.count(_.getName.endsWith(".parquet")).toLong).getOrElse(0L)
-        s.read.parquet(compact)
+        graft.util.parquet(s, compact)
           .agg(count(lit(1)).as("n_rows"), num.dsum(col("value")).as("sum_value"))
           .withColumn("n_files_small", lit(nFiles(small)))
           .withColumn("n_files_compact", lit(nFiles(compact)))
@@ -637,7 +637,7 @@ object ExtraOps extends OpModule {
               ORDER BY ts DESC, event_id DESC) AS rn
           FROM events WHERE event_id % 2 = 0) WHERE rn = 1""")
           .drop("rn").write.mode("overwrite").parquet(s"$base/snapshot")
-        s.read.parquet(s"$base/snapshot")
+        graft.util.parquet(s, s"$base/snapshot")
           .createOrReplaceTempView("upsert_snapshot")
         s.sql("""WITH merged AS (
             SELECT event_id, ts, user_id, event_type, value FROM upsert_snapshot
@@ -1028,7 +1028,7 @@ object ExtraOps extends OpModule {
         val files = new java.io.File(base).listFiles()
           .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
         val ranges = files.map { f =>
-          val r = s.read.parquet(f)
+          val r = graft.util.parquet(s, f)
             .agg(min("o_totalprice"), max("o_totalprice")).head
           (r.getDouble(0), r.getDouble(1))
         }
@@ -1036,7 +1036,7 @@ object ExtraOps extends OpModule {
           case Array((lo1, hi1), (lo2, hi2)) => hi1 >= lo2 && hi2 >= lo1
           case _ => false
         }
-        s.read.parquet(base)
+        graft.util.parquet(s, base)
           .agg(count(lit(1)).as("n_rows"), num.dsum(col("o_totalprice")).as("sum_price"))
           .withColumn("n_files", lit(files.length.toLong))
           .withColumn("n_overlapping_pairs", lit(overlaps.toLong))

@@ -219,7 +219,7 @@ object QualityOps extends OpModule {
           view(s, dir, "events")
           s.sql("SELECT event_id, event_type, value FROM events")
         }
-        val mm = s.read.parquet(stage)
+        val mm = graft.util.parquet(s, stage)
           .agg(min("value").as("mn"), max("value").as("mx")).head
         val (mn, mx) = (mm.getDouble(0), mm.getDouble(1))
         var counts = graft.util.empty(s,

@@ -396,18 +396,28 @@ object StatsOps extends OpModule {
         }
         sk.createOrReplaceTempView("hll_state")
         pairs.createOrReplaceTempView("hll_pairs")
+        // Per group, the two states meet in one aggregate over their
+        // union, not in a join: a hash join on event_type built a 64 MB
+        // BytesToBytesMap page per run for five rows. A group's exact
+        // count is its pair rows (the state rows carry no user_id), its
+        // estimate the union of its one sketch row. The global row keeps
+        // its two one-row aggregates apart: a DISTINCT next to
+        // hll_union_agg in one aggregate plans an Expand whose extra
+        // generated classes cost more than the join did.
         s.sql("""
-          WITH ex AS (SELECT event_type, COUNT(*) AS exact_n
-            FROM hll_pairs GROUP BY 1),
-          per AS (SELECT g.event_type, ex.exact_n,
-            (hll_sketch_estimate(g.sk) >= CAST(0.95 * ex.exact_n AS BIGINT)
-             AND hll_sketch_estimate(g.sk) <= CAST(1.05 * ex.exact_n AS BIGINT))
-              AS est_ok
-            FROM hll_state g JOIN ex ON ex.event_type = g.event_type),
+          WITH u AS (SELECT event_type, sk, CAST(NULL AS BIGINT) AS user_id
+              FROM hll_state
+            UNION ALL
+            SELECT event_type, CAST(NULL AS BINARY), user_id FROM hll_pairs),
+          per AS (SELECT event_type, COUNT(user_id) AS exact_n,
+            hll_sketch_estimate(hll_union_agg(sk)) AS est FROM u GROUP BY 1),
           tot AS (SELECT COUNT(DISTINCT user_id) AS exact_n FROM hll_pairs),
           m AS (SELECT hll_sketch_estimate(hll_union_agg(sk)) AS est
             FROM hll_state)
-          SELECT event_type, exact_n, est_ok FROM per
+          SELECT event_type, exact_n,
+            (est >= CAST(0.95 * exact_n AS BIGINT)
+             AND est <= CAST(1.05 * exact_n AS BIGINT)) AS est_ok
+          FROM per
           UNION ALL
           SELECT 'ALL', tot.exact_n,
             (m.est >= CAST(0.95 * tot.exact_n AS BIGINT)

@@ -50,7 +50,7 @@ object Streams {
     // instead of a full batch read on every stream construction
     val tsIsLong = graft.Artifacts.tsVintage(spark, dir) {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(dir).schema("ts").dataType == LongType
+      graft.util.parquet(spark, dir).schema("ts").dataType == LongType
     }
     if (tsIsLong)
       spark.readStream.schema(eventsSchema).parquet(dir)
